@@ -137,10 +137,9 @@ object IncrementalCoverage {
     val name = tableName(spark, spanIndexDir)
     val path = new org.apache.hadoop.fs.Path(qdir)
     val fs = fsOf(spark, path)
-    recoverSwap(fs, path)
+    Layout.recoverSwapDir(fs, path)
     if (!fs.exists(path)) return
     indexTable(spark, spanIndexDir, indexBuckets)
-    val tmpDir = qdir + "__compact"
     val tmpName = name + "_tmp"
     spark.sql(s"DROP TABLE IF EXISTS $tmpName")
     // force the BUCKETED scan (one partition per bucket, all its files)
@@ -151,59 +150,20 @@ object IncrementalCoverage {
     // scan, leaving task × bucket file cross-products
     val prevAuto = spark.conf
       .get("spark.sql.sources.bucketing.autoBucketedScan.enabled", "true")
-    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    try spark.table(name)
-      .write.mode(SaveMode.Overwrite).format("parquet")
-      .bucketBy(indexBuckets, "fp").sortBy("fp")
-      .option("path", tmpDir).saveAsTable(tmpName)
-    finally spark.conf.set(
-      "spark.sql.sources.bucketing.autoBucketedScan.enabled", prevAuto)
     // swap: drop metadata (external tables keep their files), move the
     // compacted layout into place crash-consistently, re-register
-    spark.sql(s"DROP TABLE IF EXISTS $name")
-    spark.sql(s"DROP TABLE IF EXISTS $tmpName")
-    safeSwap(fs, path, new org.apache.hadoop.fs.Path(tmpDir))
-    indexTable(spark, spanIndexDir, indexBuckets)
-  }
-
-  /** Replace `live` with `shadow` without any no-store window: rename
-    * the live dir ASIDE (`__old`), rename the shadow into place, then
-    * delete the old dir. A crash between any two steps leaves either
-    * the old store (recoverable by [[recoverSwap]]) or the new store on
-    * disk — never nothing. (The previous delete-then-rename ordering
-    * stranded the data in the shadow dir if the process died between
-    * the delete and the rename.)
-    */
-  private[graft] def safeSwap(fs: org.apache.hadoop.fs.FileSystem,
-                       live: org.apache.hadoop.fs.Path,
-                       shadow: org.apache.hadoop.fs.Path): Unit = {
-    // Hadoop FileSystem.rename signals failure by returning FALSE, not by
-    // throwing — an unchecked rename here could fall through to the final
-    // delete and remove the only registered copy of the store. Any failed
-    // step aborts with `old` left in place, which recoverSwap can heal.
-    def mustRename(src: org.apache.hadoop.fs.Path,
-                   dst: org.apache.hadoop.fs.Path): Unit =
-      if (!fs.rename(src, dst))
-        throw new java.io.IOException(s"safeSwap: rename $src -> $dst failed")
-    val old = new org.apache.hadoop.fs.Path(live.toString + "__old")
-    if (fs.exists(old) && !fs.delete(old, true))
-      throw new java.io.IOException(s"safeSwap: could not clear stale $old")
-    if (fs.exists(live)) mustRename(live, old)
-    mustRename(shadow, live)
-    fs.delete(old, true) // best-effort: a lost cleanup is healed by recoverSwap
-  }
-
-  /** Heal an interrupted [[safeSwap]]: live missing + `__old` present ⇒
-    * the crash hit between the two renames — put the old store back;
-    * both present ⇒ only the final cleanup was lost — finish it.
-    */
-  private[graft] def recoverSwap(fs: org.apache.hadoop.fs.FileSystem,
-                          live: org.apache.hadoop.fs.Path): Unit = {
-    val old = new org.apache.hadoop.fs.Path(live.toString + "__old")
-    if (fs.exists(old)) {
-      if (!fs.exists(live)) fs.rename(old, live)
-      else fs.delete(old, true)
+    Layout.swapDir(fs, path) { tmpDir =>
+      spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
+      try spark.table(name)
+        .write.mode(SaveMode.Overwrite).format("parquet")
+        .bucketBy(indexBuckets, "fp").sortBy("fp")
+        .option("path", tmpDir.toString).saveAsTable(tmpName)
+      finally spark.conf.set(
+        "spark.sql.sources.bucketing.autoBucketedScan.enabled", prevAuto)
+      spark.sql(s"DROP TABLE IF EXISTS $name")
+      spark.sql(s"DROP TABLE IF EXISTS $tmpName")
     }
+    indexTable(spark, spanIndexDir, indexBuckets)
   }
 
   /** The store's registered table (creates it on first use; idempotent,
@@ -223,7 +183,7 @@ object IncrementalCoverage {
     if (!spark.catalog.tableExists(name)) {
       val path = new org.apache.hadoop.fs.Path(qdir)
       val fs = fsOf(spark, path)
-      recoverSwap(fs, path)
+      Layout.recoverSwapDir(fs, path)
       if (fs.exists(path) && hasLegacyFiles(fs, path))
         migrateLegacy(spark, qdir, name, buckets)
       spark.sql(s"CREATE TABLE IF NOT EXISTS $name (fp STRING) " +
@@ -246,25 +206,23 @@ object IncrementalCoverage {
 
   /** One-time rewrite of a legacy (plain-parquet) fingerprint store
     * into the bucketed layout, through the same crash-consistent
-    * shadow-swap as [[maintainIndex]]. Read as plain parquet (no table
+    * [[Layout.swapDir]] as [[maintainIndex]]. Read as plain parquet (no table
     * spec is attached yet, so no 'Invalid bucket file' risk), written
     * bucketed; [[maintainIndex]] later bin-packs the task × bucket
     * files if needed.
     */
   private def migrateLegacy(spark: SparkSession, qdir: String,
                             name: String, buckets: Int): Unit = {
-    val tmpDir = qdir + "__compact"
     val tmpName = name + "_tmp"
     spark.sql(s"DROP TABLE IF EXISTS $tmpName")
     val path = new org.apache.hadoop.fs.Path(qdir)
-    val fs = fsOf(spark, path)
-    fs.delete(new org.apache.hadoop.fs.Path(tmpDir), true)
-    spark.read.parquet(qdir).select(col("fp").cast("string").as("fp"))
-      .write.mode(SaveMode.Overwrite).format("parquet")
-      .bucketBy(buckets, "fp").sortBy("fp")
-      .option("path", tmpDir).saveAsTable(tmpName)
-    spark.sql(s"DROP TABLE IF EXISTS $tmpName")
-    safeSwap(fs, path, new org.apache.hadoop.fs.Path(tmpDir))
+    Layout.swapDir(fsOf(spark, path), path) { tmpDir =>
+      spark.read.parquet(qdir).select(col("fp").cast("string").as("fp"))
+        .write.mode(SaveMode.Overwrite).format("parquet")
+        .bucketBy(buckets, "fp").sortBy("fp")
+        .option("path", tmpDir.toString).saveAsTable(tmpName)
+      spark.sql(s"DROP TABLE IF EXISTS $tmpName")
+    }
   }
 
   private def fsOf(spark: SparkSession, p: org.apache.hadoop.fs.Path) =

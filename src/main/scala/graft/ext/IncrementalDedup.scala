@@ -573,7 +573,7 @@ object IncrementalDedup {
     val spark = batch.sparkSession
     // a crashed refund swap may have left the counts tree one rename
     // short — finish it before the prior-count probe lists the tree
-    recoverSwaps(spark, s"$root/domain_counts")
+    recoverLadderEntry(spark, root)
     val w = org.apache.spark.sql.expressions.Window
     val base = Materialize.multiScan(batch)
     val host = hostOf(col(urlCol))
@@ -761,11 +761,12 @@ object IncrementalDedup {
       if (live.nonEmpty) {
         val cur = spark.read.parquet(
           s"$root/$DocShinglesSubtree/batch=-1")
-        swapPartition(spark, s"$root/$DocShinglesSubtree", -1L,
+        Layout.swapDir(spark, s"$root/$DocShinglesSubtree/batch=-1")(
           cur.join(live.reduce(_ unionByName _).distinct(), Seq("id"),
               "left_semi")
             .repartitionByRange(col("id"))
-            .sortWithinPartitions(col("id")))
+            .sortWithinPartitions(col("id"))
+            .write.mode(SaveMode.Overwrite).parquet(_))
       }
     }
     // existence + sizing via the column-pruned meta read — presence-
@@ -1213,11 +1214,12 @@ object IncrementalDedup {
     * so no partition is rewritten (all counts 0).
     *
     * PARTITION SWAPS, not in-place Overwrites: each touched partition
-    * is rewritten to a `.apply-tmp-batch=N` sibling (complete before
-    * anything is removed), then swapped in via delete+rename; an
-    * interruption leaves either the original partition (tmp discarded
-    * and recomputed on replay) or the completed tmp with the partition
-    * gone (finished by the recovery sweep at the next entry). This is
+    * is rewritten through [[Layout.swapDir]] — a `.apply-tmp-batch=N`
+    * sibling complete before anything is removed, the partition renamed
+    * aside, the tmp renamed in; the recovery sweep at the next entry
+    * ([[recoverLadderEntry]]) leaves every interrupted partition with
+    * its full original content (the replay recomputes the rewrite) or
+    * its full rewritten content. This is
     * the [[Layout.foldBatchPartitions]] discipline — a plain Overwrite
     * would hold the only copy of the partition's NON-delta rows in
     * limbo mid-write. Per-partition rewrite jobs stay bounded because
@@ -1282,8 +1284,6 @@ object IncrementalDedup {
                      refundQuota: Option[QuotaRefund] = None): Map[String, Long] = {
     require(committedBelow >= 0, s"committedBelow must be >= 0")
     recoverLadderEntry(spark, root)
-    Seq("verdicts", "corpus", "domain_counts")
-      .foreach(sub => recoverSwaps(spark, s"$root/$sub"))
     // SNAPSHOT the delta to a durable sibling before any swap: the
     // incoming relation's plan reads the very postings files the apply
     // is about to rewrite, so evaluating it lazily mid-apply (or after
@@ -1293,28 +1293,11 @@ object IncrementalDedup {
     // caller-persisted delta — a lazy handle from before the crash is
     // dead by construction.
     val deltaDir = s"$root/.apply-delta"
-    val deltaTmp = s"$root/.apply-delta-tmp"
-    val fsRoot = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // entry recovery for an interrupted snapshot swap (refund path): a
-    // stale tmp beside a live snapshot is discarded; a tmp whose final
-    // dir is gone is promoted ONLY when it carries the swap's own
-    // commit witness ([[SwapCommitMarker]], written after the parquet
-    // job returns) — the first-ever refund apply has no snapshot dir,
-    // so a crash MID-tmp-write would otherwise rename a half-written
-    // snapshot into place and feed a partial refund merge forever. A
-    // witness-less tmp is discarded: the replayed apply re-derives the
-    // delta and rebuilds the snapshot from scratch.
-    val tmpPath = new org.apache.hadoop.fs.Path(deltaTmp)
-    if (fsRoot.exists(tmpPath)) {
-      val dirPath = new org.apache.hadoop.fs.Path(deltaDir)
-      if (fsRoot.exists(dirPath)) fsRoot.delete(tmpPath, true)
-      else if (fsRoot.exists(new org.apache.hadoop.fs.Path(tmpPath,
-          SwapCommitMarker)))
-        require(fsRoot.rename(tmpPath, dirPath),
-          s"snapshot recovery rename $deltaTmp failed")
-      else fsRoot.delete(tmpPath, true)
-    }
+    // an interrupted snapshot swap is healed first: a half-written
+    // first-ever snapshot (refund path) carries no commit witness and
+    // is discarded, so a partial refund merge can never be promoted —
+    // the replayed apply re-derives the delta and rebuilds it
+    Layout.recoverSwapDir(spark, deltaDir)
     // dedupe by ID, not by (id, dropped_at): the API accepts arbitrary
     // caller-persisted deltas, and a delta carrying one id under two
     // tags would otherwise keep both rows — the verdict rewrite's left
@@ -1324,9 +1307,8 @@ object IncrementalDedup {
     // single-tag, where this is the plain distinct.
     val deduped = delta.groupBy(col("id"))
       .agg(min(col("dropped_at")).as("dropped_at"))
-    refundQuota match {
-      case None =>
-        deduped.write.mode(SaveMode.Overwrite).parquet(deltaDir)
+    val snapshot = refundQuota match {
+      case None => deduped
       case Some(q) =>
         // resolve each delta doc's registered domain NOW, while its
         // corpus row (hence url) still exists — the refund's input must
@@ -1371,23 +1353,16 @@ object IncrementalDedup {
                 .select(col("id"), col("dropped_at"), col("reg_domain")))
             else None
           }
-        val merged = prev.fold(resolved)(pv =>
+        prev.fold(resolved)(pv =>
           resolved.unionByName(pv).groupBy(col("id"))
             .agg(min(col("dropped_at")).as("dropped_at"),
               max(col("reg_domain")).as("reg_domain")))
-        // tmp-write + swap: the merge READS the current snapshot dir,
-        // so an in-place Overwrite would consume its own input. The
-        // commit witness lands after the parquet job returns — the
-        // entry recovery above promotes witness-bearing tmps only.
-        merged.withColumn("__wm", lit(committedBelow))
-          .write.mode(SaveMode.Overwrite).parquet(deltaTmp)
-        fsRoot.create(new org.apache.hadoop.fs.Path(tmpPath,
-          SwapCommitMarker), true).close()
-        fsRoot.delete(new org.apache.hadoop.fs.Path(deltaDir), true)
-        require(fsRoot.rename(tmpPath,
-          new org.apache.hadoop.fs.Path(deltaDir)),
-          s"snapshot rename $deltaTmp -> $deltaDir failed")
+          .withColumn("__wm", lit(committedBelow))
     }
+    // swapped, not overwritten in place: the refund merge READS the
+    // current snapshot dir, so an Overwrite would consume its own input
+    Layout.swapDir(spark, deltaDir)(
+      snapshot.write.mode(SaveMode.Overwrite).parquet(_))
     if (!Layout.hasParquetData(spark, deltaDir)) {
       // an empty delta is trivially applied in full: the state is
       // already converged at this watermark
@@ -1426,7 +1401,8 @@ object IncrementalDedup {
             Seq("id"), "left")
           .select(col("id"), coalesce(col("dropped_at"), col("__tag"))
             .as("dropped_at"))
-        swapPartition(spark, vDir, b, upd)
+        Layout.swapDir(spark, s"$vDir/batch=$b")(
+          upd.write.mode(SaveMode.Overwrite).parquet(_))
         nVerdicts += n
       }
     }
@@ -1437,9 +1413,10 @@ object IncrementalDedup {
       val hits = hitParts(cDir, spark.read.parquet(cDir), idCol)
       hits.foreach { case (b, n) =>
         val cur = spark.read.parquet(s"$cDir/batch=$b")
-        swapPartition(spark, cDir, b, cur.join(
+        Layout.swapDir(spark, s"$cDir/batch=$b")(cur.join(
           ids.select(col("id").as("__rid")),
-          cur(idCol) === col("__rid"), "left_anti"))
+          cur(idCol) === col("__rid"), "left_anti")
+          .write.mode(SaveMode.Overwrite).parquet(_))
         nCorpus += n
       }
     }
@@ -1456,9 +1433,10 @@ object IncrementalDedup {
         val doms = idsAll.filter(col("reg_domain").isNotNull)
         nRefund = doms.count()
         if (nRefund > 0)
-          swapPartition(spark, qDir, -(committedBelow + 2L),
+          Layout.swapDir(spark, s"$qDir/batch=${-(committedBelow + 2L)}")(
             doms.groupBy(col("reg_domain"))
-              .agg((-count(lit(1))).as("n")))
+              .agg((-count(lit(1))).as("n"))
+              .write.mode(SaveMode.Overwrite).parquet(_))
       }
     }
     // 4. postings: move delta docs' rows to the evidence subtree, THEN
@@ -1502,13 +1480,16 @@ object IncrementalDedup {
             Some(spark.read.parquet(s"$dDir/batch=$dB"))
           else None
         val marker = moveMarkerPath(root, b, committedBelow)
-        fsRoot.create(marker, true).close()
-        swapPartition(spark, dDir, dB,
-          existing.fold(retired)(_ unionByName retired).distinct())
-        swapPartition(spark, pDir, b, cur.join(
+        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        fs.create(marker, true).close()
+        Layout.swapDir(spark, s"$dDir/batch=$dB")(
+          existing.fold(retired)(_ unionByName retired).distinct()
+            .write.mode(SaveMode.Overwrite).parquet(_))
+        Layout.swapDir(spark, s"$pDir/batch=$b")(cur.join(
           ids.select(col("id").as("__rid")),
-          cur("id") === col("__rid"), "left_anti"))
-        fsRoot.delete(marker, false)
+          cur("id") === col("__rid"), "left_anti")
+          .write.mode(SaveMode.Overwrite).parquet(_))
+        fs.delete(marker, false)
         nPostings += n
       }
     }
@@ -1870,16 +1851,14 @@ object IncrementalDedup {
     // scan is frontier-sized in steady state: victims are the
     // partitions the lag horizon just passed, not the corpus.
     if (countsComplete(spark, root)) {
-      val cDir = s"$root/$CountsSubtree"
-      recoverSwaps(spark, cDir)
-      val negPart = -(coveredBelow + 2L)
+      val negDir = s"$root/$CountsSubtree/batch=${-(coveredBelow + 2L)}"
+      Layout.recoverSwapDir(spark, negDir)
       writeRetireMarker(spark, root, coveredBelow, victims)
-      if (!Layout.hasParquetData(spark, s"$cDir/batch=$negPart")) {
-        val neg = spark.read.parquet(
+      if (!Layout.hasParquetData(spark, negDir))
+        Layout.swapDir(spark, negDir)(spark.read.parquet(
             victims.map(b => s"$dir/batch=$b"): _*)
           .groupBy(col("sh64")).agg((-count(lit(1))).as("n"))
-        swapPartition(spark, cDir, negPart, neg)
-      }
+          .write.mode(SaveMode.Overwrite).parquet(_))
       victims.foreach(b =>
         fs.delete(new org.apache.hadoop.fs.Path(path, s"batch=$b"), true))
       fs.delete(retireMarkerPath(root, coveredBelow), false)
@@ -1907,8 +1886,8 @@ object IncrementalDedup {
     * the sidecar understating the union, and a naive replay would
     * decrement the leftovers AGAIN at a later watermark. If the
     * negative partition is committed, finish the named deletions; if
-    * it never committed ([[recoverSwaps]] discarded its tmp), just
-    * drop the marker — the victims are intact and the window replay
+    * it never committed ([[Layout.recoverSwapDir]] discarded its tmp),
+    * just drop the marker — the victims are intact and the window replay
     * redoes the whole retirement. */
   private[graft] def recoverRetire(spark: SparkSession,
                                    root: String): Unit = {
@@ -2093,31 +2072,6 @@ object IncrementalDedup {
       "reconcile_mode" -> mode)
   }
 
-  /** Rewrite one `batch=<b>` partition via tmp-write + delete + rename
-    * (never an in-place Overwrite — see [[applyReconcile]]'s swap
-    * contract). `content` must derive from reads of the CURRENT
-    * partition (it is evaluated during the tmp write, while the
-    * original is still in place). */
-  /** The swap's OWN commit witness inside a tmp dir — written after
-    * the parquet job returns, independent of the Hadoop committer's
-    * `_SUCCESS` setting (`marksuccessfuljobs=false` is a standard
-    * object-store tuning; recovery must not depend on it). Underscore-
-    * prefixed: invisible to parquet reads after the rename. */
-  private val SwapCommitMarker = "_graft_commit"
-
-  private def swapPartition(spark: SparkSession, dir: String, b: Long,
-                            content: DataFrame): Unit = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val part = new org.apache.hadoop.fs.Path(path, s"batch=$b")
-    val tmp = new org.apache.hadoop.fs.Path(path, s".apply-tmp-batch=$b")
-    content.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    fs.create(new org.apache.hadoop.fs.Path(tmp, SwapCommitMarker), true)
-      .close()
-    fs.delete(part, true)
-    require(fs.rename(tmp, part), s"rename $tmp -> $part failed")
-  }
-
   /** The postings→evidence move marker for source partition `b`. For
     * the folded source (b = -1) the name also carries the apply
     * watermark, because the destination is the watermark-keyed
@@ -2145,16 +2099,33 @@ object IncrementalDedup {
   }
 
   /** The ONE entry-recovery preamble every serialized-window operation
-    * that reads the postings/evidence trees must run — interrupted
-    * partition swaps finished ([[recoverSwaps]]), then interrupted
-    * postings→evidence moves ([[recoverEvidenceMoves]], which needs
-    * both trees whole first). Shared so a future recovery mechanism is
-    * added in one place, not hand-propagated to every entry site. */
+    * that reads the ladder's trees must run — interrupted partition
+    * swaps healed, then interrupted postings→evidence moves
+    * ([[recoverEvidenceMoves]], which needs both trees whole first).
+    * Shared so a future recovery mechanism is added in one place, not
+    * hand-propagated to every entry site.
+    *
+    * The swap sweep lists each subtree's `.apply-tmp-*` / `.apply-old-*`
+    * dirs and runs [[Layout.recoverSwapDir]] on the partition each one
+    * belongs to, so no partition a tick probes is ever missing (a tick
+    * probing a tree with a partition missing would re-admit near-dups
+    * of the invisible docs). Sweeping a whole subtree is safe here and
+    * only here: every swap into these trees runs in the same serialized
+    * window. One FS listing per subtree, no job. */
   private[graft] def recoverLadderEntry(spark: SparkSession,
                                         root: String): Unit = {
-    Seq("postings", "postings_dropped", CountsSubtree,
-      DocShinglesSubtree)
-      .foreach(sub => recoverSwaps(spark, s"$root/$sub"))
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq("postings", "postings_dropped", CountsSubtree, DocShinglesSubtree,
+      "verdicts", "corpus", "domain_counts")
+      .map(sub => new org.apache.hadoop.fs.Path(root, sub))
+      .filter(fs.exists)
+      .foreach { dir =>
+        fs.listStatus(dir).map(_.getPath.getName)
+          .collect { case Layout.SwapSibling(leaf) => leaf }.distinct
+          .foreach(leaf => Layout.recoverSwapDir(fs,
+            new org.apache.hadoop.fs.Path(dir, leaf)))
+      }
     recoverEvidenceMoves(spark, root)
     recoverRetire(spark, root)
   }
@@ -2168,7 +2139,7 @@ object IncrementalDedup {
     * Recovery finishes the retirement: any id present in the evidence
     * partition is removed from the postings partition (legitimate
     * states keep the two trees id-disjoint per partition, so overlap ⟹
-    * interrupted move). Run AFTER [[recoverSwaps]] on both trees (a
+    * interrupted move). Run AFTER the swap sweep on both trees (a
     * mid-swap crash must be finished first so both partitions are
     * whole). Zero overlap (crash before the evidence swap, or after
     * both swaps but before the marker delete) recovers as a no-op; the
@@ -2194,60 +2165,12 @@ object IncrementalDedup {
           val overlapped = !cur.join(ev, cur("id") === col("__eid"),
             "left_semi").isEmpty
           if (overlapped)
-            swapPartition(spark, s"$root/postings", b,
-              cur.join(ev, cur("id") === col("__eid"), "left_anti"))
+            Layout.swapDir(spark, pPart)(
+              cur.join(ev, cur("id") === col("__eid"), "left_anti")
+                .write.mode(SaveMode.Overwrite).parquet(_))
         }
         fs.delete(m, false)
         }
-      }
-  }
-
-  /** Entry-time recovery for interrupted [[swapPartition]]s: a
-    * `.apply-tmp-batch=N` with its partition still present is a stale
-    * pre-swap artifact (discard — the replay recomputes it); one whose
-    * partition is GONE is a completed rewrite whose final rename was
-    * interrupted (finish it). Dot-prefixed tmp dirs are invisible to
-    * parquet reads; the delete→rename gap (a partition briefly absent)
-    * is closed by running this sweep at the entry of EVERY operation
-    * in the serialized window that reads a swap-target subtree —
-    * [[applyReconcile]] (all four), [[reconcileNear]] (postings +
-    * evidence, BEFORE its file listing), and the ingest ticks'
-    * postings probe ([[admitBatchLadder]] / [[IngestLadder.admitBatch]]
-    * — a tick probing a tree with a partition missing would re-admit
-    * near-dups of the invisible docs). One FS listing per subtree, no
-    * job. */
-  private[graft] def recoverSwaps(spark: SparkSession, dir: String): Unit = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) return
-    fs.listStatus(path).filter(_.isDirectory).map(_.getPath)
-      .filter(_.getName.startsWith(".apply-tmp-batch="))
-      .foreach { tmp =>
-        val part = new org.apache.hadoop.fs.Path(path,
-          tmp.getName.stripPrefix(".apply-tmp-"))
-        if (fs.exists(part)) fs.delete(tmp, true)
-        else if (fs.exists(new org.apache.hadoop.fs.Path(tmp,
-            SwapCommitMarker)) ||
-          fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")))
-          // the swap's own commit marker (or, for tmps written before
-          // it existed, the Hadoop committer's _SUCCESS) certifies the
-          // tmp is a COMPLETED rewrite whose final rename was
-          // interrupted — finish it. The explicit marker keeps this
-          // arm correct when `marksuccessfuljobs=false` (standard
-          // object-store tuning) suppresses _SUCCESS.
-          require(fs.rename(tmp, part),
-            s"recovery rename $tmp -> $part failed")
-        else
-          // tmp without any commit witness AND no live partition: a
-          // crash MID-tmp-write whose target never pre-existed — newly
-          // reachable since the quota refund swaps into a partition id
-          // that may not exist yet ([[applyReconcile]]'s
-          // `batch = -(W+2)`). Promoting a half-written tmp would feed
-          // partial refunds into the prior-count probe; discard it —
-          // the replayed apply recomputes the full partition. (For
-          // pre-existing targets this arm is unreachable: the original
-          // is only deleted after the tmp write committed.)
-          fs.delete(tmp, true)
       }
   }
 }

@@ -207,8 +207,6 @@ object IngestLadder {
     // or a postings→evidence move half-done — finish them before any
     // probe lists the trees ([[IncrementalDedup.recoverLadderEntry]])
     IncrementalDedup.recoverLadderEntry(spark, root)
-    if (domainQuota.isDefined)
-      IncrementalDedup.recoverSwaps(spark, s"$root/domain_counts")
     // complete-from-genesis test for the shingle-count sidecar, taken
     // BEFORE this tick writes anything
     val freshRoot = !Layout.hasParquetData(spark, s"$root/postings") &&

@@ -1,5 +1,6 @@
 package graft.ext
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
@@ -53,7 +54,7 @@ object Layout {
     * listing/opening costs dominate scans and the NameNode/object-store
     * melts. Rewrite: one pass over a SNAPSHOT of the current part files,
     * `ceil(bytes/target)` output files via a round-robin repartition
-    * (no key assumption), then a rename swap.
+    * (no key assumption), then a [[swapDir]].
     *
     * CONCURRENCY CONTRACT — the tick must be SERIALIZED with the
     * table's writer AND its readers (e.g. run it inside the same
@@ -80,35 +81,124 @@ object Layout {
   private[graft] def compactParquetDir(spark: org.apache.spark.sql.SparkSession,
                                        dir: String, targetBytes: Long,
                                        beforeSwap: () => Unit): Int = {
-    val path = new org.apache.hadoop.fs.Path(dir)
+    val path = new Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    recoverSwapDir(fs, path)
     def partFiles(): Map[String, Long] = fs.listStatus(path)
       .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
       .map(f => f.getPath.getName -> f.getLen).toMap
     val snapshot = partFiles()
     val totalBytes = snapshot.values.sum
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val tmp = new org.apache.hadoop.fs.Path(
-      path.getParent, s".compact-${path.getName}-${java.util.UUID.randomUUID()}")
     // read exactly the snapshot files: rows written after the snapshot
     // are not silently folded into (or dropped from) the compacted set
-    val snapPaths = snapshot.keys.toSeq.sorted
-      .map(n => new org.apache.hadoop.fs.Path(path, n).toString)
-    spark.read.parquet(snapPaths: _*).repartition(nFiles)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    beforeSwap()
-    if (partFiles() != snapshot) {
-      fs.delete(tmp, true)
-      throw new IllegalStateException(
-        s"$dir changed during compaction (concurrent writer?) — tick " +
-          "aborted; serialize compactParquetDir with the table's writer")
+    val snapPaths = snapshot.keys.toSeq.sorted.map(n => new Path(path, n).toString)
+    swapDir(fs, path) { tmp =>
+      spark.read.parquet(snapPaths: _*).repartition(nFiles)
+        .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+      beforeSwap()
+      if (partFiles() != snapshot)
+        throw new IllegalStateException(
+          s"$dir changed during compaction (concurrent writer?) — tick " +
+            "aborted; serialize compactParquetDir with the table's writer")
     }
-    val old = new org.apache.hadoop.fs.Path(
-      path.getParent, s".old-${path.getName}-${java.util.UUID.randomUUID()}")
-    fs.rename(path, old)
-    fs.rename(tmp, path)
-    fs.delete(old, true)
     nFiles
+  }
+
+  /** The swap's commit witness inside a tmp dir — written after the
+    * write returns, independent of the Hadoop committer's `_SUCCESS`
+    * (`marksuccessfuljobs=false` is a standard object-store tuning;
+    * recovery must not depend on it). Underscore-prefixed: invisible to
+    * parquet reads once the dir is live. */
+  private val SwapCommit = "_graft_commit"
+
+  /** The leaf name of the target a swap sibling belongs to:
+    * `.apply-tmp-<leaf>` (the new content) or `.apply-old-<leaf>` (the
+    * live dir moved aside). Subtree sweeps match listed names with it. */
+  private[graft] val SwapSibling = """\.apply-(?:tmp|old)-(.+)""".r
+
+  private def swapSiblings(live: Path): (Path, Path) =
+    (new Path(live.getParent, s".apply-tmp-${live.getName}"),
+      new Path(live.getParent, s".apply-old-${live.getName}"))
+
+  // Hadoop signals a failed rename by returning FALSE, not by throwing;
+  // continuing past one would delete the only copy of the data
+  private def mustRename(fs: FileSystem, src: Path, dst: Path): Unit =
+    if (!fs.rename(src, dst))
+      throw new java.io.IOException(s"swap: rename $src -> $dst failed")
+
+  /** Replace the directory `live` crash-safely — the ONE swap every
+    * single-directory parquet rewrite goes through (file-sink tables,
+    * ladder partitions and snapshots, compaction, re-clustering, the
+    * span index):
+    *  1. `write` fills the hidden sibling `<parent>/.apply-tmp-<leaf>`
+    *     (a write that throws leaves no tmp behind);
+    *  2. the commit witness `_graft_commit` is created inside it;
+    *  3. `live` (if present) is renamed aside to
+    *     `<parent>/.apply-old-<leaf>`;
+    *  4. the tmp dir is renamed into place;
+    *  5. the aside dir is deleted.
+    * Both renames are checked. After a crash or failure at any step,
+    * [[recoverSwapDir]] leaves the target holding either its full
+    * pre-swap or its full post-swap content, never nothing.
+    *
+    * Returns `write`'s result. `write` may read `live`: it runs while
+    * the original is still in place. Callers run [[recoverSwapDir]] on
+    * the target before they read it, and serialize swaps of one target.
+    * Distinct targets never share a sibling, so tables under one parent
+    * may swap concurrently.
+    */
+  private[graft] def swapDir[A](fs: FileSystem, live: Path)(write: Path => A): A = {
+    val (tmp, aside) = swapSiblings(live)
+    fs.delete(tmp, true)
+    val out =
+      try write(tmp)
+      catch { case e: Throwable => fs.delete(tmp, true); throw e }
+    fs.create(new Path(tmp, SwapCommit), true).close()
+    if (fs.exists(live)) {
+      // a rename onto an existing dir would nest inside it
+      fs.delete(aside, true)
+      mustRename(fs, live, aside)
+    }
+    mustRename(fs, tmp, live)
+    fs.delete(aside, true)
+    out
+  }
+
+  private[graft] def swapDir[A](spark: org.apache.spark.sql.SparkSession,
+                                dir: String)(write: String => A): A = {
+    val live = new Path(dir)
+    swapDir(live.getFileSystem(spark.sparkContext.hadoopConfiguration), live)(
+      tmp => write(tmp.toString))
+  }
+
+  /** Heal an interrupted [[swapDir]] of ONE target (never a sweep of
+    * its parent: a sibling target may be mid-swap):
+    *  - `live` exists: the swap finished or never started — drop any
+    *    tmp and aside dir;
+    *  - else an aside dir exists: the crash hit between the two renames
+    *    — restore the pre-swap content;
+    *  - else the tmp carries `_graft_commit` (or, for a write whose
+    *    witness was lost, the committer's `_SUCCESS`): a first-ever
+    *    target whose final rename was lost — promote it;
+    *  - else the tmp (if any) is a crash mid-write — discard it; the
+    *    replayed operation recomputes it.
+    */
+  private[graft] def recoverSwapDir(fs: FileSystem, live: Path): Unit = {
+    val (tmp, aside) = swapSiblings(live)
+    if (!fs.exists(live)) {
+      if (fs.exists(aside)) mustRename(fs, aside, live)
+      else if (fs.exists(new Path(tmp, SwapCommit)) ||
+        fs.exists(new Path(tmp, "_SUCCESS"))) mustRename(fs, tmp, live)
+    }
+    fs.delete(tmp, true)
+    fs.delete(aside, true)
+  }
+
+  private[graft] def recoverSwapDir(spark: org.apache.spark.sql.SparkSession,
+                                    dir: String): Unit = {
+    val live = new Path(dir)
+    recoverSwapDir(live.getFileSystem(spark.sparkContext.hadoopConfiguration), live)
   }
 
   /** Salted equi-join for skewed keys: the skewed (large) side gets a

@@ -230,25 +230,16 @@ object ZOrder {
   }
 
   /** The OPTIMIZE half of the loop: re-cluster the layout's current
-    * rows into `nFiles` tight files (temp-dir write + rename swap, so
-    * a crash mid-way leaves either the old or the new layout, never a
+    * rows into `nFiles` tight files ([[Layout.swapDir]], so a crash
+    * mid-way leaves either the old or the new layout, never a
     * half-rewritten one). Serialization contract as above: no
     * concurrent reader or writer during the swap.
     */
   def recluster(spark: SparkSession, dir: String, nFiles: Int): Bounds = {
+    Layout.recoverSwapDir(spark, dir)
     val m = readManifest(spark, dir)
-    val uuid = java.util.UUID.randomUUID().toString
-    val tmp = s"$dir.recluster-$uuid"
-    val bounds = zorderWrite(spark.read.parquet(dir), tmp,
-      m.dimA, m.dimB, nFiles, m.curve)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val t = new org.apache.hadoop.fs.Path(tmp)
-    val old = new org.apache.hadoop.fs.Path(s"$dir.old-$uuid")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.rename(p, old), s"rename $dir aside failed")
-    require(fs.rename(t, p), s"rename of reclustered layout failed")
-    fs.delete(old, true)
-    bounds
+    Layout.swapDir(spark, dir)(zorderWrite(spark.read.parquet(dir), _,
+      m.dimA, m.dimB, nFiles, m.curve))
   }
 
   private def writeManifest(spark: SparkSession, dir: String, dimA: String,

@@ -7,6 +7,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types
 
+import graft.ext.Layout
+
 /** A merge sink applies one compacted per-table batch (upserts + deletes)
   * atomically to the target table identified by (db, tb).
   *
@@ -412,15 +414,25 @@ final class JdbcMergeSink(url: String, props: Properties,
 
 /** Parquet-directory merge sink for tests and file-based deployments:
   * target state lives at `<root>/<db>/<tb>`; each batch rewrites the
-  * table via anti-join + union ([[Merge.applyBatch]]) into a temp dir,
-  * then swaps. At real scale the same semantics come from a
-  * transactional table format; the plan shape (broadcast anti-join)
-  * is the scalable one for the CDC regime — batch ≪ target. The
-  * broadcast is explicit, so a bulk BACKFILL batch larger than driver
-  * memory should go through `Trigger.AvailableNow` rate limiting (many
-  * small batches) or a plain-join rewrite, not one giant batch.
-  * Continuous operation pairs with [[graft.ext.Layout.compactParquetDir]]
-  * as the small-file compaction tick.
+  * table via anti-join + union ([[Merge.applyBatch]]) and swaps it in
+  * through [[graft.ext.Layout.swapDir]]: the new table is written to
+  * `<root>/<db>/.apply-tmp-<tb>`, the live table is renamed aside to
+  * `.apply-old-<tb>`, the new one renamed into place, the aside
+  * deleted. Every merge first runs [[graft.ext.Layout.recoverSwapDir]]
+  * on its target, so after a crash at any step the next merge sees the
+  * table's full pre-batch or full post-batch state — never a missing
+  * table — and replaying the batch converges to latest-per-key. The
+  * swap dirs are per table, so concurrent merges of different tables
+  * (CdcPipeline's `tableParallelism`) never share one.
+  *
+  * At real scale the same semantics come from a transactional table
+  * format; the plan shape (broadcast anti-join) is the scalable one for
+  * the CDC regime — batch ≪ target. The broadcast is explicit, so a
+  * bulk BACKFILL batch larger than driver memory should go through
+  * `Trigger.AvailableNow` rate limiting (many small batches) or a
+  * plain-join rewrite, not one giant batch. Continuous operation pairs
+  * with [[graft.ext.Layout.compactParquetDir]] as the small-file
+  * compaction tick.
   */
 final class ParquetMergeSink(rootDir: String) extends MergeSink {
 
@@ -431,6 +443,7 @@ final class ParquetMergeSink(rootDir: String) extends MergeSink {
     val spark = batch.sparkSession
     val path = new org.apache.hadoop.fs.Path(targetPath(db, tb))
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Layout.recoverSwapDir(fs, path)
     val inserts = batch.filter(col(opCol) =!= deleteMarker).drop(opCol)
     val next =
       if (fs.exists(path)) {
@@ -438,10 +451,7 @@ final class ParquetMergeSink(rootDir: String) extends MergeSink {
         target.join(broadcast(batch.select(col(keyCol))), Seq(keyCol), "left_anti")
           .unionByName(inserts)
       } else inserts
-    val tmp = new org.apache.hadoop.fs.Path(s"$rootDir/.tmp/${db}_$tb")
-    next.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    if (fs.exists(path)) fs.delete(path, true)
-    fs.mkdirs(path.getParent)
-    fs.rename(tmp, path)
+    Layout.swapDir(fs, path)(tmp =>
+      next.write.mode(SaveMode.Overwrite).parquet(tmp.toString))
   }
 }

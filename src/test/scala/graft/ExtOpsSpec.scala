@@ -1569,54 +1569,18 @@ class ExtOpsSpec extends AnyFunSuite {
       s"other spelling of the store must see the fingerprints: $viaSlash")
     // --- interrupted-swap recovery ---------------------------------
     // simulate a crash BETWEEN the two renames: live store moved aside,
-    // shadow never moved in. The next tick must heal (rename __old
-    // back) and keep all fingerprints.
+    // shadow never moved in. The next tick must heal (rename the aside
+    // dir back) and keep all fingerprints.
     spark.sql(s"DROP TABLE ${IncrementalCoverage.tableName(spark, indexDir)}")
     val live = new java.io.File(indexDir)
-    val old = new java.io.File(indexDir + "__old")
+    val old = new java.io.File(s"$root/.apply-old-spans")
     assert(live.renameTo(old), "fixture rename failed")
     val healed = IncrementalCoverage.admitBatch(
       Seq((1L, aText), (3L, filler(240))).toDF("doc_id", "text"),
       "doc_id", "text", corpusDir, indexDir, winBytes = 40, anchorMod = 4)
     assert(healed == ((1L, 1L)),
       s"healed store must reject the replay and admit the new doc: $healed")
-    assert(!old.exists(), "recovery must consume the __old dir")
-  }
-
-  test("safeSwap: a FAILED rename aborts with the old store recoverable, never deleted") {
-    import graft.ext.IncrementalCoverage
-    val root = java.nio.file.Files.createTempDirectory("graft_swapfail").toString
-    val conf = spark.sparkContext.hadoopConfiguration
-    val real = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(conf)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    val live = p(s"$root/store")
-    val shadow = p(s"$root/store__compact")
-    real.mkdirs(live); real.mkdirs(shadow)
-    real.create(new org.apache.hadoop.fs.Path(live, "data")).close()
-    real.create(new org.apache.hadoop.fs.Path(shadow, "data2")).close()
-    // Hadoop signals rename failure by returning FALSE, not throwing —
-    // this FS refuses the shadow->live rename, the step AFTER live has
-    // already been moved aside: the pre-r10 unchecked code fell through
-    // to delete(__old) and stranded the only copy in __compact
-    val failing = new org.apache.hadoop.fs.FilterFileSystem(real) {
-      override def rename(src: org.apache.hadoop.fs.Path,
-                          dst: org.apache.hadoop.fs.Path): Boolean =
-        if (src.getName.endsWith("__compact")) false
-        else super.rename(src, dst)
-    }
-    val ex = intercept[java.io.IOException] {
-      IncrementalCoverage.safeSwap(failing, live, shadow)
-    }
-    assert(ex.getMessage.contains("rename"))
-    val old = p(s"$root/store__old")
-    assert(real.exists(old), "aborted swap must leave the store in __old")
-    assert(real.exists(shadow), "shadow untouched after aborted swap")
-    // the next tick's recoverSwap heals: __old back to live, no data loss
-    IncrementalCoverage.recoverSwap(real, live)
-    assert(real.exists(new org.apache.hadoop.fs.Path(live, "data")),
-      "recoverSwap must restore the original store files")
-    assert(!real.exists(old))
+    assert(!old.exists(), "recovery must consume the aside dir")
   }
 
   test("incremental quality admission: frozen tables, restart, replay, batch parity") {

@@ -133,7 +133,7 @@ class LayoutSpec extends AnyFunSuite {
     assert(partFiles().length == nBefore + 1, "live dir must be untouched")
     assert(spark.read.parquet(dir).count() > before, "new rows must survive")
     assert(!new java.io.File(dir).getParentFile.listFiles()
-      .exists(_.getName.startsWith(".compact-")),
+      .exists(_.getName.startsWith(".apply-tmp-")),
       "aborted compacted output must be cleaned up")
   }
 

@@ -355,7 +355,7 @@ class ReconcileApplySpec extends AnyFunSuite {
     val tmp2 = s"$qDir/.apply-tmp-batch=-6"
     Seq(("e.com", -1L)).toDF("reg_domain", "n").write.parquet(tmp2)
     fs.delete(new org.apache.hadoop.fs.Path(tmp2, "_SUCCESS"), false)
-    IncrementalDedup.recoverSwaps(spark, qDir)
+    IncrementalDedup.recoverLadderEntry(spark, root)
     assert(Layout.hasParquetData(spark, s"$qDir/batch=-4"),
       "committed tmp promoted on the swap's own witness")
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$qDir/batch=-6")) &&
@@ -376,9 +376,9 @@ class ReconcileApplySpec extends AnyFunSuite {
     // .apply-delta dir to fall back on
     Seq((999L, "near", null.asInstanceOf[String], 2L))
       .toDF("id", "dropped_at", "reg_domain", "__wm")
-      .write.parquet(s"$root/.apply-delta-tmp")
+      .write.parquet(s"$root/.apply-tmp-.apply-delta")
     fs.delete(new org.apache.hadoop.fs.Path(
-      s"$root/.apply-delta-tmp/_SUCCESS"), false)
+      s"$root/.apply-tmp-.apply-delta/_SUCCESS"), false)
     spark.sharedState.cacheManager.clearCache()
     val counts = IncrementalDedup.applyReconcile(spark, root, "doc_id",
       IncrementalDedup.reconcileNear(spark, root, tau = 0.5),
@@ -395,7 +395,7 @@ class ReconcileApplySpec extends AnyFunSuite {
     assert(domainSum(root) == 1L, "full-window refund after recovery")
     // a COMPLETED tmp (witness present) whose snapshot dir is gone is
     // promoted instead — the other arm of the same recovery
-    val tmp2 = new org.apache.hadoop.fs.Path(s"$root/.apply-delta-tmp")
+    val tmp2 = new org.apache.hadoop.fs.Path(s"$root/.apply-tmp-.apply-delta")
     Seq((11L, "near", "d.com", 2L))
       .toDF("id", "dropped_at", "reg_domain", "__wm")
       .write.parquet(tmp2.toString)
