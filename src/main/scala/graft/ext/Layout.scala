@@ -48,13 +48,22 @@ object Layout {
     }
   }
 
+  /** How many files a rewrite of ~`bytes` is written as:
+    * `ceil(bytes / targetBytes)`, at least one — the one sizing rule of
+    * every parquet rewrite (compaction, partition folds, the file sink).
+    * `bytes` is a BigInt because plan statistics are; an unknown
+    * estimate (Spark's `Long.MaxValue` default) caps at `Int.MaxValue`,
+    * which a `coalesce` treats as "keep the current partitioning". */
+  private[graft] def fileCount(bytes: BigInt, targetBytes: Long): Int =
+    ((bytes + targetBytes - 1) / targetBytes).max(1).min(Int.MaxValue).toInt
+
   /** Bin-pack a parquet directory into ~`targetBytes` files — the
     * small-files fix. Streaming ingestion and per-table fanout produce
     * thousands of KB-sized files per partition; at 100 TB that means
     * listing/opening costs dominate scans and the NameNode/object-store
     * melts. Rewrite: one pass over a SNAPSHOT of the current part files,
-    * `ceil(bytes/target)` output files via a round-robin repartition
-    * (no key assumption), then a [[swapDir]].
+    * `ceil(bytes/target)` output files ([[fileCount]]) via a round-robin
+    * repartition (no key assumption), then a [[swapDir]].
     *
     * CONCURRENCY CONTRACT — the tick must be SERIALIZED with the
     * table's writer AND its readers (e.g. run it inside the same
@@ -88,8 +97,7 @@ object Layout {
       .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
       .map(f => f.getPath.getName -> f.getLen).toMap
     val snapshot = partFiles()
-    val totalBytes = snapshot.values.sum
-    val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
+    val nFiles = fileCount(snapshot.values.sum, targetBytes)
     // read exactly the snapshot files: rows written after the snapshot
     // are not silently folded into (or dropped from) the compacted set
     val snapPaths = snapshot.keys.toSeq.sorted.map(n => new Path(path, n).toString)
@@ -412,9 +420,8 @@ object Layout {
     val snapshot = sourceDirs()
     if (snapshot.isEmpty || snapshot == Seq("batch=-1")) return 0
     val srcPaths = snapshot.map(n => new org.apache.hadoop.fs.Path(path, n))
-    val totalBytes = srcPaths.flatMap(p =>
-      fs.listStatus(p).filter(_.isFile).map(_.getLen)).sum
-    val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
+    val nFiles = fileCount(srcPaths.flatMap(p =>
+      fs.listStatus(p).filter(_.isFile).map(_.getLen)).sum, targetBytes)
     val tmp = new org.apache.hadoop.fs.Path(path,
       s".fold-${java.util.UUID.randomUUID()}")
     // reading the partition dirs directly drops the `batch` column —

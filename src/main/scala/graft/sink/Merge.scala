@@ -25,13 +25,16 @@ object Merge {
     *                `op` column; rows whose op equals `deleteMarker`
     *                remove the key, everything else upserts.
     * @param keys    equality merge keys
+    * @throws org.apache.spark.sql.AnalysisException when `updates`' columns
+    *         other than `opCol` differ from `target`'s — in either
+    *         direction: a column only one side carries would otherwise be
+    *         dropped from every row, silently
     */
   def applyBatch(target: DataFrame, updates: DataFrame, keys: Seq[String],
                  opCol: String, deleteMarker: String): DataFrame = {
     val survivors = target.join(broadcast(updates.select(keys.map(col): _*)),
       keys, "left_anti")
-    val inserts = updates.filter(col(opCol) =!= deleteMarker)
-    survivors.unionByName(inserts.select(target.columns.map(col).toSeq: _*))
+    survivors.unionByName(updates.filter(col(opCol) =!= deleteMarker).drop(opCol))
   }
 
   /** SCD2 (history-preserving) batch apply: instead of overwriting, a

@@ -3,7 +3,11 @@ package graft.sink
 import java.sql.{Connection, DriverManager}
 import java.util.Properties
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types
 
@@ -425,14 +429,25 @@ final class JdbcMergeSink(url: String, props: Properties,
   * swap dirs are per table, so concurrent merges of different tables
   * (CdcPipeline's `tableParallelism`) never share one.
   *
+  * File sizing: each rewrite writes `ceil(bytes / maxPartitionBytes)`
+  * files ([[graft.ext.Layout.fileCount]]; `spark.sql.files.
+  * maxPartitionBytes`, 128 MB by default), where `bytes` is the
+  * target's listed part-file bytes plus the batch's plan-statistics
+  * size estimate. The rewrite is coalesced to that count — no shuffle —
+  * so a table never accretes small files and needs no compaction tick,
+  * while a large table still writes (and reads) one task per
+  * ~maxPartitionBytes. The target is read with the schema of one
+  * part-file footer, read on the driver: what Spark's inference reads,
+  * without the job it launches. A batch whose columns (bar the op
+  * column) differ from the target's fails the merge before anything is
+  * written.
+  *
   * At real scale the same semantics come from a transactional table
   * format; the plan shape (broadcast anti-join) is the scalable one for
   * the CDC regime — batch ≪ target. The broadcast is explicit, so a
   * bulk BACKFILL batch larger than driver memory should go through
   * `Trigger.AvailableNow` rate limiting (many small batches) or a
-  * plain-join rewrite, not one giant batch. Continuous operation pairs
-  * with [[graft.ext.Layout.compactParquetDir]] as the small-file
-  * compaction tick.
+  * plain-join rewrite, not one giant batch.
   */
 final class ParquetMergeSink(rootDir: String) extends MergeSink {
 
@@ -441,17 +456,30 @@ final class ParquetMergeSink(rootDir: String) extends MergeSink {
   def merge(db: String, tb: String, batch: DataFrame,
             keyCol: String, opCol: String, deleteMarker: String): Unit = {
     val spark = batch.sparkSession
-    val path = new org.apache.hadoop.fs.Path(targetPath(db, tb))
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val path = new Path(targetPath(db, tb))
+    val fs = path.getFileSystem(conf)
     Layout.recoverSwapDir(fs, path)
-    val inserts = batch.filter(col(opCol) =!= deleteMarker).drop(opCol)
-    val next =
-      if (fs.exists(path)) {
-        val target = spark.read.parquet(path.toString)
-        target.join(broadcast(batch.select(col(keyCol))), Seq(keyCol), "left_anti")
-          .unionByName(inserts)
-      } else inserts
+    val parts =
+      if (!fs.exists(path)) Array.empty[FileStatus]
+      else fs.listStatus(path)
+        .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
+        .sortBy(_.getPath.getName)
+    val next = parts.headOption match {
+      case Some(first) =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(first, conf))
+        val footer = try reader.getFooter finally reader.close()
+        val schema = ParquetFileFormat.readSchemaFromFooter(
+          new Footer(first.getPath, footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        Merge.applyBatch(spark.read.schema(schema).parquet(path.toString),
+          batch, Seq(keyCol), opCol, deleteMarker)
+      case None => batch.filter(col(opCol) =!= deleteMarker).drop(opCol)
+    }
+    val files = Layout.fileCount(
+      parts.map(_.getLen).sum + batch.queryExecution.optimizedPlan.stats.sizeInBytes,
+      spark.sessionState.conf.filesMaxPartitionBytes)
     Layout.swapDir(fs, path)(tmp =>
-      next.write.mode(SaveMode.Overwrite).parquet(tmp.toString))
+      next.coalesce(files).write.mode(SaveMode.Overwrite).parquet(tmp.toString))
   }
 }

@@ -206,7 +206,9 @@ class LayoutSpec extends AnyFunSuite {
     import spark.implicits._
     val root = Files.createTempDirectory("graft_oploop").toString
     val sink = new graft.sink.ParquetMergeSink(root)
-    // ten micro-batches accrete files in the target dir
+    // ten micro-batches; the sink writes each rewrite as right-sized
+    // files, so the tick has nothing to shrink but must stay a no-op on
+    // contents and leave a table the merge loop keeps working on
     (1 to 10).foreach { i =>
       val b = Seq((s"k$i", i.toLong, "u", s"v$i"), ("k0", i.toLong, "u", s"v0-$i"))
         .toDF("pk", "ts", "op", "payload")
