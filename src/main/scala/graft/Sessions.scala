@@ -35,8 +35,8 @@ object Sessions {
       // applies post-scan, so results are identical either way). The
       // r19 value of 1,000,000 was WRONG: parquet-mr evaluates the
       // OR-chain recursively, and a few thousand pushed keys overflow
-      // the task stack (StackOverflowError, first observed running
-      // ReconcileIoBench's 10× fixture — the value had never been
+      // the task stack (StackOverflowError, first observed on the 10×
+      // fixture recorded in RECONCILE_IO.json — the value had never been
       // exercised). 1024 keeps point pruning for the steady-state
       // small-frontier case at a recursion depth far from the limit;
       // larger closures were already the regime the frontier guards

@@ -1,6 +1,6 @@
 package graft.compact
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -30,14 +30,6 @@ object Compaction {
     */
   def latestPerKey(df: DataFrame, keys: Seq[String], orderDesc: Seq[String]): DataFrame = {
     val w = Window.partitionBy(keys.map(col): _*).orderBy(orderDesc.map(c => col(c).desc): _*)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-  }
-
-  /** Same, with arbitrary ordering expressions (highest wins). */
-  def latestPerKeyExpr(df: DataFrame, keys: Seq[Column], orderDesc: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(keys: _*).orderBy(orderDesc.map(_.desc): _*)
     df.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")

@@ -1290,7 +1290,9 @@ object Dedup {
     * for a web-scale dedup graph is exactly a long boilerplate CHAIN —
     * thousands of rounds — while star contraction collapses a chain of
     * ANY length in ~log n rounds (spec: a 3000-link chain converges in
-    * <15 rounds where 25 propagation rounds would silently mislabel).
+    * <15 rounds where 25 propagation rounds would silently mislabel;
+    * measured round counts for the 500k chain and the 1000-branch broom
+    * are in SCALE.md "Adversarial skew").
     * Convergence is DETECTED structurally per round, reading only the
     * current (materialized) edge set — a fixpoint of both stars is
     * exactly a star union: every src has one distinct dst and no dst
@@ -1317,19 +1319,7 @@ object Dedup {
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
                           driverLimit: Long = 500000L,
-                          checkpointDir: Option[String] = None): DataFrame =
-    connectedComponentsWithRounds(pairs, maxIter, driverLimit,
-      checkpointDir)._1
-
-  /** [[connectedComponents]] plus the number of contraction rounds the
-    * distributed path used (0 on the driver fast path) — the
-    * measurement behind the O(log n) claim: SkewBench's hostile shapes
-    * (the 500k chain, the 1000-branch broom) report it so the bound is
-    * a bench row, not just the cited theorem.
-    */
-  def connectedComponentsWithRounds(pairs: DataFrame, maxIter: Int = 25,
-                                    driverLimit: Long = 500000L,
-                                    checkpointDir: Option[String] = None): (DataFrame, Int) = {
+                          checkpointDir: Option[String] = None): DataFrame = {
     val spark = pairs.sparkSession
     // eager in both modes: the loop needs the round materialized before
     // the convergence probe anyway
@@ -1388,7 +1378,7 @@ object Dedup {
       // entry here rather than leaking one per call into a long-running
       // caller (e.g. an ingest loop's per-batch clustering)
       edges.unpersist()
-      return (rows.toDF("id", "cluster"), 0)
+      return rows.toDF("id", "cluster")
     }
     // ---- scale path: large-star/small-star contraction --------------
     // Edge set invariant throughout: (src, dst) with src > dst, no
@@ -1458,7 +1448,7 @@ object Dedup {
     // the final labels are an (eagerly materialized) checkpoint —
     // independent of edges, which can therefore be released (see above)
     edges.unpersist()
-    (labels, iter)
+    labels
   }
 
   /** Passage-level exact dedup (the MassiveText/RefinedWeb paragraph-
@@ -1503,8 +1493,9 @@ object Dedup {
     * in-span positions in both, which fixed-stride sampling only catches
     * when the offsets happen to be congruent mod the stride. Spans whose
     * interior contains no anchor can slip through — the standard CDC
-    * recall trade, dialed by `anchorMod` and MEASURED in SCALE.md via
-    * `tools.RecallBench` (ground truth = `anchorMod = 1`, every offset):
+    * recall trade, dialed by `anchorMod` and MEASURED in SCALE.md
+    * "Anchor recall vs exact ExactSubstr" (ground truth =
+    * `anchorMod = 1`, every offset):
     * byte recall 0.974 / 0.942 / 0.850 at mod 4 / 8 / 16, misses
     * concentrated entirely in spans barely longer than the window, per
     * the closed form (1 - 1/mod)^(L - win + 1).
@@ -1710,7 +1701,7 @@ object Dedup {
     * rows only, and its n-windows-per-n-byte-document cost is the
     * honest price of exactness — `anchorMod` is the dial that buys
     * ~1/mod of that cost back at measured 0.85–0.97 byte recall
-    * (SCALE.md, RecallBench). Fingerprints are md5 (128-bit): at 10^14
+    * (SCALE.md "Anchor recall vs exact ExactSubstr"). Fingerprints are md5 (128-bit): at 10^14
     * windows the collision expectation is ~10^-11, so "exact" holds at
     * any realistic corpus scale.
     *

@@ -1048,28 +1048,26 @@ object IncrementalDedup {
     // scan is the honest fallback (that regime is near the frontier
     // guard's full-path handoff anyway).
     def pointLookup(df: DataFrame, keyCol: String,
-                    keys: Seq[Any]): DataFrame =
-      if (keys.isEmpty) df.limit(0)
-      else if (keys.size <= PointLookupChunk ||
-          keys.size > PointLookupChunk * PointLookupMaxChunks)
-        df.filter(col(keyCol).isin(keys: _*))
-      else {
-        // chunks must be CONTIGUOUS in the column's sort order (the
-        // folds are sh64-/id-sorted): an arbitrary-order chunk spans
-        // the whole key range and every chunk scans every row group —
-        // measured 3x MORE bytes than one un-pruned scan. Sorted, each
-        // chunk's OR-chain fails fast outside its narrow stats range.
-        val sorted = keys.head match {
-          case _: Long =>
-            keys.asInstanceOf[Seq[Long]].sorted.asInstanceOf[Seq[Any]]
-          case _: String =>
-            keys.asInstanceOf[Seq[String]].sorted.asInstanceOf[Seq[Any]]
-          case _ => keys
-        }
-        sorted.grouped(PointLookupChunk)
-          .map(ch => df.filter(col(keyCol).isin(ch: _*)))
-          .reduce(_ unionByName _)
+                    keys: Seq[Any]): DataFrame = {
+      // chunks must be CONTIGUOUS in the column's sort order (the
+      // folds are sh64-/id-sorted): an arbitrary-order chunk spans
+      // the whole key range and every chunk scans every row group —
+      // measured 3x MORE bytes than one un-pruned scan. Sorted, each
+      // chunk's OR-chain fails fast outside its narrow stats range; a
+      // key type not sorted here takes the single scan instead.
+      val chunked = keys.size > PointLookupChunk &&
+        keys.size <= PointLookupChunk * PointLookupMaxChunks
+      val sorted: Option[Seq[Any]] = if (!chunked) None else keys.head match {
+        case _: Long => Some(keys.asInstanceOf[Seq[Long]].sorted)
+        case _: String => Some(keys.asInstanceOf[Seq[String]].sorted)
+        case _ => None
       }
+      if (keys.isEmpty) df.limit(0)
+      else sorted.fold(df.filter(col(keyCol).isin(keys: _*)))(
+        _.grouped(PointLookupChunk)
+          .map(ch => df.filter(col(keyCol).isin(ch: _*)))
+          .reduce(_ unionByName _))
+    }
 
     // SEED: new-partition docs (partition-pruned batch predicates) +,
     // under the dial, docs carrying formerly-hot shingles (the

@@ -462,8 +462,9 @@ object Similarity {
     // Identical vectors are cosine-1 pairs at any tau (zero-norm
     // excepted: cosine is defined 0 there), so pairing ONE
     // representative per distinct vector and star-connecting the rest
-    // yields exactly the same connected components — SkewBench measures
-    // the blowup this removes; the dedup_semantic oracle pins output
+    // yields exactly the same connected components — SCALE.md
+    // "Adversarial skew" records the blowup this removes (the
+    // semanticDedup hostile shape); the dedup_semantic oracle pins output
     // identity to the all-pairs formulation.
     val pairs =
       if (!collapseExact) nearDupPairs(assigned, "id", "emb", "cell", tau)

@@ -110,13 +110,23 @@ final class CdcPipeline(
         .withColumn("ts_date", to_date(from_unixtime(col("ts_ms") / 1000))),
       format.sinkTypes)
       .persist(StorageLevel.MEMORY_AND_DISK)
+    // without a DLQ hook nothing has split off the unroutable envelopes:
+    // a null pk survives compaction as one row per table that the
+    // sink's equi-join never matches, and a null table name fans out to
+    // a phantom `null` table. Drop them here, over the cache — the same
+    // good rows as the DLQ split (a null ts_ms always loses max_by).
+    // Placed before the persist, the filter would be pushed through the
+    // aggregate's keys into the envelope projection and re-run its
+    // from_json.
+    val routable = compacted.filter(col("tb_name").isNotNull &&
+      col("pk").isNotNull && col("ts_ms").isNotNull)
     // admission (when configured) gates the compacted batch before any
     // table sees it; the hook's output is persisted by contract, so the
     // per-table slices scan the admitted cache, not the gate's joins
     var gated: Option[DataFrame] = None
     try {
-      gated = admission.map(f => f(compacted, batchId))
-      val work0 = gated.getOrElse(compacted)
+      gated = admission.map(f => f(routable, batchId))
+      val work0 = gated.getOrElse(routable)
       val tables = Compaction.targets(work0, Seq("db_name", "tb_name"))
         .collect()
         .map(r => (r.getString(0), r.getString(1)))
@@ -142,7 +152,7 @@ final class CdcPipeline(
         }
         Await.result(work, Duration.Inf)
       } finally pool.shutdown()
-      val compactedRows = compacted.count()
+      val compactedRows = routable.count()
       CdcPipeline.BatchReport(batchId, compactedRows, dlqRows, tables.length,
         admittedRows = gated.map(_.count()).getOrElse(-1L))
     } finally {

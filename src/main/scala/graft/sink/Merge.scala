@@ -102,14 +102,4 @@ object MergeSql {
     s"INSERT INTO $target (${insertCols.mkString(", ")}) " +
       s"SELECT ${insertCols.mkString(", ")} FROM $stage WHERE $opCol <> '$deleteMarker'",
     s"DROP TABLE $stage")
-
-  /** MERGE-based upsert (dms strategy K2). */
-  def mergeUpsert(target: String, stage: String, key: String): Seq[String] = Seq(
-    s"MERGE INTO $target USING $stage ON ($target.$key = $stage.$key) REMOVE DUPLICATES",
-    s"TRUNCATE $stage")
-
-  /** Delete-only pass (dms strategy K4, gated by apply_delete). */
-  def deleteOnly(target: String, stage: String, key: String): Seq[String] = Seq(
-    s"DELETE FROM $target USING $stage WHERE $target.$key = $stage.$key",
-    s"TRUNCATE $stage")
 }

@@ -117,7 +117,7 @@ trait MergeDialect {
   def csvNullToken: Option[String] = None
 }
 
-/** Redshift-flavored SQL — the reference's exact strategy (K1-K4):
+/** Redshift-flavored SQL — the reference's strategy (K1, K3):
   * `DELETE ... USING`, sortkey DDL, `DROP` of the per-batch stage.
   */
 object RedshiftDialect extends MergeDialect {

@@ -27,6 +27,10 @@ object RunPipeline {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: RunPipeline <config.json> <mongo|pg|dms>")
     val cfg = JobConfig.fromFile(args(0))
+    // no sink has a skip-deletes mode: refuse the job rather than apply
+    // the deletes it asked to skip
+    require(cfg.apply_delete, "apply_delete = false is not supported: " +
+      "every sink applies deletes; remove the key or set it to true")
     val format: CdcFormat = args(1) match {
       case "mongo" => MongoCdc
       case "pg" => PgCdc

@@ -82,4 +82,12 @@ class ConfigSpec extends AnyFunSuite {
     assert(minOpts.keySet ==
       Set("kafka.bootstrap.servers", "subscribe", "startingOffsets"))
   }
+
+  test("RunPipeline refuses apply_delete = false before building a session") {
+    val f = java.nio.file.Files.createTempFile("graft_job", ".json")
+    java.nio.file.Files.writeString(f, json)
+    val e = intercept[IllegalArgumentException](
+      graft.tools.RunPipeline.main(Array(f.toString, "dms")))
+    assert(e.getMessage.contains("apply_delete"))
+  }
 }

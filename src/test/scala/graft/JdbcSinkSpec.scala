@@ -4,7 +4,7 @@ import java.util.Properties
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sink.{AnsiDialect, JdbcMergeSink, MergeSql, RedshiftDialect, SinkTypes, StagingConf}
+import graft.sink.{AnsiDialect, JdbcMergeSink, RedshiftDialect, SinkTypes, StagingConf}
 
 /** JDBC merge sink against embedded Derby: the portable stand-in for the
   * reference's Redshift stage-table + postactions transaction (K1-K5).
@@ -231,10 +231,5 @@ class JdbcSinkSpec extends AnyFunSuite {
       "DELETE FROM t USING s WHERE t.pk = s.pk",
       "INSERT INTO t (pk, payload) SELECT pk, payload FROM s WHERE op <> 'delete'",
       "DROP TABLE s"))
-    // DMS flavors (K2/K4)
-    assert(MergeSql.mergeUpsert("t", "s", "id").head ==
-      "MERGE INTO t USING s ON (t.id = s.id) REMOVE DUPLICATES")
-    assert(MergeSql.deleteOnly("t", "s", "id") ==
-      Seq("DELETE FROM t USING s WHERE t.id = s.id", "TRUNCATE s"))
   }
 }

@@ -690,4 +690,28 @@ class PipelineSpec extends AnyFunSuite {
     val second = spark.read.parquet(s"$root/shop/t").select("pk").as[String].collect().toSet
     assert(first == Set("1") && second == Set("1"))
   }
+
+  test("unroutable envelopes without a DLQ hook leave no null-pk rows and no phantom table") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_sink_unroutable").toString
+    val pipeline = new CdcPipeline(PgCdc, new ParquetMergeSink(root),
+      tiebreaker = Some("offset"))
+    val pkless = pgEvent("t", 0, 10L, "c", "nokey").replace("""\"id\": 0, """, "")
+    assert(!pkless.contains("id"))
+    Seq(0L, 1L).foreach { b =>
+      val batch = Seq(
+        (pgEvent("t", b.toInt + 1, 10L + b, "c", s"x$b"), 3 * b),
+        (pkless, 3 * b + 1),
+        ("{not json", 3 * b + 2)).toDF("value", "offset")
+      val report = pipeline.processBatch(batch, b)
+      assert(report.compactedRows == 1 && report.tables == 1, s"batch $b: $report")
+    }
+    val t = spark.read.parquet(s"$root/shop/t")
+    assert(t.filter(col("pk").isNull).count() == 0, "null-pk rows reached the target")
+    assert(t.select("pk").as[String].collect().toSet == Set("1", "2"))
+    def visible(dir: String): Set[String] =
+      new java.io.File(dir).list().filterNot(_.startsWith(".")).toSet
+    assert(visible(root) == Set("shop"))
+    assert(visible(s"$root/shop") == Set("t"))
+  }
 }

@@ -463,7 +463,8 @@ class ReconcileIncrementalSpec extends AnyFunSuite {
     // r19 set spark.sql.parquet.pushdown.inFilterThreshold to 10^6,
     // which turns a multi-thousand-key closure isin into a parquet
     // OR-chain whose RECURSIVE evaluation overflows the task stack
-    // (first observed at ~4k keys on ReconcileIoBench's 10x fixture).
+    // (first observed at ~4k keys on the 10x fixture recorded in
+    // RECONCILE_IO.json).
     // Pin: a key set well past the session threshold both COMPLETES
     // (range filter + InSet post-filter, no OR-chain recursion) and
     // returns exactly the point-lookup rows.
