@@ -1599,7 +1599,9 @@ object IncrementalDedup {
     * departed docs are dead weight, reaped opportunistically by the
     * fold. Same per-batch-Overwrite replay contract and `_complete`
     * certification as the counts sidecar. */
-  private[graft] val DocShinglesSubtree = "doc_shingles"
+  // a constant (`final val`): `FoldSort`, initialised earlier in this
+  // object, reads it
+  private[graft] final val DocShinglesSubtree = "doc_shingles"
   private val CompleteMarker = "_complete"
 
   private def sidecarComplete(spark: SparkSession, root: String,

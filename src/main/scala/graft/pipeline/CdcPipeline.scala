@@ -24,20 +24,25 @@ import graft.sink.MergeSink
   *   - the compacted batch is persisted once and reused by every
   *     per-table slice (the reference recomputes the whole plan per
   *     table — N_tables full passes);
-  *   - fanout targets come from `distinct()` (hash aggregate), not a
-  *     window-sort (reference W4);
-  *   - emptiness probe is `isEmpty` (first-row short circuit), not
-  *     `rdd.count()`;
+  *   - one collect of the fan-out frame's `(db_name, tb_name, pk)`
+  *     per batch gives the target tables, the report's row counts and
+  *     each table's merge keys — no emptiness probe, no `distinct()`
+  *     job, no closing counts, and the sink broadcasts a driver-local
+  *     key relation instead of re-scanning the cache per table (the
+  *     reference probes with `rdd.count()` and window-sorts the
+  *     targets, W4);
   *   - `maxOffsetsPerTrigger` is actually wired (declared dead in the
   *     reference config contract, readme.md:27);
   *   - ties on the event timestamp break on a passthrough column (Kafka
   *     offset) so compaction is deterministic.
   *
   * Scale posture: per-table work runs on a driver thread pool like the
-  * reference (tables within a batch parallel, batches serial). The
-  * driver-side `targets` collect is fine for warehouse-bound table
-  * counts (thousands); a fan-out to millions of partitions would switch
-  * to `partitionBy` on write — noted in SURVEY §7.3.
+  * reference (tables within a batch parallel, batches serial). The key
+  * collect holds one batch's compacted keys on the driver — the rows
+  * the file sink's broadcast anti-joins already collected there, a
+  * table at a time — which `maxOffsetsPerTrigger` bounds; a fan-out to
+  * millions of partitions would switch to `partitionBy` on write —
+  * noted in SURVEY §7.3.
   */
 final class CdcPipeline(
     format: CdcFormat,
@@ -70,34 +75,37 @@ final class CdcPipeline(
   private val pid = pipelineId.getOrElse(s"graft_${format.name}")
 
   /** Process one micro-batch of raw envelope records (`value` string
-    * column + optional tiebreaker column, e.g. Kafka `offset`).
+    * column + optional tiebreaker column, e.g. Kafka `offset`). A batch
+    * with no rows calls neither hook; one with no routable rows calls
+    * no admission hook; neither touches a sink target.
     *
     * @return per-batch metrics; counts that would need an extra pass
-    *         over unpersisted data are -1 (dlqRows is real only when
-    *         the DLQ path is enabled — the flagged frame is persisted
-    *         then anyway, so its count is a cached-partition scan)
+    *         over the data are -1 (dlqRows is real only when the DLQ
+    *         path is enabled — the flagged frame is persisted then, and
+    *         one aggregate over it both fills the cache and counts)
     */
-  def processBatch(batch: DataFrame, batchId: Long): CdcPipeline.BatchReport = {
-    if (batch.isEmpty)
-      return CdcPipeline.BatchReport(batchId, 0, 0, 0)
-    var flagged: Option[DataFrame] = None
-    var dlqRows = -1L
-    val norm = dlq match {
+  def processBatch(batch: DataFrame, batchId: Long): CdcPipeline.BatchReport =
+    dlq match {
       case Some(writeDlq) =>
         // persist the flagged frame: the envelope parse feeds BOTH the
         // DLQ write and the good-path compaction, and must run once
         val f = format.normalizeFlagged(batch, passthrough = tiebreaker.toSeq)
           .persist(StorageLevel.MEMORY_AND_DISK)
-        flagged = Some(f)
-        val (good, bad) = format.splitFlagged(f, passthrough = tiebreaker.toSeq)
-        writeDlq(bad, batchId)
-        dlqRows = bad.count()
-        good
-      case None => format.normalize(batch, passthrough = tiebreaker.toSeq)
+        try {
+          // one pass fills the cache and counts both halves; a batch
+          // with no rows stops here, before any hook
+          val counts = f.agg(count(lit(1)), count(when(col("__bad"), 1))).head()
+          if (counts.getLong(0) == 0) CdcPipeline.BatchReport(batchId, 0, 0, 0)
+          else {
+            val (good, bad) = format.splitFlagged(f, passthrough = tiebreaker.toSeq)
+            writeDlq(bad, batchId)
+            processNormalized(good, batchId, dlqRows = counts.getLong(1))
+          }
+        } finally f.unpersist()
+      case None =>
+        processNormalized(format.normalize(batch, passthrough = tiebreaker.toSeq),
+          batchId, dlqRows = -1L)
     }
-    try processNormalized(norm, batchId, dlqRows)
-    finally flagged.foreach(_.unpersist())
-  }
 
   private def processNormalized(norm: DataFrame, batchId: Long,
                                 dlqRows: Long): CdcPipeline.BatchReport = {
@@ -122,18 +130,25 @@ final class CdcPipeline(
       col("pk").isNotNull && col("ts_ms").isNotNull)
     // admission (when configured) gates the compacted batch before any
     // table sees it; the hook's output is persisted by contract, so the
-    // per-table slices scan the admitted cache, not the gate's joins
+    // per-table slices scan the admitted cache, not the gate's joins.
+    // The count ahead of it fills the cache the gate would fill anyway,
+    // and keeps an empty batch away from the hook.
     var gated: Option[DataFrame] = None
     try {
+      val routableRows = if (admission.isEmpty) -1L else routable.count()
+      if (routableRows == 0)
+        return CdcPipeline.BatchReport(batchId, 0, dlqRows, 0, admittedRows = 0)
       gated = admission.map(f => f(routable, batchId))
       val work0 = gated.getOrElse(routable)
-      val tables = Compaction.targets(work0, Seq("db_name", "tb_name"))
-        .collect()
-        .map(r => (r.getString(0), r.getString(1)))
+      // the batch's one key pass: targets, report counts and every
+      // table's merge keys come from these rows
+      val keyRows = work0.select("db_name", "tb_name", "pk").collect()
+      val tables = keyRows
+        .groupMap(r => (r.getString(0), r.getString(1)))(r => r.get(2): Any).toSeq
       val pool = Executors.newFixedThreadPool(math.max(1, math.min(tableParallelism, tables.length)))
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
       try {
-        val work = Future.traverse(tables.toSeq) { case (db, tb) =>
+        val work = Future.traverse(tables) { case ((db, tb), keys) =>
           Future {
             val base = work0
               .filter(col("db_name") === db && col("tb_name") === tb)
@@ -147,14 +162,16 @@ final class CdcPipeline(
               case None => base
             }
             sink.mergeOnce(pid, batchId, db, tb, slice, keyCol = "pk",
-              opCol = "op", deleteMarker = format.deleteMarker)
+              opCol = "op", deleteMarker = format.deleteMarker, keys = Some(keys.toSeq))
           }
         }
         Await.result(work, Duration.Inf)
       } finally pool.shutdown()
-      val compactedRows = routable.count()
-      CdcPipeline.BatchReport(batchId, compactedRows, dlqRows, tables.length,
-        admittedRows = gated.map(_.count()).getOrElse(-1L))
+      if (admission.isEmpty)
+        CdcPipeline.BatchReport(batchId, keyRows.length, dlqRows, tables.length)
+      else
+        CdcPipeline.BatchReport(batchId, routableRows, dlqRows, tables.length,
+          admittedRows = keyRows.length)
     } finally {
       gated.foreach(_.unpersist())
       compacted.unpersist()

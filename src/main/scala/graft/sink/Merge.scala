@@ -1,7 +1,10 @@
 package graft.sink
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** CDC merge semantics, engine-side.
   *
@@ -13,27 +16,45 @@ import org.apache.spark.sql.functions._
   * for tests: delete-then-insert ≡ anti-join + union.
   *
   * Scale: `updates` is one compacted micro-batch — small relative to the
-  * target — so we broadcast it into the anti-join; the 100 TB target is
-  * never shuffled.
+  * target — so its keys are broadcast into the anti-join; the 100 TB
+  * target is never shuffled.
   */
 object Merge {
 
   /** Apply one compacted batch of updates to a target snapshot.
+    *
+    * The anti-join's broadcast side is the batch's keys. By default they
+    * are `updates.select(keys)`, so the broadcast re-runs `updates`' plan
+    * (a scan of the compacted cache, in the pipeline). A caller that
+    * already holds the keys on the driver passes them as `keyRows`: the
+    * broadcast is then a driver-local relation of those rows, with no
+    * pass over `updates`. Either way the broadcast collects every key to
+    * the driver, so driver memory bounds the batch's key count — the
+    * micro-batch regime, where `maxOffsetsPerTrigger` caps it.
     *
     * @param target  current table state (may be huge)
     * @param updates compacted batch: exactly one row per key, with an
     *                `op` column; rows whose op equals `deleteMarker`
     *                remove the key, everything else upserts.
     * @param keys    equality merge keys
+    * @param keyRows the distinct values of `keys` in `updates`, one row
+    *                per key in `keys` order; None selects them from
+    *                `updates`
     * @throws org.apache.spark.sql.AnalysisException when `updates`' columns
     *         other than `opCol` differ from `target`'s — in either
     *         direction: a column only one side carries would otherwise be
     *         dropped from every row, silently
     */
   def applyBatch(target: DataFrame, updates: DataFrame, keys: Seq[String],
-                 opCol: String, deleteMarker: String): DataFrame = {
-    val survivors = target.join(broadcast(updates.select(keys.map(col): _*)),
-      keys, "left_anti")
+                 opCol: String, deleteMarker: String,
+                 keyRows: Option[Seq[Row]] = None): DataFrame = {
+    val touched = keyRows match {
+      case Some(rows) =>
+        updates.sparkSession.createDataFrame(rows.asJava,
+          StructType(keys.map(updates.schema(_))))
+      case None => updates.select(keys.map(col): _*)
+    }
+    val survivors = target.join(broadcast(touched), keys, "left_anti")
     survivors.unionByName(updates.filter(col(opCol) =!= deleteMarker).drop(opCol))
   }
 

@@ -6,7 +6,7 @@ import java.util.Properties
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types
@@ -25,9 +25,14 @@ trait MergeSink {
   /** @param batch compacted slice: exactly one row per key
     * @param keyCol equality merge key column name
     * @param opCol  op column; rows with op == deleteMarker remove keys
+    * @param keys   the batch's `keyCol` values when the caller already
+    *               holds them on the driver (the pipeline's key pass);
+    *               a sink may use them instead of a pass over `batch`,
+    *               or ignore them
     */
   def merge(db: String, tb: String, batch: DataFrame,
-            keyCol: String, opCol: String, deleteMarker: String): Unit
+            keyCol: String, opCol: String, deleteMarker: String,
+            keys: Option[Seq[Any]] = None): Unit
 
   /** Exactly-once variant: apply the batch only if (pipelineId, batchId,
     * target) has not been applied before. The default forwards to
@@ -39,8 +44,9 @@ trait MergeSink {
     */
   def mergeOnce(pipelineId: String, batchId: Long,
                 db: String, tb: String, batch: DataFrame,
-                keyCol: String, opCol: String, deleteMarker: String): Unit =
-    merge(db, tb, batch, keyCol, opCol, deleteMarker)
+                keyCol: String, opCol: String, deleteMarker: String,
+                keys: Option[Seq[Any]] = None): Unit =
+    merge(db, tb, batch, keyCol, opCol, deleteMarker, keys)
 }
 
 /** Warehouse SQL dialect for the stage-table merge transaction. */
@@ -234,8 +240,10 @@ final class JdbcMergeSink(url: String, props: Properties,
     try rs.next() finally rs.close()
   }
 
+  /** The stage load reads `batch` anyway, so `keys` is ignored. */
   def merge(db: String, tb: String, batch: DataFrame,
-            keyCol: String, opCol: String, deleteMarker: String): Unit =
+            keyCol: String, opCol: String, deleteMarker: String,
+            keys: Option[Seq[Any]]): Unit =
     mergeImpl(None, db, tb, batch, keyCol, opCol, deleteMarker)
 
   /** Ledger-gated exactly-once: the applied-batch record commits IN THE
@@ -245,7 +253,8 @@ final class JdbcMergeSink(url: String, props: Properties,
     */
   override def mergeOnce(pipelineId: String, batchId: Long,
                          db: String, tb: String, batch: DataFrame,
-                         keyCol: String, opCol: String, deleteMarker: String): Unit =
+                         keyCol: String, opCol: String, deleteMarker: String,
+                         keys: Option[Seq[Any]]): Unit =
     mergeImpl(Some((pipelineId, batchId)), db, tb, batch, keyCol, opCol, deleteMarker)
 
   private val LedgerTable = "graft_applied_batches"
@@ -442,10 +451,17 @@ final class JdbcMergeSink(url: String, props: Properties,
   * column) differ from the target's fails the merge before anything is
   * written.
   *
+  * Key relation: the anti-join broadcasts the batch's keys. Given
+  * `keys` (the pipeline passes each table's keys from its one key
+  * pass), the broadcast is a driver-local relation of those values,
+  * so no merge plan re-scans the batch for them; without `keys` it is
+  * `batch.select(keyCol)`, as for a direct call.
+  *
   * At real scale the same semantics come from a transactional table
   * format; the plan shape (broadcast anti-join) is the scalable one for
-  * the CDC regime — batch ≪ target. The broadcast is explicit, so a
-  * bulk BACKFILL batch larger than driver memory should go through
+  * the CDC regime — batch ≪ target. Either way every key of the batch
+  * is held on the driver, so driver memory bounds a batch's key count:
+  * a bulk BACKFILL batch larger than that should go through
   * `Trigger.AvailableNow` rate limiting (many small batches) or a
   * plain-join rewrite, not one giant batch.
   */
@@ -454,7 +470,8 @@ final class ParquetMergeSink(rootDir: String) extends MergeSink {
   def targetPath(db: String, tb: String) = s"$rootDir/$db/$tb"
 
   def merge(db: String, tb: String, batch: DataFrame,
-            keyCol: String, opCol: String, deleteMarker: String): Unit = {
+            keyCol: String, opCol: String, deleteMarker: String,
+            keys: Option[Seq[Any]]): Unit = {
     val spark = batch.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
     val path = new Path(targetPath(db, tb))
@@ -473,7 +490,7 @@ final class ParquetMergeSink(rootDir: String) extends MergeSink {
           new Footer(first.getPath, footer),
           new ParquetToSparkSchemaConverter(spark.sessionState.conf))
         Merge.applyBatch(spark.read.schema(schema).parquet(path.toString),
-          batch, Seq(keyCol), opCol, deleteMarker)
+          batch, Seq(keyCol), opCol, deleteMarker, keys.map(_.map(Row(_))))
       case None => batch.filter(col(opCol) =!= deleteMarker).drop(opCol)
     }
     val files = Layout.fileCount(

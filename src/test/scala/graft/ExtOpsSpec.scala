@@ -854,6 +854,36 @@ class ExtOpsSpec extends AnyFunSuite {
     assert(corpus == Set(1L, 2L, 3L, 4L, 5L, 6L, 12L), s"corpus $corpus")
   }
 
+  test("maintainLadder folds doc_shingles id-sorted: the folded files " +
+      "hold disjoint id ranges") {
+    import spark.implicits._
+    import graft.ext.IncrementalDedup
+    val root = java.nio.file.Files.createTempDirectory("graft_ladsort").toString
+    // three committed partitions with interleaved ids, and no postings
+    // tree, so no reaper rewrite re-sorts the fold afterwards
+    for (b <- 0 until 3)
+      (0 until 600).map(i => (3L * i + b, 4, Seq(i.toLong, b.toLong)))
+        .toDF("id", "m", "shs").coalesce(1)
+        .write.parquet(s"$root/doc_shingles/batch=$b")
+    def parts(dir: String): Seq[java.io.File] =
+      new java.io.File(dir).listFiles().toSeq
+        .filter(f => f.isFile && f.getName.startsWith("part-"))
+    val bytes = (0 until 3).flatMap(b => parts(s"$root/doc_shingles/batch=$b"))
+      .map(_.length).sum
+    val folded = IncrementalDedup.maintainLadder(spark, root,
+      committedBelow = 3L, targetBytes = bytes / 4)
+    assert(folded("doc_shingles") == 3, s"fold counts $folded")
+    val files = parts(s"$root/doc_shingles/batch=-1")
+    assert(files.size > 1, s"fold wrote ${files.size} file(s)")
+    val ranges = files.map { f =>
+      val r = spark.read.parquet(f.getPath).agg(min("id"), max("id")).head()
+      (r.getLong(0), r.getLong(1))
+    }.sorted
+    assert(ranges.zip(ranges.tail).forall { case ((_, hi), (lo, _)) => hi < lo },
+      s"overlapping id ranges: $ranges")
+    assert(spark.read.parquet(s"$root/doc_shingles").count() == 1800)
+  }
+
   test("LadderRungMonitor: per-rung drop-rate CUSUM over observe " +
       "counters catches an injected url-drop spike, no extra scans") {
     import spark.implicits._

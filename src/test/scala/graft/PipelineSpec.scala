@@ -3,12 +3,13 @@ package graft
 import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.envelope.PgCdc
 import graft.pipeline.CdcPipeline
-import graft.sink.ParquetMergeSink
+import graft.sink.{MergeSink, ParquetMergeSink}
 
 /** End-to-end micro-batch pipeline test: MemoryStream of Debezium-PG
   * envelope JSON → CdcPipeline → ParquetMergeSink, verifying multi-table
@@ -142,16 +143,18 @@ class PipelineSpec extends AnyFunSuite {
     var failures = 0
     val flaky = new graft.sink.MergeSink {
       def merge(db: String, tb: String, batch: org.apache.spark.sql.DataFrame,
-                keyCol: String, opCol: String, deleteMarker: String): Unit =
-        real.merge(db, tb, batch, keyCol, opCol, deleteMarker)
+                keyCol: String, opCol: String, deleteMarker: String,
+                keys: Option[Seq[Any]]): Unit =
+        real.merge(db, tb, batch, keyCol, opCol, deleteMarker, keys)
       override def mergeOnce(pid: String, bid: Long, db: String, tb: String,
                              batch: org.apache.spark.sql.DataFrame, keyCol: String,
-                             opCol: String, deleteMarker: String): Unit = {
+                             opCol: String, deleteMarker: String,
+                             keys: Option[Seq[Any]]): Unit = {
         if (tb == "items" && failures == 0) {
           failures += 1
           throw new RuntimeException("transient warehouse hiccup")
         }
-        real.mergeOnce(pid, bid, db, tb, batch, keyCol, opCol, deleteMarker)
+        real.mergeOnce(pid, bid, db, tb, batch, keyCol, opCol, deleteMarker, keys)
       }
     }
     val pipeline = new CdcPipeline(PgCdc, flaky, tableParallelism = 1,
@@ -713,5 +716,120 @@ class PipelineSpec extends AnyFunSuite {
       new java.io.File(dir).list().filterNot(_.startsWith(".")).toSet
     assert(visible(root) == Set("shop"))
     assert(visible(s"$root/shop") == Set("t"))
+  }
+
+  /** A sink that records the tables it was asked to merge, before
+    * forwarding to `real`. */
+  final class RecordingSink(real: MergeSink) extends MergeSink {
+    val merged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    def merge(db: String, tb: String, batch: DataFrame, keyCol: String,
+              opCol: String, deleteMarker: String, keys: Option[Seq[Any]]): Unit = {
+      merged.add(s"$db.$tb")
+      real.merge(db, tb, batch, keyCol, opCol, deleteMarker, keys)
+    }
+  }
+
+  test("empty and all-unroutable batches: no admission call, no sink target, " +
+      "0 rows and 0 tables, with and without a DLQ hook") {
+    import spark.implicits._
+    // pipeline on `DataFrame` (value, offset) → report, with the hook calls
+    // it made and the tables it merged
+    def run(withDlq: Boolean, rows: Seq[(String, Long)]) = {
+      val root = Files.createTempDirectory("graft_sink_empty").toString
+      val sink = new RecordingSink(new ParquetMergeSink(root))
+      val dlqRows = new java.util.concurrent.atomic.AtomicLong(-1L)
+      val admitted = new java.util.concurrent.atomic.AtomicInteger(0)
+      val pipeline = new CdcPipeline(PgCdc, sink, tiebreaker = Some("offset"),
+        dlq = if (withDlq) Some((bad: DataFrame, _: Long) => dlqRows.set(bad.count()))
+              else None,
+        admission = Some { (df: DataFrame, _: Long) =>
+          admitted.incrementAndGet()
+          val p = df.persist(); p.count(); p
+        })
+      val report = pipeline.processBatch(rows.toDF("value", "offset"), 0L)
+      assert(new java.io.File(root).list().isEmpty, s"sink root written: $report")
+      (report, dlqRows.get, admitted.get, sink.merged.size)
+    }
+    val pkless = pgEvent("t", 0, 10L, "c", "nokey").replace("""\"id\": 0, """, "")
+    val unroutable = Seq((pkless, 0L), ("{not json", 1L))
+    for (withDlq <- Seq(false, true)) {
+      val (empty, emptyDlq, emptyAdmits, emptyMerges) = run(withDlq, Nil)
+      assert(empty.compactedRows == 0 && empty.tables == 0, s"dlq=$withDlq: $empty")
+      assert(emptyDlq == -1L && emptyAdmits == 0 && emptyMerges == 0,
+        s"dlq=$withDlq: empty batch called dlq=$emptyDlq admission=$emptyAdmits " +
+          s"merges=$emptyMerges")
+      if (withDlq) assert(empty.dlqRows == 0, s"$empty")
+      val (bad, badDlq, badAdmits, badMerges) = run(withDlq, unroutable)
+      assert(bad.compactedRows == 0 && bad.tables == 0, s"dlq=$withDlq: $bad")
+      assert(badAdmits == 0 && badMerges == 0, s"dlq=$withDlq: $bad")
+      if (withDlq) assert(badDlq == 2 && bad.dlqRows == 2, s"dlq wrote $badDlq: $bad")
+    }
+  }
+
+  test("one key pass: a 3-table batch runs at most 3 jobs outside its table " +
+      "merges, and no merge plan broadcasts a scan of the compacted cache") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val sc = spark.sparkContext
+    val root = Files.createTempDirectory("graft_sink_jobs").toString
+    val group = s"graft-keypass-${java.util.UUID.randomUUID()}"
+    val mergeGroup = s"$group-merge"
+    // the pool threads the fan-out creates inherit the batch's job
+    // group; each table merge moves its own thread to `mergeGroup`
+    val real = new ParquetMergeSink(root)
+    val sink = new MergeSink {
+      def merge(db: String, tb: String, batch: DataFrame, keyCol: String,
+                opCol: String, deleteMarker: String, keys: Option[Seq[Any]]): Unit = {
+        sc.setJobGroup(mergeGroup, "table merge")
+        try real.merge(db, tb, batch, keyCol, opCol, deleteMarker, keys)
+        finally sc.setJobGroup(group, "batch")
+      }
+    }
+    def pipeline(sink: MergeSink) = new CdcPipeline(PgCdc, sink,
+      tableParallelism = 3, tiebreaker = Some("offset"))
+    def batch(b: Int) = Seq("users", "items", "orders").flatMap { t =>
+      Seq(pgEvent(t, 1, 10L * b, "u", s"$t$b"), pgEvent(t, b + 2, 10L * b, "c", s"x$b"),
+        pgEvent(t, 2, 10L * b + 1, if (b == 0) "c" else "d", "y"))
+    }.zipWithIndex.map { case (v, i) => (v, 100L * b + i) }.toDF("value", "offset")
+    pipeline(real).processBatch(batch(0), 0L) // the targets exist from here on
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.TestListenerBus.drain(sc)
+    spark.listenerManager.register(listener)
+    val t0 = System.nanoTime()
+    val report = try {
+      sc.setJobGroup(group, "batch")
+      try pipeline(sink).processBatch(batch(1), 1L) finally sc.clearJobGroup()
+    } finally {
+      org.apache.spark.TestListenerBus.drain(sc)
+      spark.listenerManager.unregister(listener)
+    }
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(report.tables == 3 && report.compactedRows == 9, s"$report")
+    val outside = sc.statusTracker.getJobIdsForGroup(group).length
+    val inside = sc.statusTracker.getJobIdsForGroup(mergeGroup).length
+    info(f"$outside jobs outside the table merges, $inside inside, batch $secs%.1f s")
+    val helper = new AdaptiveSparkPlanHelper {}
+    val cacheBroadcasts = plans.toArray(Array.empty[SparkPlan]).toSeq.flatMap { p =>
+      helper.collect(p) { case b: BroadcastExchangeExec => b }
+        .filter(b => helper.collect(b) { case s: InMemoryTableScanExec => s }.nonEmpty)
+    }
+    assert(plans.size > 0, "the listener saw no plan")
+    assert(cacheBroadcasts.isEmpty, s"${cacheBroadcasts.size} merge plans broadcast " +
+      s"the compacted cache:\n${cacheBroadcasts.mkString("\n")}")
+    assert(inside > 0, "the table merges ran no job in their group")
+    assert(outside <= 3,
+      f"$outside jobs outside the table merges ($inside inside), batch took $secs%.1f s")
+    val users = spark.read.parquet(s"$root/shop/users")
+      .select("pk", "payload").as[(String, String)].collect().toMap
+    assert(users.keySet == Set("1", "3") && users("1").contains("users1"), s"$users")
   }
 }
