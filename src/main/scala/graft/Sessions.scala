@@ -15,6 +15,13 @@ import org.apache.spark.sql.SparkSession
   *    (nanos-long AND the round-10 TIMESTAMP(MICROS)/NTZ form).
   */
 object Sessions {
+
+  /** `spark.sql.parquet.pushdown.inFilterThreshold` for every session
+    * this project builds (see [[local]] for why 1024): parquet-mr
+    * evaluates a pushed IN's OR-chain recursively, and a few thousand
+    * keys overflow the task stack. */
+  val ParquetInFilterThreshold: Int = 1024
+
   def local(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -41,7 +48,8 @@ object Sessions {
       // small-frontier case at a recursion depth far from the limit;
       // larger closures were already the regime the frontier guards
       // hand to the full path.
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1024")
+      .config("spark.sql.parquet.pushdown.inFilterThreshold",
+        ParquetInFilterThreshold.toString)
       // streaming state on RocksDB: keyed state (cross-batch compaction,
       // corpus dedup, quotas, sketches) must be disk-backed with bounded
       // heap at real key cardinalities — the in-memory default holds

@@ -120,7 +120,7 @@ final case class AdmissionConf(
       * keys must be set for the gate to run. IN-BATCH url variants are
       * deliberately NOT collapsed here (the compacted batch is unique
       * per (db, tb, pk); cross-document collapse is the dedup loop's
-      * job — [[graft.ext.IncrementalDedup.admitBatchLadder]]). */
+      * job — [[graft.ext.IngestLadder.admitBatch]]). */
     url_expr: Option[String] = None,
     url_index_dir: Option[String] = None)
 

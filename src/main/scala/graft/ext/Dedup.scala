@@ -386,7 +386,7 @@ object Dedup {
     * standard operator contract (see [[Materialize]]): release with
     * `unpersist`/`clearCache` after consuming the verdicts. A
     * long-running INGEST loop should use
-    * [[IncrementalDedup.admitBatchLadder]] instead, which materializes
+    * [[IngestLadder.admitBatch]] instead, which materializes
     * durably and releases its own caches per tick.
     *
     * NULL addresses pass the url rung untouched (rows whose `urlCol` —
@@ -910,7 +910,7 @@ object Dedup {
   /** Steady-state JACCARD probe: score an arriving batch's postings
     * against a STORED corpus postings index — [[containmentProbe]]'s
     * resemblance sibling, and the near rung of the composed admission
-    * ladder ([[IncrementalDedup.admitBatchLadder]]). Scoring is
+    * ladder ([[IngestLadder.admitBatch]]). Scoring is
     * IDENTICAL to [[jaccardPairs]] (same m-from-postings, same
     * length-ratio prune — exact, since J(A,B) ≤ min/max — same 4dp
     * rounding before the τ cut), so probe-over-stored-index ≡

@@ -61,9 +61,8 @@ object IncrementalDedup {
       .select(col("id"))
     // 2. cross-batch: drop anything near an indexed signature (other
     // batches' partitions only — the replay contract above)
-    val vsIndexDrops = indexIfExists(spark, indexDir) match {
-      case Some(index) => Dedup.simhashAgainst(sigs,
-          index.filter(col("batch") =!= batchId), maxDist)
+    val vsIndexDrops = Layout.priorPartitions(spark, indexDir, batchId) match {
+      case Some(index) => Dedup.simhashAgainst(sigs, index, maxDist)
         .select(col("batch_id").as("id")).distinct()
       case None => inBatchDrops.limit(0)
     }
@@ -151,10 +150,9 @@ object IncrementalDedup {
     // Computed before the in-batch pass because its drops also disqualify
     // docs from serving as in-batch HOSTS (used twice below).
     val vsIndexDrops = Materialize.multiScan(
-      indexIfExists(spark, postingsDir) match {
+      Layout.priorPartitions(spark, postingsDir, batchId) match {
         case Some(index) => Dedup.containmentProbe(posts,
-            index.filter(col("batch") =!= batchId)
-              .select(col("id"), col("m"), col("sh64")),
+            index.select(col("id"), col("m"), col("sh64")),
             tau, maxDocFreq)
           .filter(col("cont_batch") >= tau)
           .select(col("batch_id").as("id")).distinct()
@@ -247,10 +245,9 @@ object IncrementalDedup {
     // (that would turn the whole redelivered batch away and lose it),
     // so the probe reads only OTHER batches' index rows.
     val admittedFirsts = Materialize.multiScan(
-      indexIfExists(spark, indexDir) match {
+      Layout.priorPartitions(spark, indexDir, batchId) match {
         case Some(ix) => firsts.join(
-          ix.filter(col("batch") =!= batchId)
-            .select(col("url_key").as("__url_key")), Seq("__url_key"),
+          ix.select(col("url_key").as("__url_key")), Seq("__url_key"),
           "left_anti")
         case None => firsts
       })
@@ -274,259 +271,6 @@ object IncrementalDedup {
     // every KEYED batch row beyond its key's first is an in-batch
     // variant; NULL-key rows are admitted outside the key accounting
     (nAdmitted, nRows - nNull - nKeys, nKeys - (nAdmitted - nNull))
-  }
-
-  /** The COMPOSED steady-state admission ladder — the streaming twin of
-    * [[Dedup.ladder]], and the shape a 100 TB crawl actually ingests
-    * through: ONE batch pass chains the three rungs over their
-    * PERSISTENT indexes, cheapest signal first, each rung seeing only
-    * the previous rung's survivors, and emits the batch's per-doc
-    * VERDICT relation (id, dropped_at ∈ {url, exact, near, NULL}) at
-    * ingest time — the provenance a curation audit replays later is
-    * written when the decision is made, not reconstructed.
-    *
-    * Rungs, per batch (first arrival wins across batches, minimum id
-    * within one):
-    *  1. `url`   — canonical-key collapse ([[TextOps.canonicalUrl]]):
-    *               in-batch non-minimum variants drop; any key already
-    *               in the url index drops whole. No text is read. NULL
-    *               addresses/keys PASS and never enter the index (the
-    *               gate-0 / [[admitBatchUrl]] convention — a NULL
-    *               address identifies no page).
-    *  2. `exact` — content-fingerprint collapse
-    *               ([[TextOps.fingerprint]]) over url survivors:
-    *               in-batch non-minimum copies drop; fingerprints
-    *               already in the fp index drop. 32-byte digests move,
-    *               never documents.
-    *  3. `near`  — shingle-Jaccard over exact survivors: cross-batch
-    *               FIRST ([[Dedup.jaccardProbe]] vs the stored postings
-    *               index, J ≥ τ drops — first arrival wins), then
-    *               in-batch pairs among the PROBE SURVIVORS
-    *               (a self-[[Dedup.jaccardProbe]]) → connected
-    *               components → non-minimum members drop. Hosts are
-    *               probe survivors only — the
-    *               [[admitBatchContainment]] discipline: a drop must be
-    *               vouched for by content that actually reaches the
-    *               corpus.
-    *
-    * What each index stores (the rung's own survivors, one level up
-    * from finally-admitted — this is what makes rung PROVENANCE stable
-    * across batches):
-    *  - url index: canonical keys that passed the url rung. A later
-    *    crawl of that key is redundant even if the page itself was
-    *    dropped at a deeper rung — its content is (or is duplicated by)
-    *    corpus content.
-    *  - fp index: fingerprints that passed the exact rung, same logic
-    *    (an exact copy of a near-dropped doc would re-drop at near;
-    *    the fp index drops it one rung earlier, before tokenization).
-    *  - postings index: (id, m, sh64) of ADMITTED docs only — the near
-    *    rung's τ-similarity justification must point at corpus content
-    *    ([[admitBatch]]'s contract).
-    *
-    * BATCH-vs-COMPOSED equivalence (spec-pinned both ways): feeding the
-    * corpus as ONE batch through this ladder is verdict-identical to
-    * [[Dedup.ladder]] (empty indexes make every rung's in-batch pass
-    * exactly the batch rung). Across MULTIPLE ticks with ids assigned
-    * in arrival order, verdicts still match the batch ladder rung for
-    * rung UNLESS a near-dup chain crosses ticks THROUGH a dropped doc
-    * (x←tick1 admitted, y~x dropped, z~y in tick 2 but z≁x): the batch
-    * ladder's connected components drop z transitively, while this
-    * ladder ADMITS z — only corpus content can vouch for a drop, and
-    * nothing in the corpus resembles z. That divergence is the
-    * documented admission semantics, not an approximation.
-    *
-    * REPLAY IDEMPOTENCE: every output (corpus slice, three index
-    * slices, verdict slice) lands under `<root>/<name>/batch=<batchId>`
-    * with Overwrite, and every cross-batch probe excludes the tick's
-    * own partition — the [[admitBatchUrl]] recovery contract: a
-    * redelivered batch recomputes the same verdicts and overwrites in
-    * place, never duplicating corpus rows or turning itself away.
-    *
-    * At 100 TB: rung 1 shuffles tens-of-byte url keys, rung 2 32-byte
-    * digests, and only rung 3 touches postings — over the corpus AFTER
-    * the cheap rungs shrank it, probed against an index that never
-    * re-reads text (bucket it by sh64, dial `maxDocFreq` at probe
-    * time). Verdicts are ids + a tag.
-    *
-    * The near rung's DROPPED docs keep their postings too, in a
-    * separate `postings_dropped/` subtree the PROBES never read: they
-    * are the evidence base [[reconcileNear]] replays to close the
-    * documented cross-tick divergence (a dropped doc's shingles are the
-    * missing middle of the transitive chain). Probe semantics are
-    * unchanged — only corpus content vouches for a drop at ingest time.
-    *
-    * @param root    layout root: `corpus/`, `url_index/`, `fp_index/`,
-    *                `postings/`, `postings_dropped/`, `verdicts/`
-    *                subtrees, each partitioned by batch (fold them
-    *                periodically with [[maintainLadder]])
-    * @param urlCol  None skips the url rung (corpora without addresses)
-    * @param monitor optional per-rung drop-rate drift monitor
-    *                ([[LadderRungMonitor]]): rung drop counts are
-    *                computed INSIDE the verdict write via
-    *                `Dataset.observe` — zero extra scans — and advance
-    *                the monitor's per-rung CUSUM states
-    * @return the batch's verdict relation (id, dropped_at), read back
-    *         from its just-written partition (durable provenance; no
-    *         cache-lifetime contract for the caller)
-    */
-  def admitBatchLadder(batch: DataFrame, idCol: String, textCol: String,
-                       urlCol: Option[String], root: String,
-                       n: Int, tau: Double, batchId: Long,
-                       maxDocFreq: Int = Int.MaxValue,
-                       monitor: Option[LadderRungMonitor] = None): DataFrame = {
-    val spark = batch.sparkSession
-    // a crashed applyReconcile may have left the postings trees one
-    // rename short or a postings→evidence move half-done — finish both
-    // before probing ([[recoverLadderEntry]])
-    recoverLadderEntry(spark, root)
-    // complete-from-genesis test for the shingle-count sidecar, taken
-    // BEFORE this tick writes anything
-    val freshRoot = !Layout.hasParquetData(spark, s"$root/postings") &&
-      !Layout.hasParquetData(spark, s"$root/postings_dropped")
-    val w = org.apache.spark.sql.expressions.Window
-    val base = Materialize.multiScan(batch)
-    def others(dir: String): Option[DataFrame] =
-      indexIfExists(spark, dir).map(_.filter(col("batch") =!= batchId))
-    def empty: DataFrame = base.select(col(idCol).as("id")).limit(0)
-
-    // rung 1: url — key collapse + stored-key probe, no text read
-    val (urlDrops, urlKeysKept) = urlCol match {
-      case None => (Materialize.multiScan(empty), None)
-      case Some(u) =>
-        val keyed = base.select(col(idCol).as("id"),
-          TextOps.canonicalUrl(col(u)).as("url_key"))
-        val withKeep = keyed.withColumn("keep",
-          min(col("id")).over(w.partitionBy(col("url_key"))))
-        // stored-key probe, bloom-pruned when a maintenance window has
-        // built the sidecar ([[LadderBloom]] — verdict-identical, the
-        // filter only skips keys that cannot be in the covered index)
-        val seen = others(s"$root/url_index") match {
-          case Some(ix) => LadderBloom.seenIds(keyed, "url_key", "id",
-            ix, root, "url_index", batchId,
-            LadderBloom.read(spark, root, "url_index"))
-          case None => empty
-        }
-        // NULL keys pass the rung (the gate-0 / [[Dedup.ladder]]
-        // convention): a NULL address carries no crawl provenance, and
-        // the window would otherwise fold every NULL-key row into one
-        // partition and verdict all but one 'url'. The index probe is a
-        // plain equi-join, so NULL keys never match stored keys either.
-        val drops = Materialize.multiScan(
-          withKeep.filter(col("url_key").isNotNull &&
-              col("id") =!= col("keep")).select(col("id"))
-            .unionByName(seen).distinct())
-        // NULL keys stay out of the index too: they identify no page,
-        // so they can never vouch for turning a later crawl away
-        val kept = withKeep
-          .filter(col("url_key").isNotNull && col("id") === col("keep"))
-          .join(drops, Seq("id"), "left_anti")
-          .select(col("url_key"), col("id").as("keep_id"))
-        (drops, Some(kept))
-    }
-    val s1 = Materialize.multiScan(
-      base.join(urlDrops, base(idCol) === urlDrops("id"), "left_anti"))
-
-    // rung 2: exact — fingerprint collapse + stored-fp probe. NULL
-    // text ⇒ NULL fingerprint ⇒ PASS, and NULL fps stay out of the
-    // index (the url rung's NULL-key convention — the window would
-    // otherwise collapse every text-less row onto one survivor)
-    val fps = s1.select(col(idCol).as("id"),
-      TextOps.fingerprint(col(textCol)).as("fp"))
-    val withKeepFp = fps.withColumn("keep",
-      min(col("id")).over(w.partitionBy(col("fp"))))
-    val seenFp = others(s"$root/fp_index") match {
-      case Some(ix) => LadderBloom.seenIds(fps, "fp", "id", ix,
-        root, "fp_index", batchId,
-        LadderBloom.read(spark, root, "fp_index"))
-      case None => empty
-    }
-    val exactDrops = Materialize.multiScan(
-      withKeepFp.filter(col("fp").isNotNull && col("id") =!= col("keep"))
-        .select(col("id"))
-        .unionByName(seenFp).distinct())
-    val fpKept = withKeepFp
-      .filter(col("fp").isNotNull && col("id") === col("keep"))
-      .join(exactDrops, Seq("id"), "left_anti")
-      .select(col("fp"), col("id").as("keep_id"))
-    val s2 = Materialize.multiScan(
-      s1.join(exactDrops, s1(idCol) === exactDrops("id"), "left_anti"))
-
-    // rung 3: near — stored-postings probe first (first arrival wins),
-    // then in-batch components among the probe survivors. With a bloom
-    // sidecar the covered index is probed by the pruned batch postings
-    // only (dropping never-matching rows is exact — [[LadderBloom]])
-    val posts = Materialize.multiScan(
-      Dedup.shinglePostings(s2, idCol, textCol, n))
-    // hot-shingle dial applied ONCE over the full own-batch-excluded
-    // index BEFORE the sidecar's covered/tail split — per-slice
-    // frequencies would differ from the sidecar-less probe's
-    // ([[Dedup.dropHotPostingsCached]]: the hot set is materialized so
-    // the covered and tail branches don't re-run the full-index
-    // aggregation); the per-pair probes below therefore run undialed
-    val storedNear = others(s"$root/postings")
-      .map(ix => Dedup.dropHotPostingsCached(ix, maxDocFreq))
-    val vsIndexNear = Materialize.multiScan(
-      storedNear match {
-        case Some((ix, _)) =>
-          val (ps, _) = LadderBloom.postingsProbes(posts, ix, root,
-            batchId, LadderBloom.read(spark, root, "postings"))
-          if (ps.isEmpty) empty
-          else ps.map { case (b, i) => Dedup.jaccardProbe(b,
-              i.select(col("id"), col("m"), col("sh64")), tau)
-            .select(col("batch_id").as("id")) }
-            .reduce(_ unionByName _).distinct()
-        case None => empty
-      })
-    val hostPosts = posts.join(vsIndexNear,
-      posts("id") === vsIndexNear("id"), "left_anti")
-    val inBatchNear = Dedup.connectedComponents(
-        Dedup.jaccardProbe(hostPosts, hostPosts, tau)
-          .filter(col("batch_id") < col("corpus_id"))
-          .select(col("batch_id").as("id_a"), col("corpus_id").as("id_b")))
-      .filter(col("id") =!= col("cluster")).select(col("id"))
-    val nearDrops = Materialize.multiScan(
-      inBatchNear.unionByName(vsIndexNear.select(col("id"))).distinct())
-    val admitted = Materialize.multiScan(
-      s2.join(nearDrops, s2(idCol) === nearDrops("id"), "left_anti"))
-
-    // persist: verdicts FIRST (pure provenance), then indexes, then the
-    // corpus — any interruption replays idempotently (own partitions
-    // are excluded from every probe above and overwritten here)
-    def part(sub: String) = s"$root/$sub/batch=$batchId"
-    val verdicts = base.select(col(idCol).as("id"))
-      .join(urlDrops.select(col("id"), lit("url").as("__u")), Seq("id"), "left")
-      .join(exactDrops.select(col("id"), lit("exact").as("__e")), Seq("id"), "left")
-      .join(nearDrops.select(col("id"), lit("near").as("__n")), Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("__u"), col("__e"), col("__n")).as("dropped_at"))
-    // rung drop counts ride the verdict write itself (Dataset.observe —
-    // computed inside the write's pass, zero extra scans or actions)
-    val obs = monitor.map(m => (m, org.apache.spark.sql.Observation()))
-    val verdictsOut = obs.fold(verdicts) { case (m, o) =>
-      verdicts.observe(o, count(lit(1)).as("n"),
-        m.rungs.map(r => count(when(col("dropped_at") === r, 1))
-          .as(s"n_$r")): _*)
-    }
-    verdictsOut.write.mode(SaveMode.Overwrite).parquet(part("verdicts"))
-    obs.foreach { case (m, o) => m.tick(batchId, o.get) }
-    urlKeysKept.foreach(_.write.mode(SaveMode.Overwrite)
-      .parquet(part("url_index")))
-    fpKept.write.mode(SaveMode.Overwrite).parquet(part("fp_index"))
-    posts.join(admitted, posts("id") === admitted(idCol), "left_semi")
-      .write.mode(SaveMode.Overwrite).parquet(part("postings"))
-    // near-DROPPED docs' postings, for [[reconcileNear]] only (never
-    // probed at ingest): s2 had postings computed, admitted kept theirs
-    // above — the difference is exactly the near rung's drops
-    posts.join(nearDrops, posts("id") === nearDrops("id"), "left_semi")
-      .write.mode(SaveMode.Overwrite).parquet(part("postings_dropped"))
-    // shingle-count sidecar: admitted ∪ near drops = every doc whose
-    // postings the two writes above persisted = all of posts here
-    writeTickCounts(posts, root, batchId, freshRoot)
-    admitted.write.mode(SaveMode.Overwrite).parquet(part("corpus"))
-    (Seq(base, urlDrops, s1, exactDrops, s2, posts, vsIndexNear,
-      nearDrops, admitted) ++ storedNear.flatMap(_._2))
-      .foreach(_.unpersist())
-    spark.read.parquet(part("verdicts"))
   }
 
   /** One DOMAIN-QUOTA admission tick — the per-registrant volume cap a
@@ -585,8 +329,9 @@ object IncrementalDedup {
     // does, not by the subset approximation
     val doms = Materialize.multiScan(
       resolveRegDomains(base, idCol, host, suffixes, pslRules))
-    val prior = indexIfExists(spark, s"$root/domain_counts") match {
-      case Some(ix) => ix.filter(col("batch") =!= batchId)
+    val prior = Layout.priorPartitions(spark, s"$root/domain_counts",
+        batchId) match {
+      case Some(ix) => ix
         .groupBy(col("reg_domain")).agg(sum(col("n")).as("prior"))
       case None => doms.select(col("reg_domain"), lit(0L).as("prior"))
         .limit(0)
@@ -652,15 +397,6 @@ object IncrementalDedup {
     }
   }
 
-  private def indexIfExists(spark: SparkSession,
-                            indexDir: String): Option[DataFrame] =
-    // data-file probe, not a bare directory probe: a footer-less tree
-    // (all-rejected first batch) must read as "no index yet", not
-    // throw 'Unable to infer schema' forever after
-    if (Layout.hasParquetData(spark, indexDir))
-      Some(spark.read.parquet(indexDir))
-    else None
-
   /** Periodic index maintenance: fold the corpus and signature trees'
     * COMMITTED per-batch partitions into one consolidated `batch=-1`
     * partition each ([[Layout.foldBatchPartitions]] — the
@@ -682,8 +418,8 @@ object IncrementalDedup {
     (Layout.foldBatchPartitions(spark, corpusDir, committedBelow, targetBytes),
       Layout.foldBatchPartitions(spark, indexDir, committedBelow, targetBytes))
 
-  /** The subtrees one [[admitBatchLadder]] / [[IngestLadder.admitBatch]]
-    * / [[admitBatchDomainQuota]] tick writes — the complete fold
+  /** The subtrees one [[IngestLadder.admitBatch]] /
+    * [[admitBatchDomainQuota]] tick writes — the complete fold
     * surface for [[maintainLadder]] (a subtree a given operator never
     * writes folds 0). `domain_counts` is row-preserving under the
     * fold, so prior-count sums are unchanged by maintenance;
@@ -704,7 +440,7 @@ object IncrementalDedup {
     DocShinglesSubtree -> "id")
 
   /** Ladder-wide index maintenance — [[maintain]]'s contract extended to
-    * EVERY subtree [[admitBatchLadder]] writes (corpus, url_index,
+    * EVERY subtree [[IngestLadder.admitBatch]] writes (corpus, url_index,
     * fp_index, postings, postings_dropped, verdicts): each tick adds one
     * `batch=<id>` partition to each of the six trees, so an unattended
     * ingest loop accumulates 6 partition directories per tick — the
@@ -782,7 +518,7 @@ object IncrementalDedup {
   }
 
   /** Periodic RE-LADDER RECONCILIATION — the batch pass that closes
-    * [[admitBatchLadder]]'s one documented divergence from
+    * [[IngestLadder.admitBatch]]'s one documented divergence from
     * [[Dedup.ladder]]: a near-dup chain crossing ticks THROUGH a dropped
     * doc (x admitted in tick 1; y ~ x dropped; z ~ y arrives later with
     * z ≁ x). The ingest ladder rightly ADMITS z — at ingest time only
@@ -839,11 +575,10 @@ object IncrementalDedup {
       s"no admitted postings under $root/postings — run the ladder first")
     val adm = spark.read.parquet(s"$root/postings")
       .select(col("id"), col("m"), col("sh64"))
-    val all = indexIfExists(spark, s"$root/postings_dropped") match {
-      case Some(d) => adm.unionByName(d.select(col("id"), col("m"),
-        col("sh64")))
-      case None => adm
-    }
+    val dropped = s"$root/postings_dropped"
+    val all = if (!Layout.hasParquetData(spark, dropped)) adm
+      else adm.unionByName(spark.read.parquet(dropped)
+        .select(col("id"), col("m"), col("sh64")))
     val allC = Materialize.multiScan(all)
     val pairs = Dedup.jaccardProbe(allC, allC, tau, maxDocFreq)
       .filter(col("batch_id") < col("corpus_id"))
@@ -928,7 +663,8 @@ object IncrementalDedup {
     * steady-state frontier. */
   val DefaultMaxFrontierKeys: Int = 1 << 18
   /** Keys per pruned point-lookup scan — kept under the session's
-    * parquet inFilterThreshold (1024) so every chunk pushes as a
+    * parquet inFilterThreshold
+    * ([[graft.Sessions.ParquetInFilterThreshold]]) so every chunk pushes as a
     * stats-pruning OR-chain at safe recursion depth. */
   private val PointLookupChunk = 1000
   /** Chunked-union cap: past this many chunks the plan cost outweighs
@@ -1018,7 +754,8 @@ object IncrementalDedup {
       return full(5L)
 
     def treeDf(sub: String, admFlag: Boolean): Option[DataFrame] =
-      indexIfExists(spark, s"$root/$sub").map(_.select(col("id"),
+      Option.when(Layout.hasParquetData(spark, s"$root/$sub"))(
+        spark.read.parquet(s"$root/$sub")).map(_.select(col("id"),
         col("m"), col("sh64"), lit(admFlag).as("__adm"),
         isNewPred(sub).as("__new")))
     val union = trees.flatMap { case (sub, f) => treeDf(sub, f) }
@@ -2180,7 +1917,7 @@ object IncrementalDedup {
   * a re-crawl storm, a near-rung spike a mirror farm, an exact-rung
   * spike a feed replaying itself. One CUSUM ([[DataQuality.cusumTick]])
   * per rung over the rung's drop rate in integer basis points; the
-  * counts arrive from [[IncrementalDedup.admitBatchLadder]]'s verdict
+  * counts arrive from [[IngestLadder.admitBatch]]'s verdict
   * write via `Dataset.observe` — computed inside the write's own pass,
   * zero extra scans, zero extra actions.
   *

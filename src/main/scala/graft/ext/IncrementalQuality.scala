@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * `foreachBatch` family: every arriving document passes the frozen
   * curation gates or is turned away.
   *
-  * The gates are the batch ladder's own scorers with their parameters
+  * The gates ([[IngestLadder.frozenGates]], where their dials are
+  * declared) are the batch ladder's own scorers with their parameters
   * FROZEN at deploy time:
   *
   *   1. the Gopher rule battery ([[Corpus.gopherRules]]) — stateless
@@ -60,48 +61,18 @@ import org.apache.spark.sql.functions._
 object IncrementalQuality {
 
   /** One admission tick (a `foreachBatch` body). Returns
-    * (admitted, dropped); writes survivors (plus their scores) to
+    * (admitted, dropped); writes survivors to
     * `corpusDir/batch=<batchId>`.
     *
-    * @param weights     frozen (bucket, w) quality-classifier table
-    * @param lambda      optional frozen (bucket, lam) DSIR table
-    *                    ([[Corpus.dsirLambda]]); docs at/above
-    *                    `dsirThrX10k` pass
-    * @param thrMilli    quality-logit admission threshold (milli-units
-    *                    per feature, [[Corpus.qualityScore]]'s contract)
-    * @param minWords    Gopher word-count window lower edge (the other
-    *                    rules keep their published defaults)
-    * @param repetition  gate on [[Corpus.repetitionSignals]] too (dials
-    *                    below; published-default maps), completing the
-    *                    batch ladder's rung-1 pairing
-    * @param lm          optional frozen (token, nat10k) unigram LM
-    *                    ([[Corpus.unigramLm]]); docs with mean
-    *                    surprisal at/below `maxMeanSurprisalX10k` pass
-    *                    (the frozen tercile boundary — CCNet keeps the
-    *                    head+middle)
+    * @param gates the frozen battery — build it with
+    *              [[IngestLadder.frozenGates]], the one place its dials
+    *              (weights, DSIR λ, LM ceiling, repetition, C4, …) are
+    *              declared; a doc is admitted when EVERY gate keeps it
     */
   def admitBatch(batch: DataFrame, batchId: Long, idCol: String,
                  textCol: String, corpusDir: String,
-                 weights: DataFrame, nBuckets: Int = 1024,
-                 thrMilli: Long = 0L,
-                 lambda: Option[DataFrame] = None, dsirThrX10k: Long = 0L,
-                 minWords: Int = 50,
-                 stopwords: Seq[String] = Corpus.GopherStopwords,
-                 repetition: Boolean = false,
-                 repTopBpMax: Map[Int, Long] =
-                   Map(2 -> 2000L, 3 -> 1800L, 4 -> 1600L),
-                 repDupBpMax: Map[Int, Long] =
-                   Map(5 -> 1500L, 6 -> 1400L, 7 -> 1300L,
-                       8 -> 1200L, 9 -> 1100L, 10 -> 1000L),
-                 lm: Option[DataFrame] = None,
-                 maxMeanSurprisalX10k: Long = Long.MaxValue,
-                 unseenNat10k: Long = 200000L,
-                 c4: Boolean = false,
-                 c4BadWords: Seq[String] = Seq.empty): (Long, Long) = {
-    val g = gate(batch, idCol, textCol, weights, nBuckets, thrMilli,
-      lambda, dsirThrX10k, minWords, stopwords, repetition,
-      repTopBpMax, repDupBpMax, lm, maxMeanSurprisalX10k, unseenNat10k,
-      c4, c4BadWords)
+                 gates: Seq[IngestLadder.Gate]): (Long, Long) = {
+    val g = gate(batch, idCol, textCol, gates)
     val n = g.pre.count()
     // per-batch directory + Overwrite = replay-idempotent without state
     g.admitted.write.mode(SaveMode.Overwrite)
@@ -114,7 +85,7 @@ object IncrementalQuality {
     (nAdmitted, n - nAdmitted)
   }
 
-  /** The five-gate admission decision over one batch with its caches
+  /** The gated admission decision over one batch with its caches
     * still live — the share point between [[admitBatch]] (standalone
     * corpus-building loop) and the CDC pipeline's admission stage
     * ([[graft.pipeline.QualityAdmission]]). `admitted` = the batch's
@@ -128,85 +99,23 @@ object IncrementalQuality {
   }
 
   private[graft] def gate(batch: DataFrame, idCol: String, textCol: String,
-                 weights: DataFrame, nBuckets: Int,
-                 thrMilli: Long,
-                 lambda: Option[DataFrame], dsirThrX10k: Long,
-                 minWords: Int,
-                 stopwords: Seq[String],
-                 repetition: Boolean,
-                 repTopBpMax: Map[Int, Long],
-                 repDupBpMax: Map[Int, Long],
-                 lm: Option[DataFrame],
-                 maxMeanSurprisalX10k: Long,
-                 unseenNat10k: Long,
-                 c4: Boolean = false,
-                 c4BadWords: Seq[String] = Seq.empty): Gate = {
+                          gates: Seq[IngestLadder.Gate]): Gate = {
     // ONE tokenize pass: the batch is scanned (and normalized+tokenized)
     // once into a spill-safe cache carrying every original column plus
-    // the normalized text and token array; the up-to-five gates and the
-    // final semi-join all read the cache — the r9 form instead started
-    // each gate from `batch`, ~7 source scans (each re-tokenizing) per
-    // tick. The count() populates the cache inside the first job.
+    // the normalized text and token array; every gate and the final
+    // semi-join read the cache — the r9 form instead started each gate
+    // from `batch`, ~7 source scans (each re-tokenizing) per tick
     val pre = Materialize.multiScan(Materialize.spread(batch)
       .withColumn("__iq_t", TextOps.normalized(col(textCol)))
       .withColumn("__iq_ts", TextOps.tokens(col("__iq_t"))))
-    // canonical (id, raw, t, ts) projection the Corpus *On variants read
+    // canonical (id, raw, t, ts) projection the gates read
     val canon = pre.select(col(idCol).as("id"), col(textCol).as("raw"),
       col("__iq_t").as("t"), col("__iq_ts").as("ts"))
     // all scores are doc-local: compute over the batch, intersect
     // the keeps — same composition contract as the batch ladder
-    val gKeep = Corpus.gopherRulesOn(canon, minWords = minWords,
-        maxWords = 100000, stopwords = stopwords)
-      .filter(col("keep")).select(col("id"))
-    // quality and DSIR read ONE hashed-feature stream and collapse in
-    // ONE aggregation: both frozen tables are bucket-keyed broadcasts,
-    // so the per-feature weight and λ ride the same exploded row and
-    // the per-doc sums share a single shuffle — the same integer sums
-    // the separate scorers produce, so the verdicts are identical
-    val feats = Corpus.hashedFeaturesOn(canon, nBuckets)
-    val qKeep = lambda match {
-      case None =>
-        Corpus.qualityScoreFeats(feats, weights, thrMilli)
-          .filter(col("keep")).select(col("id"))
-      case Some(lam) =>
-        feats.join(broadcast(weights), Seq("bucket"), "left")
-          .withColumn("w", coalesce(col("w"), lit(0L)))
-          // λ covers every bucket (inner join always hits)
-          .join(broadcast(lam), Seq("bucket"))
-          .groupBy(col("id"))
-          .agg(count(lit(1)).as("n_features"), sum(col("w")).as("logit"),
-            sum(col("lam")).as("dsir_x10k"))
-          .filter(col("logit") * 1000 >= lit(thrMilli) * col("n_features") &&
-            col("dsir_x10k") >= dsirThrX10k)
-          .select(col("id"))
-    }
-    val keepGq = gKeep.join(qKeep, Seq("id"))
-    val keep0 =
-      if (!repetition) keepGq
-      else keepGq.join(
-        Corpus.repetitionSignalsOn(canon,
-            topNs = Seq(2, 3, 4), dupNs = Seq(5, 6, 7, 8, 9, 10),
-            topBpMax = repTopBpMax, dupBpMax = repDupBpMax)
-          .filter(col("keep")).select(col("id")),
-        Seq("id"))
-    val keepLm = lm.fold(keep0) { table =>
-      keep0.join(
-        Corpus.surprisalAgainstOn(canon, table, unseenNat10k)
-          .filter(col("mean_surprisal_x10k") <= maxMeanSurprisalX10k)
-          .select(col("id")),
-        Seq("id"))
-    }
-    // optional SIXTH gate: the C4 line/page battery — doc-local on the
-    // RAW text (line structure matters, so not the normalized form),
-    // frozen to its dials + blocklist like every other gate
-    val keepIds =
-      if (!c4) keepLm
-      else keepLm.join(
-        Corpus.c4Rules(canon, "id", "raw", c4BadWords)
-          .filter(col("keep")).select(col("id")),
-        Seq("id"))
-    val admitted = pre.join(keepIds, pre(idCol) === keepIds("id"), "left_semi")
-      .drop("__iq_t", "__iq_ts")
-    Gate(pre, admitted, Seq(pre))
+    val kept = gates.map(_._2(canon).select(col("id")))
+      .reduceOption(_.join(_, Seq("id")))
+      .fold(pre)(keep => pre.join(keep, pre(idCol) === keep("id"), "left_semi"))
+    Gate(pre, kept.drop("__iq_t", "__iq_ts"), Seq(pre))
   }
 }

@@ -4,11 +4,12 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The UNIFIED single-pass ingest ladder — r15 shipped two separate
-  * `foreachBatch` admission bodies (the dedup ladder
-  * [[IncrementalDedup.admitBatchLadder]] and the quality stack
-  * [[graft.pipeline.QualityAdmission]]); a production crawl runs BOTH,
-  * which meant two scans, two tokenize passes, and two disjoint verdict
-  * relations over the same batch. This is the one-pass composition —
+  * `foreachBatch` admission bodies (a gate-less dedup ladder and the
+  * quality stack [[graft.pipeline.QualityAdmission]]); a production
+  * crawl runs BOTH, which meant two scans, two tokenize passes, and two
+  * disjoint verdict relations over the same batch. This is the one-pass
+  * composition, and with `gates = Nil` it IS the dedup ladder (the
+  * streaming twin of [[Dedup.ladder]]) —
   * the reference's own architecture is one admission loop per batch
   * (`src/glue_pg_redshift_cdc.py:117-210` runs its whole per-batch
   * pipeline in one body) — with the rungs ordered cheapest-signal-first
@@ -54,15 +55,27 @@ import org.apache.spark.sql.functions._
   * absorb its near-dup and then be dropped itself, losing content that
   * has no remaining representative (spec-pinned divergence fixture).
   *
-  * What each index stores (the rung-survivor principle of
-  * [[IncrementalDedup.admitBatchLadder]], extended across the gates):
-  * `url_index/` keys that passed the url rung; `fp_index/` fingerprints
+  * What each index stores (the rung-survivor principle — each index
+  * holds its own rung's survivors, which keeps rung provenance stable
+  * across batches): `url_index/` keys that passed the url rung;
+  * `fp_index/` fingerprints
   * that passed the exact rung — INCLUDING gate-dropped docs' keys and
   * fps, deliberately: a re-crawl or exact copy of known-bad content is
   * turned away one rung earlier, before any scoring; `postings/` only
   * ADMITTED docs' shingles (near/containment justification must point
   * at corpus content); `postings_dropped/` the near/containment drops'
   * shingles, as [[IncrementalDedup.reconcileNear]] evidence only.
+  *
+  * BATCH-vs-COMPOSED equivalence (spec-pinned both ways): feeding the
+  * corpus as ONE gate-less batch is verdict-identical to
+  * [[Dedup.ladder]] (empty indexes make every rung's in-batch pass
+  * exactly the batch rung). Across ticks with ids assigned in arrival
+  * order, verdicts still match rung for rung UNLESS a near-dup chain
+  * crosses ticks THROUGH a dropped doc (x admitted in tick 1, y ~ x
+  * dropped, z ~ y in tick 2 but z ≁ x): the batch ladder's components
+  * drop z transitively, this ladder ADMITS z — only corpus content
+  * vouches for a drop. [[IncrementalDedup.reconcileNear]] closes that
+  * documented divergence from the stored evidence.
   *
   * REPLAY IDEMPOTENCE: the [[IncrementalDedup.admitBatchUrl]] recovery
   * contract — every subtree written as a per-batch Overwrite partition,
@@ -214,9 +227,7 @@ object IngestLadder {
     val w = org.apache.spark.sql.expressions.Window
     val base = Materialize.multiScan(batch)
     def others(dir: String): Option[DataFrame] =
-      if (Layout.hasParquetData(spark, dir))
-        Some(spark.read.parquet(dir).filter(col("batch") =!= batchId))
-      else None
+      Layout.priorPartitions(spark, dir, batchId)
     def empty: DataFrame = base.select(col(idCol).as("id")).limit(0)
 
     // rung 1: url — key collapse + stored-key probe; NULL keys pass and
@@ -317,11 +328,14 @@ object IngestLadder {
 
     // THE one normalize+tokenize pass: url+lines survivors scanned once
     // into a spill-safe cache carrying every original column plus the
-    // normalized text and token array; the exact rung, every gate, and
-    // the shingle pass all read this cache
-    val pre = Materialize.multiScan(Materialize.spread(s15)
+    // normalized text and — only when there are gates, its sole
+    // readers — the token array; the exact rung, every gate, and the
+    // shingle pass all read this cache
+    val normed = Materialize.spread(s15)
       .withColumn("__t", TextOps.normalized(col(textCol)))
-      .withColumn("__ts", TextOps.tokens(col("__t"))))
+    val pre = Materialize.multiScan(
+      if (gates.isEmpty) normed
+      else normed.withColumn("__ts", TextOps.tokens(col("__t"))))
 
     // rung 2: exact — md5 of the CACHED normalized text (the
     // TextOps.fingerprint definition without re-normalizing). NULL
@@ -355,27 +369,26 @@ object IngestLadder {
     // provably identical to sequential evaluation (spec-pinned against
     // the hand-stacked form) and the per-gate anti-join chain — k extra
     // joins and k ever-narrower cache entries — disappears.
-    val canonAll = pre
+    val exactSurv = pre
       .join(exactDrops, pre(idCol) === exactDrops("id"), "left_anti")
-      .select(col(idCol).as("id"), col(textCol).as("raw"),
-        col("__t").as("t"), col("__ts").as("ts"))
+    // lazy: `__ts` exists only when there are gates to read it
+    lazy val canonAll = exactSurv.select(col(idCol).as("id"),
+      col(textCol).as("raw"), col("__t").as("t"), col("__ts").as("ts"))
     val gateDrops: Seq[(String, DataFrame)] = gates.map {
       case (tag, gate) =>
         val keep = gate(canonAll).select(col("id"))
         tag -> Materialize.multiScan(
           canonAll.select(col("id")).join(keep, Seq("id"), "left_anti"))
     }
-    val allGateDrops = gateDrops.map(_._2)
-      .foldLeft(empty)(_ unionByName _)
-    val s3 = canonAll.join(allGateDrops, Seq("id"), "left_anti")
-      .select(col("id"))
+    val s3 = gateDrops.map(_._2).reduceOption(_ unionByName _)
+      .fold(exactSurv)(d =>
+        exactSurv.join(d, exactSurv(idCol) === d("id"), "left_anti"))
 
     // rung near: shingles from the CACHED normalized text (the
     // shinglePostings relation, shared verbatim with the optional
     // containment rung below — tokenized once, probed twice)
     val posts = Materialize.multiScan(
-      pre.join(s3, pre(idCol) === s3("id"), "left_semi")
-        .select(col(idCol).as("id"),
+      s3.select(col(idCol).as("id"),
           Dedup.wordShinglesUdf(col("__t"), n).as("__sh"))
         .select(col("id"), size(col("__sh")).as("m"),
           explode(col("__sh")).as("shingle"))
@@ -532,13 +545,12 @@ object IngestLadder {
     posts.join(lateDrops, posts("id") === lateDrops("id"), "left_semi")
       .write.mode(SaveMode.Overwrite).parquet(part("postings_dropped"))
     // shingle-count sidecar: exactly the rows the two postings writes
-    // persisted — admitted ∪ near/containment evidence; quota-dropped
-    // docs persist no postings and must not count
-    val persistedIds = admitted.select(col(idCol).as("id"))
-      .unionByName(lateDrops.select(col("id")))
-    IncrementalDedup.writeTickCounts(
-      posts.join(persistedIds, Seq("id"), "left_semi"),
-      root, batchId, freshRoot)
+    // persisted — admitted ∪ near/containment evidence, which is all of
+    // `posts` unless the quota rung dropped docs after the near rung;
+    // quota-dropped docs persist no postings and must not count
+    val persisted = quotaDrops.fold(posts)(q =>
+      posts.join(q, posts("id") === q("id"), "left_anti"))
+    IncrementalDedup.writeTickCounts(persisted, root, batchId, freshRoot)
     quotaDoms.foreach { doms =>
       doms.join(admitted, doms("id") === admitted(idCol), "left_semi")
         .filter(col("reg_domain").isNotNull)
@@ -553,10 +565,11 @@ object IngestLadder {
     spark.read.parquet(part("verdicts"))
   }
 
-  /** The production gate battery from FROZEN tables — the
-    * [[graft.pipeline.QualityAdmission]] stack re-expressed as ingest
-    * rungs (same scorers, same broadcast-table posture, parameters
-    * frozen at deploy time), cheapest first:
+  /** The production gate battery from FROZEN tables — the ONE place its
+    * dials are declared and its scorers composed; the ingest ladder,
+    * [[IncrementalQuality]] and [[graft.pipeline.QualityAdmission]] all
+    * run these gates (same scorers, same broadcast-table posture,
+    * parameters frozen at deploy time), cheapest first:
     *
     *  - `gopher`  — the document-shape rule battery
     *    ([[Corpus.gopherRulesOn]]), optionally paired with the Gopher
@@ -566,9 +579,8 @@ object IngestLadder {
     *    on the RAW text (line structure matters);
     *  - `quality` — the hashed-feature linear classifier
     *    ([[Corpus.qualityScoreFeats]]) fused with the optional DSIR
-    *    importance threshold over ONE feature stream (the
-    *    [[IncrementalQuality]] share point), plus the optional frozen-LM
-    *    surprisal ceiling ([[Corpus.surprisalAgainstOn]]);
+    *    importance threshold over ONE feature stream, plus the optional
+    *    frozen-LM surprisal ceiling ([[Corpus.surprisalAgainstOn]]);
     *  - `lang`    — the learned language gate ([[Corpus.langIdPredict]]
     *    against a frozen model), admitting only `allowedLangs`.
     *
@@ -618,10 +630,14 @@ object IngestLadder {
         case None => Corpus.qualityScoreFeats(feats, weights, thrMilli)
           .filter(col("keep")).select(col("id"))
         case Some(lam) =>
-          // quality and DSIR collapse in ONE aggregation over one
-          // feature stream — the IncrementalQuality fusion, verbatim
+          // quality and DSIR read ONE hashed-feature stream and collapse
+          // in ONE aggregation: both frozen tables are bucket-keyed
+          // broadcasts, so the per-feature weight and λ ride the same
+          // exploded row and the per-doc sums share a single shuffle —
+          // the same integer sums the separate scorers produce
           feats.join(broadcast(weights), Seq("bucket"), "left")
             .withColumn("w", coalesce(col("w"), lit(0L)))
+            // λ covers every bucket (inner join always hits)
             .join(broadcast(lam), Seq("bucket"))
             .groupBy(col("id"))
             .agg(count(lit(1)).as("n_features"), sum(col("w")).as("logit"),

@@ -48,6 +48,23 @@ object Layout {
     }
   }
 
+  /** The per-batch Overwrite index under `dir` as batch `batchId` may
+    * probe it: every partition except its own `batch=<batchId>` — a
+    * failed attempt may have written that partition before its commit,
+    * and a replay that probed its own rows would turn itself away.
+    * None while `dir` holds no parquet data ([[hasParquetData]]: a
+    * footer-less tree would fail schema inference on every later
+    * tick). A tree without a `batch` column is read whole. */
+  private[graft] def priorPartitions(spark: org.apache.spark.sql.SparkSession,
+                                     dir: String,
+                                     batchId: Long): Option[DataFrame] =
+    if (!hasParquetData(spark, dir)) None
+    else {
+      val ix = spark.read.parquet(dir)
+      Some(if (ix.columns.contains("batch")) ix.filter(col("batch") =!= batchId)
+        else ix)
+    }
+
   /** How many files a rewrite of ~`bytes` is written as:
     * `ceil(bytes / targetBytes)`, at least one — the one sizing rule of
     * every parquet rewrite (compaction, partition folds, the file sink).

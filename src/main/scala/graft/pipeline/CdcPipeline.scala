@@ -60,9 +60,7 @@ final class CdcPipeline(
       * pipeline columns (pk/op/ts_ms/ts_date/tiebreaker) — same contract
       * as the reference. */
     payloadExplosion: Option[SchemaInference] = None,
-    /** Config-format timestamp columns coerced after explosion
-      * (reference :165-166; absent columns skipped). */
-    tsCoerceCols: Seq[String] = Seq("gmt_created", "gmt_modified"),
+    /** Format of the [[CdcPipeline.TsCoerceCols]] after explosion. */
     tsCoerceFormat: String = "yyyy-MM-dd'T'HH:mm:ss'Z'",
     /** Optional streaming QUALITY admission stage between compaction and
       * the sink fanout ([[QualityAdmission]], an extension beyond the
@@ -158,7 +156,7 @@ final class CdcPipeline(
                 val keep = base.columns.filterNot(_ == "payload").toSeq
                 SchemaInference.coerceTimestamps(
                   inf.explodePayload(base, db, tb, "payload", keep),
-                  tsCoerceCols, tsCoerceFormat)
+                  CdcPipeline.TsCoerceCols, tsCoerceFormat)
               case None => base
             }
             sink.mergeOnce(pid, batchId, db, tb, slice, keyCol = "pk",
@@ -197,6 +195,10 @@ final class CdcPipeline(
 }
 
 object CdcPipeline {
+
+  /** Config-format timestamp columns coerced after payload explosion
+    * (reference :165-166; absent columns skipped). */
+  val TsCoerceCols: Seq[String] = Seq("gmt_created", "gmt_modified")
 
   /** Per-batch outcome metrics (counts of -1 mean "not measured" —
     * they'd cost an extra pass over unpersisted data; `admittedRows`

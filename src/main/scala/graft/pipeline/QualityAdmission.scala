@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.config.AdmissionConf
-import graft.ext.{Corpus, IncrementalQuality, Layout, Materialize}
+import graft.ext.{Corpus, IncrementalQuality, IngestLadder, Layout, Materialize}
 
 /** The streaming QUALITY admission stage of the CDC pipeline — the
   * frozen five-gate curation battery ([[graft.ext.IncrementalQuality]])
@@ -106,10 +106,11 @@ object QualityAdmission {
         val spark = compacted.sparkSession
         val keyed = Materialize.multiScan(docs0.withColumn("__adm_url_key",
           graft.ext.TextOps.canonicalUrl(expr(uexpr))))
-        val survivors = priorUrlKeys(spark, dir, batchId) match {
+        val survivors = Layout.priorPartitions(spark, dir, batchId) match {
           case Some(ix) => keyed.filter(col("__adm_url_key").isNull)
             .unionByName(keyed.filter(col("__adm_url_key").isNotNull)
-              .join(ix, col("__adm_url_key") === ix("url_key"), "left_anti"))
+              .join(ix.select(col("url_key")),
+                col("__adm_url_key") === col("url_key"), "left_anti"))
           case None => keyed
         }
         val out = Materialize.multiScan(survivors.drop("__adm_url_key"))
@@ -120,16 +121,17 @@ object QualityAdmission {
         out
       case _ => docs0
     }
+    // the frozen battery minus its lang gate, which runs below over
+    // the survivors only
     val g = IncrementalQuality.gate(docs, "__adm_id", "__adm_text",
-      weights, cfg.n_buckets, cfg.thr_milli,
-      lambda, cfg.dsir_thr_x10k, cfg.min_words,
-      Corpus.GopherStopwords, cfg.repetition,
-      Map(2 -> 2000L, 3 -> 1800L, 4 -> 1600L),
-      Map(5 -> 1500L, 6 -> 1400L, 7 -> 1300L,
-          8 -> 1200L, 9 -> 1100L, 10 -> 1000L),
-      lm, cfg.max_mean_surprisal_x10k.getOrElse(Long.MaxValue),
-      cfg.unseen_nat10k,
-      cfg.c4_rules, cfg.c4_bad_words.getOrElse(Nil))
+      IngestLadder.frozenGates(weights, nBuckets = cfg.n_buckets,
+        thrMilli = cfg.thr_milli, minWords = cfg.min_words,
+        repetition = cfg.repetition,
+        lambda = lambda, dsirThrX10k = cfg.dsir_thr_x10k, lm = lm,
+        maxMeanSurprisalX10k =
+          cfg.max_mean_surprisal_x10k.getOrElse(Long.MaxValue),
+        unseenNat10k = cfg.unseen_nat10k, c4 = cfg.c4_rules,
+        c4BadWords = cfg.c4_bad_words.getOrElse(Nil)))
     // optional LEARNED LANGUAGE gate (the CCNet shape: admit only the
     // target languages, judged by a frozen hashed-char-ngram model —
     // [[graft.ext.Corpus.langIdPredict]] — instead of the stopword
@@ -164,8 +166,10 @@ object QualityAdmission {
         val tau = cfg.containment_tau_x10k.toDouble / 10000
         val posts = Materialize.multiScan(graft.ext.Dedup.shinglePostings(
           langFiltered, "__adm_id", "__adm_text", cfg.containment_n))
-        val drops = priorPostings(langFiltered.sparkSession, dir, batchId) match {
-          case Some(index) => graft.ext.Dedup.containmentProbe(posts, index,
+        val drops = Layout.priorPartitions(langFiltered.sparkSession, dir,
+            batchId) match {
+          case Some(index) => graft.ext.Dedup.containmentProbe(posts,
+              index.select(col("id"), col("m"), col("sh64")),
               tau, cfg.containment_max_doc_freq.getOrElse(Int.MaxValue))
             .filter(col("cont_batch") >= tau)
             .select(col("batch_id").as("__adm_id")).distinct()
@@ -222,7 +226,7 @@ object QualityAdmission {
     * `batch=-1` fold) are touched: foreachBatch never replays a
     * committed batch, so those rows can never need per-batch Overwrite
     * again — and the fold target `batch=-1` is a value no real batch id
-    * takes, so the replay exclusion in [[priorPostings]]
+    * takes, so the replay exclusion in [[Layout.priorPartitions]]
     * (`batch =!= currentId`, ids ≥ 0) always keeps folded rows, exactly
     * right for committed postings. Pass `committedBelow` = the last
     * batch id the SINK's ledger shows committed (not merely written).
@@ -245,41 +249,4 @@ object QualityAdmission {
     // admission layout shares one swap discipline); the leaf dirs carry
     // exactly the (id, m, sh64) postings schema
     Layout.foldBatchPartitions(spark, dir, committedBelow, targetBytes)
-
-  /** The containment index visible to batch `batchId`: every PRIOR
-    * batch's postings partition, excluding the current batch's own —
-    * a failed attempt may have written `batch=<id>` before the sink
-    * committed, and a replay that probed its own postings would turn
-    * away every row at containment 1.0. Returns None when the index
-    * directory doesn't exist yet (first batch) — or exists but holds
-    * no parquet DATA file: a first batch whose rows were all rejected
-    * writes a footer-less `batch=0` partition dir, and a bare
-    * directory probe would then hand `spark.read.parquet` a tree it
-    * cannot infer a schema from, failing every subsequent batch.
-    */
-  private def priorPostings(spark: SparkSession, dir: String,
-                            batchId: Long): Option[DataFrame] = {
-    if (!Layout.hasParquetData(spark, dir)) None
-    else {
-      val ix = spark.read.parquet(dir)
-      val prior = if (ix.columns.contains("batch"))
-        ix.filter(col("batch") =!= batchId) else ix
-      Some(prior.select(col("id"), col("m"), col("sh64")))
-    }
-  }
-
-  /** The URL-key index visible to batch `batchId` — [[priorPostings]]'
-    * contract for the url gate: prior batches' key partitions only (a
-    * replay must not be turned away by its own half-written keys);
-    * None before the first committed partition. */
-  private def priorUrlKeys(spark: SparkSession, dir: String,
-                           batchId: Long): Option[DataFrame] = {
-    if (!Layout.hasParquetData(spark, dir)) None
-    else {
-      val ix = spark.read.parquet(dir)
-      val prior = if (ix.columns.contains("batch"))
-        ix.filter(col("batch") =!= batchId) else ix
-      Some(prior.select(col("url_key")))
-    }
-  }
 }

@@ -691,7 +691,7 @@ private[graft] trait QueriesDedup { this: Queries.type =>
       FROM documents d"""
 
   /** The COMPOSED steady-state admission ladder
-    * ([[graft.ext.IncrementalDedup.admitBatchLadder]]): two ingest
+    * ([[graft.ext.IngestLadder.admitBatch]] without gates): two ingest
     * ticks (doc_id % 3 = 0 arrives first, the rest second) through the
     * persistent url-key / fingerprint / postings indexes, emitting the
     * per-doc verdict at ingest time. The oracle replays BOTH ticks in
@@ -709,12 +709,12 @@ private[graft] trait QueriesDedup { this: Queries.type =>
         .createTempDirectory("graft_q_admladder").toString
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"),
         syntheticUrl.as("url"))
-      val v1 = graft.ext.IncrementalDedup.admitBatchLadder(
+      val v1 = graft.ext.IngestLadder.admitBatch(
         docs.filter(col("doc_id") % 3 === 0), "doc_id", "text",
-        Some("url"), root, n = 3, tau = 0.25, batchId = 0L)
-      val v2 = graft.ext.IncrementalDedup.admitBatchLadder(
+        Some("url"), Nil, root, n = 3, tau = 0.25, batchId = 0L)
+      val v2 = graft.ext.IngestLadder.admitBatch(
         docs.filter(col("doc_id") % 3 =!= 0), "doc_id", "text",
-        Some("url"), root, n = 3, tau = 0.25, batchId = 1L)
+        Some("url"), Nil, root, n = 3, tau = 0.25, batchId = 1L)
       v1.unionByName(v2).select(col("id"), col("dropped_at"))
     },
     Some(admissionLadderSql))
@@ -735,13 +735,13 @@ private[graft] trait QueriesDedup { this: Queries.type =>
         .createTempDirectory("graft_q_ladbloom").toString
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"),
         syntheticUrl.as("url"))
-      val v1 = graft.ext.IncrementalDedup.admitBatchLadder(
+      val v1 = graft.ext.IngestLadder.admitBatch(
         docs.filter(col("doc_id") % 3 === 0), "doc_id", "text",
-        Some("url"), root, n = 3, tau = 0.25, batchId = 0L)
+        Some("url"), Nil, root, n = 3, tau = 0.25, batchId = 0L)
       graft.ext.LadderBloom.buildAll(s, root, committedBelow = 1L)
-      val v2 = graft.ext.IncrementalDedup.admitBatchLadder(
+      val v2 = graft.ext.IngestLadder.admitBatch(
         docs.filter(col("doc_id") % 3 =!= 0), "doc_id", "text",
-        Some("url"), root, n = 3, tau = 0.25, batchId = 1L)
+        Some("url"), Nil, root, n = 3, tau = 0.25, batchId = 1L)
       v1.unionByName(v2).select(col("id"), col("dropped_at"))
     },
     Some(admissionLadderSql))
@@ -1010,12 +1010,12 @@ private[graft] trait QueriesDedup { this: Queries.type =>
           sequence(col("doc_id") % 3 * 2, col("doc_id") % 3 * 2 + 7),
           k => concat(lit("g"), expr("doc_id div 3").cast("string"),
             lit("w"), k.cast("string")))).as("text"))
-      graft.ext.IncrementalDedup.admitBatchLadder(
+      graft.ext.IngestLadder.admitBatch(
         docs.filter(col("doc_id") % 3 =!= 2), "doc_id", "text",
-        None, root, n = 3, tau = 0.5, batchId = 0L)
-      graft.ext.IncrementalDedup.admitBatchLadder(
+        None, Nil, root, n = 3, tau = 0.5, batchId = 0L)
+      graft.ext.IngestLadder.admitBatch(
         docs.filter(col("doc_id") % 3 === 2), "doc_id", "text",
-        None, root, n = 3, tau = 0.5, batchId = 1L)
+        None, Nil, root, n = 3, tau = 0.5, batchId = 1L)
       graft.ext.IncrementalDedup.reconcileNear(s, root, tau = 0.5)
         .select(col("id"), col("dropped_at"))
     },
@@ -1119,12 +1119,12 @@ private[graft] trait QueriesDedup { this: Queries.type =>
           sequence(col("doc_id") % 3 * 2, col("doc_id") % 3 * 2 + 7),
           k => concat(lit("g"), expr("doc_id div 3").cast("string"),
             lit("w"), k.cast("string")))).as("text"))
-      graft.ext.IncrementalDedup.admitBatchLadder(
+      graft.ext.IngestLadder.admitBatch(
         docs.filter(col("doc_id") % 3 =!= 2), "doc_id", "text",
-        None, root, n = 3, tau = 0.5, batchId = 0L)
-      graft.ext.IncrementalDedup.admitBatchLadder(
+        None, Nil, root, n = 3, tau = 0.5, batchId = 0L)
+      graft.ext.IngestLadder.admitBatch(
         docs.filter(col("doc_id") % 3 === 2), "doc_id", "text",
-        None, root, n = 3, tau = 0.5, batchId = 1L)
+        None, Nil, root, n = 3, tau = 0.5, batchId = 1L)
       graft.ext.IncrementalDedup.applyReconcile(s, root, "doc_id",
         graft.ext.IncrementalDedup.reconcileNear(s, root, tau = 0.5),
         committedBelow = 2L)

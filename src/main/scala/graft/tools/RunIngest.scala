@@ -53,10 +53,11 @@ object RunIngest {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       // the incremental reconcile's closure hops push collected key
-      // sets as IN filters into sorted-fold parquet scans; above this
-      // threshold Spark degrades IN to a useless [min,max] range (see
+      // sets as IN filters into sorted-fold parquet scans; the shared
+      // threshold keeps them from overflowing parquet-mr's stack (see
       // graft.Sessions)
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "1000000")
+      .config("spark.sql.parquet.pushdown.inFilterThreshold",
+        graft.Sessions.ParquetInFilterThreshold.toString)
       .getOrCreate()
     start(spark, cfg).awaitTermination()
   }

@@ -394,7 +394,7 @@ object ScaleBench {
     // IncrementalCoverage, whose fingerprint store necessarily grows.
     if (sys.env.get("SCALE_OPS").exists(_.split(",").map(_.trim)
         .contains("qualityTick"))) {
-      import graft.ext.{Corpus, IncrementalQuality, Materialize}
+      import graft.ext.{Corpus, IncrementalQuality, IngestLadder, Materialize}
       val qroot = s"$root/qualtick"
       val weights = spark.range(1024).select(col("id").as("bucket"),
         (pmod(graft.ext.TextOps.portableHash(col("id").cast("string")),
@@ -424,10 +424,11 @@ object ScaleBench {
         val t0 = System.nanoTime()
         val (adm, _) = IncrementalQuality.admitBatch(batch,
           batchId = s.toLong * 100 + tick, "doc_id", "text",
-          s"$qroot/corpus", weights, nBuckets = 1024, thrMilli = -2000L,
-          lambda = Some(lam), dsirThrX10k = -100000L,
-          stopwords = stops, repetition = true,
-          lm = Some(lmT), maxMeanSurprisalX10k = 500000L)
+          s"$qroot/corpus", IngestLadder.frozenGates(weights,
+            nBuckets = 1024, thrMilli = -2000L,
+            lambda = Some(lam), dsirThrX10k = -100000L,
+            stopwords = stops, repetition = true,
+            lm = Some(lmT), maxMeanSurprisalX10k = 500000L))
         val wall = (System.nanoTime() - t0) / 1e9
         batch.unpersist()
         println(f"| qualityTick | ${s}x | $tick | ${baseDocs * s} | $wall%.2f | $adm |")

@@ -219,9 +219,9 @@ object Sf1EqBench {
           .otherwise(col("doc_id")).cast("string")))
     for (s <- scales; variant <- Seq("plain", "bloom")) {
       val lroot = s"$root/ladprobe_${variant}_x$s"
-      graft.ext.IncrementalDedup.admitBatchLadder(
+      graft.ext.IngestLadder.admitBatch(
         ladderUrls(docs(s).filter(col("doc_id") % 11 =!= 0)),
-        "doc_id", "text", Some("url"), lroot, n = 3, tau = 0.25,
+        "doc_id", "text", Some("url"), Nil, lroot, n = 3, tau = 0.25,
         batchId = 0L)
       if (variant == "bloom")
         graft.ext.LadderBloom.buildAll(spark, lroot, committedBelow = 1L)
@@ -267,11 +267,11 @@ object Sf1EqBench {
     for (s <- scales) {
       val rroot = s"$root/reconroot_x$s"
       val rd = reconDocs(s)
-      graft.ext.IncrementalDedup.admitBatchLadder(
-        rd.filter(col("doc_id") % 3 =!= 2), "doc_id", "text", None,
+      graft.ext.IngestLadder.admitBatch(
+        rd.filter(col("doc_id") % 3 =!= 2), "doc_id", "text", None, Nil,
         rroot, n = 3, tau = 0.5, batchId = 0L)
-      graft.ext.IncrementalDedup.admitBatchLadder(
-        rd.filter(col("doc_id") % 3 === 2), "doc_id", "text", None,
+      graft.ext.IngestLadder.admitBatch(
+        rd.filter(col("doc_id") % 3 === 2), "doc_id", "text", None, Nil,
         rroot, n = 3, tau = 0.5, batchId = 1L)
       copyTree(rroot, s"$root/applysnap_x$s")
     }
@@ -290,11 +290,11 @@ object Sf1EqBench {
     for (s <- scales) {
       val iroot = s"$root/reconincroot_x$s"
       val rd = reconDocs(s)
-      graft.ext.IncrementalDedup.admitBatchLadder(
-        rd.filter(col("doc_id") % 3 =!= 2), "doc_id", "text", None,
+      graft.ext.IngestLadder.admitBatch(
+        rd.filter(col("doc_id") % 3 =!= 2), "doc_id", "text", None, Nil,
         iroot, n = 3, tau = 0.5, batchId = 0L)
-      graft.ext.IncrementalDedup.admitBatchLadder(
-        rd.filter(col("doc_id") % 3 === 2), "doc_id", "text", None,
+      graft.ext.IngestLadder.admitBatch(
+        rd.filter(col("doc_id") % 3 === 2), "doc_id", "text", None, Nil,
         iroot, n = 3, tau = 0.5, batchId = 1L)
       graft.ext.IncrementalDedup.applyReconcile(spark, iroot, "doc_id",
         graft.ext.IncrementalDedup.reconcileNear(spark, iroot, tau = 0.5),
@@ -304,8 +304,8 @@ object Sf1EqBench {
         concat_ws(" ", transform(sequence(lit(6), lit(13)),
           k => concat(lit("g"), col("id").cast("string"),
             lit("w"), k.cast("string")))).as("text"))
-      graft.ext.IncrementalDedup.admitBatchLadder(tick, "doc_id",
-        "text", None, iroot, n = 3, tau = 0.5, batchId = 2L)
+      graft.ext.IngestLadder.admitBatch(tick, "doc_id",
+        "text", None, Nil, iroot, n = 3, tau = 0.5, batchId = 2L)
       spark.catalog.clearCache()
     }
 
@@ -492,12 +492,11 @@ object Sf1EqBench {
         // partition, so each timed run does the full three-rung pass +
         // the index/corpus/verdict writes (the real per-tick IO), with
         // stable input state across runs
-        "admission_ladder_tick" -> (s => graft.ext.IncrementalDedup
-          .admitBatchLadder(
+        "admission_ladder_tick" -> (s => graft.ext.IngestLadder.admitBatch(
             docs(s).withColumn("url", concat(lit("http://b.com/p/"),
               when(col("doc_id") % 16 === 15, col("doc_id") - 1)
                 .otherwise(col("doc_id")).cast("string"))),
-            "doc_id", "text", Some("url"), s"$root/ladder_x$s",
+            "doc_id", "text", Some("url"), Nil, s"$root/ladder_x$s",
             n = 3, tau = 0.25, batchId = 0L)),
         // r16: the UNIFIED ingest tick — url + exact + three doc-local
         // quality gates + near in ONE pass over one tokenize cache,
@@ -611,15 +610,13 @@ object Sf1EqBench {
         // ~6% re-crawls (+ FPs), the rest never join. batchId 1 every
         // run — probes exclude the tick's own partition, so repeated
         // runs see stable index state and overwrite in place.
-        "ladder_probe_tick" -> (s => graft.ext.IncrementalDedup
-          .admitBatchLadder(
+        "ladder_probe_tick" -> (s => graft.ext.IngestLadder.admitBatch(
             ladderUrls(docs(s).filter(col("doc_id") % 11 === 0)),
-            "doc_id", "text", Some("url"), s"$root/ladprobe_plain_x$s",
+            "doc_id", "text", Some("url"), Nil, s"$root/ladprobe_plain_x$s",
             n = 3, tau = 0.25, batchId = 1L)),
-        "ladder_probe_tick_bloom" -> (s => graft.ext.IncrementalDedup
-          .admitBatchLadder(
+        "ladder_probe_tick_bloom" -> (s => graft.ext.IngestLadder.admitBatch(
             ladderUrls(docs(s).filter(col("doc_id") % 11 === 0)),
-            "doc_id", "text", Some("url"), s"$root/ladprobe_bloom_x$s",
+            "doc_id", "text", Some("url"), Nil, s"$root/ladprobe_bloom_x$s",
             n = 3, tau = 0.25, batchId = 1L)),
         // r16: the per-registrant quota tick — rank window at batch
         // cardinality + a broadcast-size prior-count join; the budget

@@ -100,7 +100,7 @@ class C4RulesSpec extends AnyFunSuite {
   }
 
   test("streaming admission: C4 as the sixth gate, off by default") {
-    import graft.ext.IncrementalQuality
+    import graft.ext.{IncrementalQuality, IngestLadder}
     val dir = java.nio.file.Files.createTempDirectory("c4adm").toString
     // neutral weight table: the quality gate admits everything at this
     // threshold — the C4 verdict is the only discriminator under test
@@ -113,16 +113,17 @@ class C4RulesSpec extends AnyFunSuite {
       (3L, "the line without punct of note\nthe other bare line stays here"))
       .toDF("doc_id", "text") // gopher-passing, zero C4-keepable lines
     val (adm, drop) = IncrementalQuality.admitBatch(docs, 0L, "doc_id",
-      "text", s"$dir/corpus", weights, nBuckets = 64, thrMilli = -100000L,
-      minWords = 5, c4 = true, c4BadWords = Seq("spam"))
+      "text", s"$dir/corpus", IngestLadder.frozenGates(weights,
+        nBuckets = 64, thrMilli = -100000L, minWords = 5, c4 = true,
+        c4BadWords = Seq("spam")))
     assert((adm, drop) == ((1L, 2L)))
     val ids = spark.read.parquet(s"$dir/corpus").select("doc_id")
       .collect().map(_.getLong(0)).toSet
     assert(ids == Set(1L))
     // same batch, gate off: page structure goes unchecked
     val (adm2, _) = IncrementalQuality.admitBatch(docs, 1L, "doc_id",
-      "text", s"$dir/corpus", weights, nBuckets = 64, thrMilli = -100000L,
-      minWords = 5)
+      "text", s"$dir/corpus", IngestLadder.frozenGates(weights,
+        nBuckets = 64, thrMilli = -100000L, minWords = 5))
     assert(adm2 == 3L)
   }
 }

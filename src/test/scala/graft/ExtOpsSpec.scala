@@ -680,7 +680,7 @@ class ExtOpsSpec extends AnyFunSuite {
   test("composed admission ladder: one batch through admitBatchLadder " +
       "is verdict-identical to Dedup.ladder") {
     import spark.implicits._
-    import graft.ext.IncrementalDedup
+    import graft.ext.IngestLadder
     val root = java.nio.file.Files.createTempDirectory("graft_lad1").toString
     val docs = Seq(
       (1L, "alpha beta gamma delta", "http://a.com/p1"),
@@ -690,8 +690,8 @@ class ExtOpsSpec extends AnyFunSuite {
       (5L, "one two three four five six seven nine", "http://c.com/2"),
       (6L, "one two three four five six seven nine", "http://c.com/3"))
       .toDF("doc_id", "text", "url")
-    val composed = IncrementalDedup.admitBatchLadder(docs, "doc_id", "text",
-        Some("url"), root, n = 3, tau = 0.5, batchId = 0L)
+    val composed = IngestLadder.admitBatch(docs, "doc_id", "text",
+        Some("url"), Nil, root, n = 3, tau = 0.5, batchId = 0L)
       .as[(Long, Option[String])].collect().toMap
     val batch = Dedup.ladder(docs, "doc_id", "text", Some("url"),
         n = 3, tau = 0.5)
@@ -705,7 +705,7 @@ class ExtOpsSpec extends AnyFunSuite {
       "rung for rung; indexes give rung-stable provenance; replay is " +
       "idempotent") {
     import spark.implicits._
-    import graft.ext.IncrementalDedup
+    import graft.ext.IngestLadder
     val root = java.nio.file.Files.createTempDirectory("graft_lad2").toString
     val tick1 = Seq(
       (1L, "alpha beta gamma delta", "http://a.com/p1"),
@@ -730,11 +730,11 @@ class ExtOpsSpec extends AnyFunSuite {
       // in-batch near pair with 15 (both probe survivors, min id keeps)
       (16L, "red green blue yellow purple orange pink white", "http://d.com/5"))
       .toDF("doc_id", "text", "url")
-    val v1 = IncrementalDedup.admitBatchLadder(tick1, "doc_id", "text",
-        Some("url"), root, n = 3, tau = 0.5, batchId = 0L)
+    val v1 = IngestLadder.admitBatch(tick1, "doc_id", "text",
+        Some("url"), Nil, root, n = 3, tau = 0.5, batchId = 0L)
       .as[(Long, Option[String])].collect().toMap
-    val v2 = IncrementalDedup.admitBatchLadder(tick2, "doc_id", "text",
-        Some("url"), root, n = 3, tau = 0.5, batchId = 1L)
+    val v2 = IngestLadder.admitBatch(tick2, "doc_id", "text",
+        Some("url"), Nil, root, n = 3, tau = 0.5, batchId = 1L)
       .as[(Long, Option[String])].collect().toMap
     // the batch ladder over the UNION (ids are arrival-ordered, no
     // near chain crosses ticks through a dropped doc) must agree
@@ -750,8 +750,8 @@ class ExtOpsSpec extends AnyFunSuite {
     assert(corpus == Set(1L, 3L, 4L, 15L), s"corpus $corpus")
     // REPLAY of tick 2 (same batch id): same verdicts, no corpus dups,
     // verdict partition overwritten in place
-    val r2 = IncrementalDedup.admitBatchLadder(tick2, "doc_id", "text",
-        Some("url"), root, n = 3, tau = 0.5, batchId = 1L)
+    val r2 = IngestLadder.admitBatch(tick2, "doc_id", "text",
+        Some("url"), Nil, root, n = 3, tau = 0.5, batchId = 1L)
       .as[(Long, Option[String])].collect().toMap
     assert(r2 == v2, s"replay $r2 != $v2")
     val corpusR = spark.read.parquet(s"$root/corpus")
@@ -768,7 +768,7 @@ class ExtOpsSpec extends AnyFunSuite {
       "tick near chain through a DROPPED doc admits the tail (only " +
       "corpus content can vouch for a drop)") {
     import spark.implicits._
-    import graft.ext.IncrementalDedup
+    import graft.ext.IngestLadder
     val root = java.nio.file.Files.createTempDirectory("graft_lad3").toString
     // x (1) admitted; y (2) ~ x dropped near; z (11) ~ y but z !~ x:
     // overlap windows of 8-word texts — y shares 5/7 shingles with x
@@ -778,11 +778,11 @@ class ExtOpsSpec extends AnyFunSuite {
       (2L, "w3 w4 w5 w6 w7 w8 w9 w10")).toDF("doc_id", "text")
     val tick2 = Seq(
       (11L, "w5 w6 w7 w8 w9 w10 w11 w12")).toDF("doc_id", "text")
-    val v1 = IncrementalDedup.admitBatchLadder(tick1, "doc_id", "text",
-        None, root, n = 3, tau = 0.5, batchId = 0L)
+    val v1 = IngestLadder.admitBatch(tick1, "doc_id", "text",
+        None, Nil, root, n = 3, tau = 0.5, batchId = 0L)
       .as[(Long, Option[String])].collect().toMap
-    val v2 = IncrementalDedup.admitBatchLadder(tick2, "doc_id", "text",
-        None, root, n = 3, tau = 0.5, batchId = 1L)
+    val v2 = IngestLadder.admitBatch(tick2, "doc_id", "text",
+        None, Nil, root, n = 3, tau = 0.5, batchId = 1L)
       .as[(Long, Option[String])].collect().toMap
     assert(v1 == Map(1L -> None, 2L -> Some("near")), s"tick1 $v1")
     // batch ladder would CC {1,2,11} and drop 11; the composed ladder
@@ -806,15 +806,15 @@ class ExtOpsSpec extends AnyFunSuite {
   test("maintainLadder: N ticks fold to batch=-1 per subtree, contents " +
       "byte-stable, probes and reconciliation read the folded state") {
     import spark.implicits._
-    import graft.ext.IncrementalDedup
+    import graft.ext.{IncrementalDedup, IngestLadder}
     val root = java.nio.file.Files.createTempDirectory("graft_ladm").toString
     val mkTick = (ids: Seq[Long]) => ids.map(i =>
       (i, s"doc body $i unique words here", s"http://m.com/p/$i"))
       .toDF("doc_id", "text", "url")
     // three ticks, each writing all six subtrees
     for ((ids, b) <- Seq(Seq(1L, 2L), Seq(3L, 4L), Seq(5L, 6L)).zipWithIndex)
-      IncrementalDedup.admitBatchLadder(mkTick(ids), "doc_id", "text",
-        Some("url"), root, n = 3, tau = 0.5, batchId = b.toLong)
+      IngestLadder.admitBatch(mkTick(ids), "doc_id", "text",
+        Some("url"), Nil, root, n = 3, tau = 0.5, batchId = b.toLong)
     def snapshot(sub: String): Set[String] =
       spark.read.parquet(s"$root/$sub").drop("batch")
         .collect().map(_.toString).toSet
@@ -836,12 +836,12 @@ class ExtOpsSpec extends AnyFunSuite {
     }
     // the folded indexes still vouch: a re-crawl of a folded page key
     // and an exact copy of a folded doc's text are turned away
-    val v = IncrementalDedup.admitBatchLadder(
+    val v = IngestLadder.admitBatch(
       Seq((10L, "fresh content for this tick", "HTTP://M.COM/p/1"),
         (11L, "doc body 3 unique words here", "http://m.com/new"),
         (12L, "wholly novel page text body", "http://m.com/p/99"))
         .toDF("doc_id", "text", "url"),
-      "doc_id", "text", Some("url"), root, n = 3, tau = 0.5, batchId = 3L)
+      "doc_id", "text", Some("url"), Nil, root, n = 3, tau = 0.5, batchId = 3L)
       .as[(Long, Option[String])].collect().toMap
     assert(v == Map(10L -> Some("url"), 11L -> Some("exact"), 12L -> None),
       s"post-fold tick $v")
@@ -887,18 +887,18 @@ class ExtOpsSpec extends AnyFunSuite {
   test("LadderRungMonitor: per-rung drop-rate CUSUM over observe " +
       "counters catches an injected url-drop spike, no extra scans") {
     import spark.implicits._
-    import graft.ext.{IncrementalDedup, LadderRungMonitor}
+    import graft.ext.{IngestLadder, LadderRungMonitor}
     val root = java.nio.file.Files.createTempDirectory("graft_ladmon").toString
     // steady state ~0 bp drops; alarm when the cumulative excess over
     // (mu + kappa) = 1500 bp passes h = 4000 bp — a 50% url-drop storm
     // (5000 bp/tick excess 3500) alarms on its second tick
     val mon = new LadderRungMonitor(mu = 0L, kappa = 1500L, h = 4000L)
     def tick(ids: Seq[Long], dupUrl: Boolean, b: Long) =
-      IncrementalDedup.admitBatchLadder(
+      IngestLadder.admitBatch(
         ids.map(i => (i, s"text body $i distinct words",
           if (dupUrl && i % 2 == 0) "http://s.com/same"
           else s"http://s.com/p/$i")).toDF("doc_id", "text", "url"),
-        "doc_id", "text", Some("url"), root, n = 3, tau = 0.5,
+        "doc_id", "text", Some("url"), Nil, root, n = 3, tau = 0.5,
         batchId = b, monitor = Some(mon))
     tick(Seq(1L, 2L, 3L, 4L), dupUrl = false, b = 0L)
     tick(Seq(11L, 12L, 13L, 14L), dupUrl = false, b = 1L)
@@ -977,7 +977,7 @@ class ExtOpsSpec extends AnyFunSuite {
       "and url admission all treat a NULL canonical key as a survivor, " +
       "never as 'the same page as every other address-less row'") {
     import spark.implicits._
-    import graft.ext.IncrementalDedup
+    import graft.ext.{IncrementalDedup, IngestLadder}
     val root = java.nio.file.Files.createTempDirectory("graft_nullurl").toString
     // two NULL-address docs with unrelated text: before the fix the url
     // window grouped them into one NULL partition and dropped doc 3
@@ -993,8 +993,8 @@ class ExtOpsSpec extends AnyFunSuite {
         n = 3, tau = 0.5)
       .as[(Long, Option[String])].collect().toMap
     assert(batch == expected, s"batch ladder $batch")
-    val composed = IncrementalDedup.admitBatchLadder(docs, "doc_id",
-        "text", Some("url"), root, n = 3, tau = 0.5, batchId = 0L)
+    val composed = IngestLadder.admitBatch(docs, "doc_id",
+        "text", Some("url"), Nil, root, n = 3, tau = 0.5, batchId = 0L)
       .as[(Long, Option[String])].collect().toMap
     assert(composed == expected, s"composed ladder $composed")
     // NULL keys never enter the key index — they identify no page
@@ -1003,11 +1003,11 @@ class ExtOpsSpec extends AnyFunSuite {
       "url index must hold no NULL key")
     // a later tick of address-less docs must pass whole, not be turned
     // away by any stored NULL key
-    val v2 = IncrementalDedup.admitBatchLadder(
+    val v2 = IngestLadder.admitBatch(
       Seq((11L, "more new content entirely", Option.empty[String]),
         (12L, "even newer page text body", Option.empty[String]))
         .toDF("doc_id", "text", "url"),
-      "doc_id", "text", Some("url"), root, n = 3, tau = 0.5, batchId = 1L)
+      "doc_id", "text", Some("url"), Nil, root, n = 3, tau = 0.5, batchId = 1L)
       .as[(Long, Option[String])].collect().toMap
     assert(v2 == Map(11L -> None, 12L -> None), s"tick2 $v2")
     // the standalone url admission tick: NULL rows admitted outside the
@@ -1033,7 +1033,7 @@ class ExtOpsSpec extends AnyFunSuite {
       "never collapse text-less rows onto one survivor, and NULL " +
       "fingerprints stay out of the fp index") {
     import spark.implicits._
-    import graft.ext.{IncrementalDedup, IngestLadder}
+    import graft.ext.IngestLadder
     val root = java.nio.file.Files
       .createTempDirectory("graft_nulltext").toString
     val docs = Seq((1L, Option("real content words here")),
@@ -1045,8 +1045,8 @@ class ExtOpsSpec extends AnyFunSuite {
         tau = 0.5)
       .as[(Long, Option[String])].collect().toMap
     assert(batch == expected, s"batch ladder $batch")
-    val composed = IncrementalDedup.admitBatchLadder(docs, "doc_id",
-        "text", None, root, n = 3, tau = 0.5, batchId = 0L)
+    val composed = IngestLadder.admitBatch(docs, "doc_id",
+        "text", None, Nil, root, n = 3, tau = 0.5, batchId = 0L)
       .as[(Long, Option[String])].collect().toMap
     assert(composed == expected, s"composed ladder $composed")
     assert(spark.read.parquet(s"$root/fp_index")
@@ -1615,7 +1615,7 @@ class ExtOpsSpec extends AnyFunSuite {
 
   test("incremental quality admission: frozen tables, restart, replay, batch parity") {
     import spark.implicits._
-    import graft.ext.{Corpus, IncrementalQuality, Materialize}
+    import graft.ext.{Corpus, IncrementalQuality, IngestLadder, Materialize}
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq = spark.sqlContext
     val root = java.nio.file.Files.createTempDirectory("graft_incqual").toString
@@ -1667,10 +1667,10 @@ class ExtOpsSpec extends AnyFunSuite {
       Seq(onTgt(9), offTgt(10), weird(11), loopy(12)))
     def admit(b: org.apache.spark.sql.DataFrame, id: Long) =
       IncrementalQuality.admitBatch(b, id, "doc_id", "text", corpusDir,
-        weights, nBuckets = 64, thrMilli = -2000L,
-        lambda = Some(lam), dsirThrX10k = 0L, minWords = 5,
-        repetition = true, repTopBpMax = repTop, repDupBpMax = repDup,
-        lm = Some(lmTable), maxMeanSurprisalX10k = 120000L)
+        IngestLadder.frozenGates(weights, nBuckets = 64, thrMilli = -2000L,
+          lambda = Some(lam), dsirThrX10k = 0L, minWords = 5,
+          repetition = true, repTopBpMax = repTop, repDupBpMax = repDup,
+          lm = Some(lmTable), maxMeanSurprisalX10k = 120000L))
     val in = MemoryStream[(Long, String)]
     def start() = in.toDS().toDF("doc_id", "text").writeStream
       .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],

@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ext.{Dedup, IncrementalDedup, IncrementalQuality, IngestLadder, TextOps}
+import graft.ext.{Corpus, Dedup, IncrementalDedup, IncrementalQuality, IngestLadder,
+  TextOps}
 
 /** The unified single-pass ingest ladder: rung composition and order,
   * one-tokenize sharing, gate-survivor vouching, index provenance
@@ -197,6 +198,52 @@ class IngestLadderSpec extends AnyFunSuite {
     assert(composed == stacked, s"composed $composed != stacked $stacked")
   }
 
+  test("a gate-less tick caches no token array: no cached relation's " +
+      "plan carries the tokenizer or a __ts column") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_ingest_nogate").toString
+    // every cached relation the tick's actions read, as (output
+    // columns, cached physical plan incl. nested caches); the listener
+    // bus is asynchronous, so the last write (the corpus slice) marks
+    // the end of the tick
+    val cached = new java.util.concurrent.ConcurrentLinkedQueue[
+      (Seq[String], String)]()
+    @volatile var sawCorpusWrite = false
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = {
+        qe.withCachedData.foreach {
+          case r: InMemoryRelation =>
+            cached.add((r.output.map(_.name), r.cachedPlan.treeString))
+          case _ =>
+        }
+        if (qe.logical.toString.contains(s"$root/corpus/batch=0"))
+          sawCorpusWrite = true
+      }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      IngestLadder.admitBatch(fixture, "doc_id", "text", Some("url"), Nil,
+        root, n = 3, tau = 0.5, batchId = 0L)
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!sawCorpusWrite && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    assert(sawCorpusWrite, "the corpus write never reached the listener")
+    import scala.jdk.CollectionConverters._
+    val rels = cached.asScala.toSeq
+    // non-vacuous: the shared normalized-text cache was seen
+    assert(rels.exists(_._1.contains("__t")), s"no __t cache among $rels")
+    val tokenized = rels.filter { case (cols, plan) =>
+      cols.contains("__ts") || plan.contains("regexp_extract_all") ||
+        plan.contains("__ts") }
+    assert(tokenized.isEmpty,
+      s"a gate-less tick cached the token array: ${tokenized.take(1)}")
+  }
+
   test("two ticks: indexes give rung-stable provenance across gates " +
       "(re-crawl of a gate-dropped page -> url; exact copy of its text " +
       "-> exact; near-dup of an admitted doc -> near); same-id replay " +
@@ -305,10 +352,10 @@ class IngestLadderSpec extends AnyFunSuite {
     // frozen tables, the Sf1EqBench admission shapes
     val weights = spark.range(64).select(col("id").as("bucket"),
       (pmod(hash(col("id")), lit(21)) - 10).cast("long").as("w"))
-    val lam = graft.ext.Corpus.dsirLambda(
+    val lam = Corpus.dsirLambda(
       docs.filter(col("doc_id") < 60), docs.filter(col("doc_id") >= 60),
       "doc_id", "text", nBuckets = 64)
-    val lm = graft.ext.Corpus.unigramLm(docs, "doc_id", "text")
+    val lm = Corpus.unigramLm(docs, "doc_id", "text")
     val gates = IngestLadder.frozenGates(weights, nBuckets = 64,
       thrMilli = -100000L, repetition = true,
       lambda = Some(lam), dsirThrX10k = -1000000L,
@@ -320,19 +367,44 @@ class IngestLadderSpec extends AnyFunSuite {
     val v = IngestLadder.admitBatch(docs, "doc_id", "text", None, gates,
         root, n = 3, tau = 0.99, batchId = 0L)
       .as[(Long, Option[String])].collect().toMap
-    val g = IncrementalQuality.gate(docs, "doc_id", "text", weights,
-      nBuckets = 64, thrMilli = -100000L, lambda = Some(lam),
-      dsirThrX10k = -1000000L, minWords = 50,
-      stopwords = graft.ext.Corpus.GopherStopwords, repetition = true,
-      Map(2 -> 2000L, 3 -> 1800L, 4 -> 1600L),
-      Map(5 -> 1500L, 6 -> 1400L, 7 -> 1300L,
-          8 -> 1200L, 9 -> 1100L, 10 -> 1000L),
-      lm = Some(lm), maxMeanSurprisalX10k = 200000L,
-      unseenNat10k = 200000L, c4 = true,
-      c4BadWords = Seq("verybadword"))
-    val stackAdmitted = g.admitted.select("doc_id").as[Long]
+    // the reference stack, composed by hand from the Corpus scorers
+    // independently of frozenGates: gopher ∩ repetition ∩ the
+    // quality+DSIR fusion ∩ LM ∩ C4, each over the (id, raw, t, ts) slice
+    val canon = docs.select(col("doc_id").as("id"), col("text").as("raw"),
+      TextOps.normalized(col("text")).as("t"),
+      TextOps.tokens(TextOps.normalized(col("text"))).as("ts"))
+    val gKeep = Corpus.gopherRulesOn(canon, minWords = 50,
+        maxWords = 100000, stopwords = Corpus.GopherStopwords)
+      .filter(col("keep")).select(col("id"))
+    val rKeep = Corpus.repetitionSignalsOn(canon,
+        topNs = Seq(2, 3, 4), dupNs = Seq(5, 6, 7, 8, 9, 10),
+        topBpMax = Map(2 -> 2000L, 3 -> 1800L, 4 -> 1600L),
+        dupBpMax = Map(5 -> 1500L, 6 -> 1400L, 7 -> 1300L,
+          8 -> 1200L, 9 -> 1100L, 10 -> 1000L))
+      .filter(col("keep")).select(col("id"))
+    val qKeep = Corpus.hashedFeaturesOn(canon, 64)
+      .join(broadcast(weights), Seq("bucket"), "left")
+      .withColumn("w", coalesce(col("w"), lit(0L)))
+      .join(broadcast(lam), Seq("bucket"))
+      .groupBy(col("id"))
+      .agg(count(lit(1)).as("n_features"), sum(col("w")).as("logit"),
+        sum(col("lam")).as("dsir_x10k"))
+      .filter(col("logit") * 1000 >= lit(-100000L) * col("n_features") &&
+        col("dsir_x10k") >= -1000000L)
+      .select(col("id"))
+    val lmKeep = Corpus.surprisalAgainstOn(canon, lm, 200000L)
+      .filter(col("mean_surprisal_x10k") <= 200000L).select(col("id"))
+    val c4Keep = Corpus.c4Rules(canon, "id", "raw", Seq("verybadword"))
+      .filter(col("keep")).select(col("id"))
+    val stackAdmitted = Seq(gKeep, rKeep, qKeep, lmKeep, c4Keep)
+      .reduce(_.join(_, Seq("id"))).as[Long].collect().toSet
+    // the standalone admission loop's gate runs the same battery
+    val g = IncrementalQuality.gate(docs, "doc_id", "text", gates)
+    val gateAdmitted = g.admitted.select("doc_id").as[Long]
       .collect().toSet
     g.release()
+    assert(gateAdmitted == stackAdmitted,
+      s"IncrementalQuality.gate $gateAdmitted != stack $stackAdmitted")
     val composedAdmitted = v.collect { case (id, None) => id }.toSet
     val gateTags = Set("gopher", "c4", "quality")
     assert(v.values.flatten.forall(gateTags), s"non-gate drops in $v")

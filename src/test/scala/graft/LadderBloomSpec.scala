@@ -48,15 +48,15 @@ class LadderBloomSpec extends AnyFunSuite {
     implicit val s = spark
     val plainRoot = tmp("lbl_plain"); val bloomRoot = tmp("lbl_bloom")
     def run(root: String, bloom: Boolean): (Map[Long, Option[String]], Seq[Long]) = {
-      IncrementalDedup.admitBatchLadder(tick1, "doc_id", "text",
-        Some("url"), root, n = 3, tau = 0.5, batchId = 0L)
+      IngestLadder.admitBatch(tick1, "doc_id", "text",
+        Some("url"), Nil, root, n = 3, tau = 0.5, batchId = 0L)
       if (bloom) {
         val built = LadderBloom.buildAll(spark, root, committedBelow = 1L)
         assert(built("url_index") > 0 && built("fp_index") > 0 &&
           built("postings") > 0, s"sidecars built over tick 1: $built")
       }
-      val v2 = IncrementalDedup.admitBatchLadder(tick2, "doc_id", "text",
-          Some("url"), root, n = 3, tau = 0.5, batchId = 1L)
+      val v2 = IngestLadder.admitBatch(tick2, "doc_id", "text",
+          Some("url"), Nil, root, n = 3, tau = 0.5, batchId = 1L)
         .as[(Long, Option[String])].collect().toMap
       val corpus = spark.read.parquet(s"$root/corpus")
         .select("doc_id").as[Long].collect().toSeq.sorted
@@ -79,15 +79,15 @@ class LadderBloomSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val s = spark
     val root = tmp("lbl_novel")
-    IncrementalDedup.admitBatchLadder(tick1, "doc_id", "text",
-      Some("url"), root, n = 3, tau = 0.5, batchId = 0L)
+    IngestLadder.admitBatch(tick1, "doc_id", "text",
+      Some("url"), Nil, root, n = 3, tau = 0.5, batchId = 0L)
     LadderBloom.buildAll(spark, root, committedBelow = 1L)
     val novel = Seq(
       (21L, "entirely fresh content about orchards", "http://e.com/1"),
       (22L, "another unrelated page on sailing knots", "http://e.com/2"))
       .toDF("doc_id", "text", "url")
-    val v = IncrementalDedup.admitBatchLadder(novel, "doc_id", "text",
-        Some("url"), root, n = 3, tau = 0.5, batchId = 1L)
+    val v = IngestLadder.admitBatch(novel, "doc_id", "text",
+        Some("url"), Nil, root, n = 3, tau = 0.5, batchId = 1L)
       .as[(Long, Option[String])].collect().toMap
     assert(v == Map(21L -> None, 22L -> None), s"novel tick verdicts $v")
   }
@@ -98,21 +98,21 @@ class LadderBloomSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val s = spark
     val root = tmp("lbl_tail")
-    IncrementalDedup.admitBatchLadder(tick1, "doc_id", "text",
-      Some("url"), root, n = 3, tau = 0.5, batchId = 0L)
+    IngestLadder.admitBatch(tick1, "doc_id", "text",
+      Some("url"), Nil, root, n = 3, tau = 0.5, batchId = 0L)
     LadderBloom.buildAll(spark, root, committedBelow = 1L)
     // tick 2 writes batch=1 partitions — ABOVE the sidecar watermark
     val t2 = Seq((31L, "a page about volcanic glass formation",
       "http://f.com/obsidian")).toDF("doc_id", "text", "url")
-    IncrementalDedup.admitBatchLadder(t2, "doc_id", "text", Some("url"),
+    IngestLadder.admitBatch(t2, "doc_id", "text", Some("url"), Nil,
       root, n = 3, tau = 0.5, batchId = 1L)
     assert(LadderBloom.read(spark, root, "url_index").get.coveredBelow == 1L)
     // tick 3 re-crawls the tick-2 page: its key is NOT in the stale
     // sidecar, so only the exact tail probe can catch it — and must
     val t3 = Seq((41L, "mirror copy text of something else",
       "HTTP://F.COM/obsidian")).toDF("doc_id", "text", "url")
-    val v3 = IncrementalDedup.admitBatchLadder(t3, "doc_id", "text",
-        Some("url"), root, n = 3, tau = 0.5, batchId = 2L)
+    val v3 = IngestLadder.admitBatch(t3, "doc_id", "text",
+        Some("url"), Nil, root, n = 3, tau = 0.5, batchId = 2L)
       .as[(Long, Option[String])].collect().toMap
     assert(v3 == Map(41L -> Some("url")), s"tail probe missed: $v3")
     // maintenance folds batches 0..2 into batch=-1 and MUST rebuild the
@@ -123,8 +123,8 @@ class LadderBloomSpec extends AnyFunSuite {
     assert(sc.coveredBelow == 3L, s"sidecar not rebuilt: $sc")
     val t4 = Seq((51L, "yet another mirror fetch of that page",
       "http://f.com/obsidian?utm_source=x")).toDF("doc_id", "text", "url")
-    val v4 = IncrementalDedup.admitBatchLadder(t4, "doc_id", "text",
-        Some("url"), root, n = 3, tau = 0.5, batchId = 3L)
+    val v4 = IngestLadder.admitBatch(t4, "doc_id", "text",
+        Some("url"), Nil, root, n = 3, tau = 0.5, batchId = 3L)
       .as[(Long, Option[String])].collect().toMap
     assert(v4 == Map(51L -> Some("url")), s"folded-key probe missed: $v4")
   }
@@ -167,8 +167,8 @@ class LadderBloomSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val s = spark
     val root = tmp("lbl_rev")
-    IncrementalDedup.admitBatchLadder(tick1, "doc_id", "text",
-      Some("url"), root, n = 3, tau = 0.5, batchId = 0L)
+    IngestLadder.admitBatch(tick1, "doc_id", "text",
+      Some("url"), Nil, root, n = 3, tau = 0.5, batchId = 0L)
     LadderBloom.buildAll(spark, root, committedBelow = 1L)
     val sc = LadderBloom.read(spark, root, "url_index")
     val keys = Seq(
@@ -223,8 +223,8 @@ class LadderBloomSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val s = spark
     val root = tmp("lbl_bskip")
-    IncrementalDedup.admitBatchLadder(tick1, "doc_id", "text",
-      Some("url"), root, n = 3, tau = 0.5, batchId = 0L)
+    IngestLadder.admitBatch(tick1, "doc_id", "text",
+      Some("url"), Nil, root, n = 3, tau = 0.5, batchId = 0L)
     LadderBloom.buildAll(spark, root, committedBelow = 1L)
     val posts = graft.ext.Dedup.shinglePostings(
       Seq((301L, "one two three four five six seven ten"))
@@ -275,16 +275,16 @@ class LadderBloomSpec extends AnyFunSuite {
       val root = tmp(if (bloom) "lbl_hot_b" else "lbl_hot_p")
       val t0 = Seq((1L, "x y z a1 a2 a3"), (2L, "x y z b1 b2 b3"))
         .toDF("doc_id", "text")
-      IncrementalDedup.admitBatchLadder(t0, "doc_id", "text", None,
+      IngestLadder.admitBatch(t0, "doc_id", "text", None, Nil,
         root, n = 3, tau = 0.2, batchId = 0L, maxDocFreq = 2)
       if (bloom) LadderBloom.buildAll(spark, root, committedBelow = 1L)
       val t1 = Seq((3L, "x y z c1 c2 c3")).toDF("doc_id", "text")
-      IncrementalDedup.admitBatchLadder(t1, "doc_id", "text", None,
+      IngestLadder.admitBatch(t1, "doc_id", "text", None, Nil,
         root, n = 3, tau = 0.2, batchId = 1L, maxDocFreq = 2)
       // probe doc: J vs doc 1 is 2/6 = 0.33 WITH the hot shingle but
       // 1/7 = 0.14 once it is pruned — the τ = 0.2 cut discriminates
       val t2 = Seq((4L, "x y z a1 p1 p2")).toDF("doc_id", "text")
-      IncrementalDedup.admitBatchLadder(t2, "doc_id", "text", None,
+      IngestLadder.admitBatch(t2, "doc_id", "text", None, Nil,
           root, n = 3, tau = 0.2, batchId = 2L, maxDocFreq = 2)
         .as[(Long, Option[String])].collect().toMap
     }
@@ -299,14 +299,14 @@ class LadderBloomSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val s = spark
     val root = tmp("lbl_size")
-    IncrementalDedup.admitBatchLadder(tick1, "doc_id", "text",
-      Some("url"), root, n = 3, tau = 0.5, batchId = 0L)
+    IngestLadder.admitBatch(tick1, "doc_id", "text",
+      Some("url"), Nil, root, n = 3, tau = 0.5, batchId = 0L)
     LadderBloom.build(spark, root, "url_index", committedBelow = 1L,
       bitsPerKey = 20, k = 7)
     assert(LadderBloom.readMeta(spark, root, "url_index")
       .contains((20, 7)))
-    IncrementalDedup.admitBatchLadder(tick2, "doc_id", "text",
-      Some("url"), root, n = 3, tau = 0.5, batchId = 1L)
+    IngestLadder.admitBatch(tick2, "doc_id", "text",
+      Some("url"), Nil, root, n = 3, tau = 0.5, batchId = 1L)
     IncrementalDedup.maintainLadder(spark, root, committedBelow = 2L)
     val sc = LadderBloom.read(spark, root, "url_index").get
     assert(sc.coveredBelow == 2L, s"sidecar not rebuilt: $sc")
@@ -323,8 +323,8 @@ class LadderBloomSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val s = spark
     val root = tmp("lbl_prim")
-    IncrementalDedup.admitBatchLadder(tick1, "doc_id", "text",
-      Some("url"), root, n = 3, tau = 0.5, batchId = 0L)
+    IngestLadder.admitBatch(tick1, "doc_id", "text",
+      Some("url"), Nil, root, n = 3, tau = 0.5, batchId = 0L)
     val n = LadderBloom.build(spark, root, "url_index", committedBelow = 1L)
     val stored = spark.read.parquet(s"$root/url_index")
       .select("url_key").as[String].collect()

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.ext.{Dedup, IncrementalDedup, LadderBloom, Layout}
+import graft.ext.{Dedup, IncrementalDedup, IngestLadder, LadderBloom, Layout}
 
 /** [[IncrementalDedup.applyReconcile]] — the serialized apply step that
   * converges the streaming corpus to batch-ladder semantics — and
@@ -31,9 +31,9 @@ class ReconcileApplySpec extends AnyFunSuite {
       (2L, "w3 w4 w5 w6 w7 w8 w9 w10")).toDF("doc_id", "text")
     val tick2 = Seq(
       (11L, "w5 w6 w7 w8 w9 w10 w11 w12")).toDF("doc_id", "text")
-    IncrementalDedup.admitBatchLadder(tick1, "doc_id", "text", None,
+    IngestLadder.admitBatch(tick1, "doc_id", "text", None, Nil,
       root, n = 3, tau = 0.5, batchId = 0L)
-    IncrementalDedup.admitBatchLadder(tick2, "doc_id", "text", None,
+    IngestLadder.admitBatch(tick2, "doc_id", "text", None, Nil,
       root, n = 3, tau = 0.5, batchId = 1L)
     root
   }
@@ -95,16 +95,16 @@ class ReconcileApplySpec extends AnyFunSuite {
     import spark.implicits._
     val root = tmp("rca_nonmono")
     // tick 0: doc 10 admitted alone
-    IncrementalDedup.admitBatchLadder(
+    IngestLadder.admitBatch(
       Seq((10L, "w1 w2 w3 w4 w5 w6 w7 w8")).toDF("doc_id", "text"),
-      "doc_id", "text", None, root, n = 3, tau = 0.5, batchId = 0L)
+      "doc_id", "text", None, Nil, root, n = 3, tau = 0.5, batchId = 0L)
     // tick 1 (ids SMALLER than tick 0's): doc 2 ~ 10 drops near vs the
     // index (evidence, id below every admitted id); doc 6 ~ 2 but
     // 6 !~ 10 is admitted — the chain runs through evidence doc 2
-    val v1 = IncrementalDedup.admitBatchLadder(
+    val v1 = IngestLadder.admitBatch(
       Seq((2L, "w3 w4 w5 w6 w7 w8 w9 w10"),
         (6L, "w5 w6 w7 w8 w9 w10 w11 w12")).toDF("doc_id", "text"),
-      "doc_id", "text", None, root, n = 3, tau = 0.5, batchId = 1L)
+      "doc_id", "text", None, Nil, root, n = 3, tau = 0.5, batchId = 1L)
       .as[(Long, Option[String])].collect().toMap
     assert(v1 == Map(2L -> Some("near"), 6L -> None), s"tick1 $v1")
     // component {2, 6, 10}: raw minimum is EVIDENCE doc 2 — anchoring
@@ -446,7 +446,7 @@ class ReconcileApplySpec extends AnyFunSuite {
     // (J = 2/10): its shingles hit the stale sidecar bits, the exact
     // probe finds no stored row, the doc is admitted
     val t = Seq((21L, "w5 w6 w7 w8 w9 w10 w11 w13")).toDF("doc_id", "text")
-    val v = IncrementalDedup.admitBatchLadder(t, "doc_id", "text", None,
+    val v = IngestLadder.admitBatch(t, "doc_id", "text", None, Nil,
         root, n = 3, tau = 0.5, batchId = 2L)
       .as[(Long, Option[String])].collect().toMap
     assert(v == Map(21L -> None), s"stale positive must fall through: $v")
@@ -503,9 +503,9 @@ class ReconcileApplySpec extends AnyFunSuite {
     // the rewritten partition (11 retired) is live and doc 21 ~ 11 is
     // STILL admitted — but through the recovered, correct state
     val r1 = chainRoot("rca_rec_tick"); crash(r1)
-    val v = IncrementalDedup.admitBatchLadder(
+    val v = IngestLadder.admitBatch(
         Seq((21L, "w5 w6 w7 w8 w9 w10 w11 w13")).toDF("doc_id", "text"),
-        "doc_id", "text", None, r1, n = 3, tau = 0.5, batchId = 2L)
+        "doc_id", "text", None, Nil, r1, n = 3, tau = 0.5, batchId = 2L)
       .as[(Long, Option[String])].collect().toMap
     assert(v == Map(21L -> None))
     assert(postingIds(r1, "postings") == Set(1L, 21L),
@@ -606,15 +606,15 @@ class ReconcileApplySpec extends AnyFunSuite {
     // the q-chain (30 — 31 evidence — 41), disjoint vocabularies so
     // neither interferes with the other at ingest
     val root = tmp("rca_adv")
-    IncrementalDedup.admitBatchLadder(Seq(
+    IngestLadder.admitBatch(Seq(
         (1L, "w1 w2 w3 w4 w5 w6 w7 w8"),
         (2L, "w3 w4 w5 w6 w7 w8 w9 w10"),
         (30L, "q1 q2 q3 q4 q5 q6 q7 q8"),
         (31L, "q3 q4 q5 q6 q7 q8 q9 q10")).toDF("doc_id", "text"),
-      "doc_id", "text", None, root, n = 3, tau = 0.5, batchId = 0L)
-    IncrementalDedup.admitBatchLadder(
+      "doc_id", "text", None, Nil, root, n = 3, tau = 0.5, batchId = 0L)
+    IngestLadder.admitBatch(
       Seq((11L, "w5 w6 w7 w8 w9 w10 w11 w12")).toDF("doc_id", "text"),
-      "doc_id", "text", None, root, n = 3, tau = 0.5, batchId = 1L)
+      "doc_id", "text", None, Nil, root, n = 3, tau = 0.5, batchId = 1L)
     // the mid-apply crash state for doc 11 (verdicts + corpus done,
     // postings untouched — steps 1-2 of the subtree order)
     val vDir = s"$root/verdicts"
@@ -637,9 +637,9 @@ class ReconcileApplySpec extends AnyFunSuite {
     // tick 2 brings the q-chain's cross-tick doc (41 ~ 31 evidence,
     // far from 30): admitted at ingest — the re-derived delta is now
     // {11 (half-applied), 41 (fresh, in the uncommitted tick)}
-    IncrementalDedup.admitBatchLadder(
+    IngestLadder.admitBatch(
       Seq((41L, "q5 q6 q7 q8 q9 q10 q11 q12")).toDF("doc_id", "text"),
-      "doc_id", "text", None, root, n = 3, tau = 0.5, batchId = 2L)
+      "doc_id", "text", None, Nil, root, n = 3, tau = 0.5, batchId = 2L)
     // window INSIDE tick 2 (committedBelow = 2): 11 is in scope (its
     // postings finish retiring), 41 is NOT (its partition is the
     // uncommitted tick) — partial scope, so retirement and the
@@ -682,8 +682,8 @@ class ReconcileApplySpec extends AnyFunSuite {
     // 3/9 < 0.5: w's only path to the corpus is through y
     def arriveW(root: String): Unit = {
       val t = Seq((21L, "w4 w5 w6 w7 w8 w9 w10 w11")).toDF("doc_id", "text")
-      val v = IncrementalDedup.admitBatchLadder(t, "doc_id", "text",
-          None, root, n = 3, tau = 0.5, batchId = 2L)
+      val v = IngestLadder.admitBatch(t, "doc_id", "text",
+          None, Nil, root, n = 3, tau = 0.5, batchId = 2L)
         .as[(Long, Option[String])].collect().toMap
       assert(v == Map(21L -> None), s"ingest admits w either way: $v")
     }

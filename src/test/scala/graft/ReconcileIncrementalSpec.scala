@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.ext.{IncrementalDedup, Layout}
+import graft.ext.{IncrementalDedup, IngestLadder, Layout}
 
 /** [[IncrementalDedup.reconcileNearIncremental]] — the frontier-seeded
   * reconcile — and the persisted completed-reconcile watermark history
@@ -52,21 +52,21 @@ class ReconcileIncrementalSpec extends AnyFunSuite {
   private def seedRoot(tag: String): String = {
     import spark.implicits._
     val root = tmp(tag)
-    IncrementalDedup.admitBatchLadder(Seq(
+    IngestLadder.admitBatch(Seq(
         (1L, "w1 w2 w3 w4 w5 w6 w7 w8"),
         (2L, "w3 w4 w5 w6 w7 w8 w9 w10"),
         (30L, "q1 q2 q3 q4 q5 q6 q7 q8"),
         (31L, "q2 q3 q4 q5 q6 q7 q8 q9")).toDF("doc_id", "text"),
-      "doc_id", "text", None, root, n = 3, tau = 0.5, batchId = 0L)
+      "doc_id", "text", None, Nil, root, n = 3, tau = 0.5, batchId = 0L)
     root
   }
   // tick 1: z (11) ~ y but z !~ x — the chain the incremental seed
   // must walk BACKWARDS across the watermark through OLD evidence
   private def tickZ(root: String): Unit = {
     import spark.implicits._
-    IncrementalDedup.admitBatchLadder(
+    IngestLadder.admitBatch(
       Seq((11L, "w5 w6 w7 w8 w9 w10 w11 w12")).toDF("doc_id", "text"),
-      "doc_id", "text", None, root, n = 3, tau = 0.5, batchId = 1L)
+      "doc_id", "text", None, Nil, root, n = 3, tau = 0.5, batchId = 1L)
   }
 
   test("delta-equivalence to the full reconcile: a chain crossing the " +
@@ -185,13 +185,13 @@ class ReconcileIncrementalSpec extends AnyFunSuite {
       "independently — the fold markers never fight") {
     import spark.implicits._
     val root = tmp("rni_movedkey")
-    IncrementalDedup.admitBatchLadder(Seq(
+    IngestLadder.admitBatch(Seq(
         (1L, "w1 w2 w3 w4 w5 w6 w7 w8"),
         (2L, "w3 w4 w5 w6 w7 w8 w9 w10")).toDF("doc_id", "text"),
-      "doc_id", "text", None, root, n = 3, tau = 0.5, batchId = 0L)
-    IncrementalDedup.admitBatchLadder(
+      "doc_id", "text", None, Nil, root, n = 3, tau = 0.5, batchId = 0L)
+    IngestLadder.admitBatch(
       Seq((11L, "w5 w6 w7 w8 w9 w10 w11 w12")).toDF("doc_id", "text"),
-      "doc_id", "text", None, root, n = 3, tau = 0.5, batchId = 1L)
+      "doc_id", "text", None, Nil, root, n = 3, tau = 0.5, batchId = 1L)
     // the lag shape: evidence folded at 1 (lagged cap), postings at 2
     // (full) — the two trees' coverages diverge
     Layout.foldBatchPartitions(spark, s"$root/postings_dropped", 1L)
@@ -277,10 +277,10 @@ class ReconcileIncrementalSpec extends AnyFunSuite {
         sequence(col("id") % 3 * 2, col("id") % 3 * 2 + 7),
         k => concat(lit("g"), expr("id div 3").cast("string"),
           lit("w"), k.cast("string")))).as("text"))
-    IncrementalDedup.admitBatchLadder(rd.filter(col("doc_id") % 3 =!= 2),
-      "doc_id", "text", None, root, n = 3, tau = 0.5, batchId = 0L)
-    IncrementalDedup.admitBatchLadder(rd.filter(col("doc_id") % 3 === 2),
-      "doc_id", "text", None, root, n = 3, tau = 0.5, batchId = 1L)
+    IngestLadder.admitBatch(rd.filter(col("doc_id") % 3 =!= 2),
+      "doc_id", "text", None, Nil, root, n = 3, tau = 0.5, batchId = 0L)
+    IngestLadder.admitBatch(rd.filter(col("doc_id") % 3 === 2),
+      "doc_id", "text", None, Nil, root, n = 3, tau = 0.5, batchId = 1L)
     IncrementalDedup.applyReconcile(spark, root, "doc_id",
       IncrementalDedup.reconcileNear(spark, root, tau = 0.5),
       committedBelow = 2L, recordWatermark = true)
@@ -292,8 +292,8 @@ class ReconcileIncrementalSpec extends AnyFunSuite {
       concat_ws(" ", transform(sequence(lit(6), lit(13)),
         k => concat(lit("g"), col("id").cast("string"),
           lit("w"), k.cast("string")))).as("text"))
-    val v = IncrementalDedup.admitBatchLadder(tick, "doc_id", "text",
-        None, root, n = 3, tau = 0.5, batchId = 2L)
+    val v = IngestLadder.admitBatch(tick, "doc_id", "text",
+        None, Nil, root, n = 3, tau = 0.5, batchId = 2L)
       .select(col("id"), col("dropped_at"))
       .as[(Long, Option[String])].collect().toMap
     assert(v.values.forall(_.isEmpty), s"tick must admit whole: $v")
@@ -320,13 +320,13 @@ class ReconcileIncrementalSpec extends AnyFunSuite {
     // retires, and the evidence subtree must NOT be folded past the
     // (nonexistent) retire watermark
     assert(window(1L)("evidence_partitions_retired") == 0L)
-    IncrementalDedup.admitBatchLadder(
+    IngestLadder.admitBatch(
       Seq((40L, "z1 z2 z3 z4 z5 z6 z7 z8")).toDF("doc_id", "text"),
-      "doc_id", "text", None, root, n = 3, tau = 0.5, batchId = 1L)
+      "doc_id", "text", None, Nil, root, n = 3, tau = 0.5, batchId = 1L)
     assert(window(2L)("evidence_partitions_retired") == 0L)
-    IncrementalDedup.admitBatchLadder(
+    IngestLadder.admitBatch(
       Seq((41L, "y1 y2 y3 y4 y5 y6 y7 y8")).toDF("doc_id", "text"),
-      "doc_id", "text", None, root, n = 3, tau = 0.5, batchId = 2L)
+      "doc_id", "text", None, Nil, root, n = 3, tau = 0.5, batchId = 2L)
     spark.sharedState.cacheManager.clearCache()
     // window 3: watermarks [1,2,3] — retire at the 2-older entry (1):
     // the batch-0 evidence (docs 2, 31) is finally below a covered
@@ -353,28 +353,28 @@ class ReconcileIncrementalSpec extends AnyFunSuite {
     // pruned everywhere. A' and B ALSO share u = (u1 u2 u3); with s
     // pruned J(A',B) = 1/8 < tau, with s counted 2/7 >= tau — the
     // edge only the un-pruning creates.
-    IncrementalDedup.admitBatchLadder(Seq(
+    IngestLadder.admitBatch(Seq(
         (1L, "d1 d2 c1 c2"),                  // D: y's voucher
         (2L, "d1 d2 c1 c2 c3 k1 k5"),         // y: evidence, ~D, ~C1
         (3L, "d5 d6 c1 c2"),                  // D': y''s voucher
         (4L, "d5 d6 c1 c2 c3 k2 k6"),         // y': evidence, ~D', ~C2
         (5L, "c1 c2 c3 u1 u2 u3")             // A': carries s and u
       ).toDF("doc_id", "text"),
-      "doc_id", "text", None, root, n = 3, tau = tau, batchId = 0L,
+      "doc_id", "text", None, Nil, root, n = 3, tau = tau, batchId = 0L,
       maxDocFreq = dial)
     // C1 ~ y (through non-s shingles), C1 !~ D: the documented
     // divergence — admitted now, reconciled away at the window. Same
     // for C2 ~ y'. Both carry s.
-    IncrementalDedup.admitBatchLadder(Seq(
+    IngestLadder.admitBatch(Seq(
         (11L, "c1 c2 c3 k1 k5"), (12L, "c1 c2 c3 k2 k6"))
         .toDF("doc_id", "text"),
-      "doc_id", "text", None, root, n = 3, tau = tau, batchId = 1L,
+      "doc_id", "text", None, Nil, root, n = 3, tau = tau, batchId = 1L,
       maxDocFreq = dial)
     // B: admitted BECAUSE s is ingest-hot (admitted carriers A', C1,
     // C2 = 3 > dial) — unpruned it would match A' at 2/7 >= tau
-    IncrementalDedup.admitBatchLadder(
+    IngestLadder.admitBatch(
       Seq((21L, "c1 c2 c3 z u1 u2 u3")).toDF("doc_id", "text"),
-      "doc_id", "text", None, root, n = 3, tau = tau, batchId = 2L,
+      "doc_id", "text", None, Nil, root, n = 3, tau = tau, batchId = 2L,
       maxDocFreq = dial)
     spark.sharedState.cacheManager.clearCache()
     assert(spark.read.parquet(s"$root/verdicts")
@@ -440,11 +440,11 @@ class ReconcileIncrementalSpec extends AnyFunSuite {
       s"one watermark, lag 1: $w1")
     assert(evidenceIds(root) == Set(2L, 31L), "evidence kept under lag")
     // tick 1 brings z (chains through y) plus a fresh evidence pair
-    IncrementalDedup.admitBatchLadder(Seq(
+    IngestLadder.admitBatch(Seq(
         (11L, "w5 w6 w7 w8 w9 w10 w11 w12"),
         (20L, "r1 r2 r3 r4 r5 r6 r7 r8"),
         (21L, "r2 r3 r4 r5 r6 r7 r8 r9")).toDF("doc_id", "text"),
-      "doc_id", "text", None, root, n = 3, tau = 0.5, batchId = 1L)
+      "doc_id", "text", None, Nil, root, n = 3, tau = 0.5, batchId = 1L)
     spark.sharedState.cacheManager.clearCache()
     // window 2 (lag 1): retires at watermark 1 — the PRE-window-1
     // evidence partitions (batch=-1, fold-covered at 1) go; the tick-1

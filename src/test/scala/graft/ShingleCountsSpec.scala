@@ -45,15 +45,15 @@ class ShingleCountsSpec extends AnyFunSuite {
   private def seedRoot(tag: String): String = {
     import spark.implicits._
     val root = tmp(tag)
-    IncrementalDedup.admitBatchLadder(Seq(
+    IngestLadder.admitBatch(Seq(
         (1L, "w1 w2 w3 w4 w5 w6 w7 w8"),
         (2L, "w3 w4 w5 w6 w7 w8 w9 w10"),
         (30L, "q1 q2 q3 q4 q5 q6 q7 q8"),
         (31L, "q2 q3 q4 q5 q6 q7 q8 q9")).toDF("doc_id", "text"),
-      "doc_id", "text", None, root, n = 3, tau = 0.5, batchId = 0L)
-    IncrementalDedup.admitBatchLadder(
+      "doc_id", "text", None, Nil, root, n = 3, tau = 0.5, batchId = 0L)
+    IngestLadder.admitBatch(
       Seq((11L, "w5 w6 w7 w8 w9 w10 w11 w12")).toDF("doc_id", "text"),
-      "doc_id", "text", None, root, n = 3, tau = 0.5, batchId = 1L)
+      "doc_id", "text", None, Nil, root, n = 3, tau = 0.5, batchId = 1L)
     root
   }
 
@@ -110,9 +110,9 @@ class ShingleCountsSpec extends AnyFunSuite {
       "the uncommitted tick's counts live in its own partition")
     // the uncommitted tick REPLAYS (at-least-once redelivery): its
     // per-batch Overwrite must leave the totals exact, not doubled
-    IncrementalDedup.admitBatchLadder(
+    IngestLadder.admitBatch(
       Seq((11L, "w5 w6 w7 w8 w9 w10 w11 w12")).toDF("doc_id", "text"),
-      "doc_id", "text", None, root, n = 3, tau = 0.5, batchId = 1L)
+      "doc_id", "text", None, Nil, root, n = 3, tau = 0.5, batchId = 1L)
     assertExact(root, "after the uncommitted tick's replay")
     // idempotent: a second call is a no-op
     assert(IncrementalDedup.ensureShingleCounts(spark, root, 2L) == -1L)

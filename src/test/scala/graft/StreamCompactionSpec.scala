@@ -97,8 +97,8 @@ class StreamCompactionSpec extends AnyFunSuite {
       .writeStream
       .option("checkpointLocation", ckpt)
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        graft.ext.IncrementalDedup.admitBatchLadder(
-          b, "doc_id", "text", Some("url"), root, n = 3, tau = 0.5,
+        graft.ext.IngestLadder.admitBatch(
+          b, "doc_id", "text", Some("url"), Nil, root, n = 3, tau = 0.5,
           batchId = id)
         ()
       }.start()
@@ -193,8 +193,8 @@ class StreamCompactionSpec extends AnyFunSuite {
       .writeStream
       .option("checkpointLocation", ckpt)
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        graft.ext.IncrementalDedup.admitBatchLadder(
-          b, "doc_id", "text", Some("url"), root, n = 3, tau = 0.5,
+        graft.ext.IngestLadder.admitBatch(
+          b, "doc_id", "text", Some("url"), Nil, root, n = 3, tau = 0.5,
           batchId = id)
         // the maintenance window rides the SAME serialized body: every
         // 2nd tick, fold committed partitions and (re)build sidecars at
