@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.{call_function, lit, typedlit}
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native Catalyst expression for cosine similarity over two
   * `array<float>` columns.
@@ -947,7 +947,12 @@ object VectorFunctions {
       ProbeCentroids(exprs(0), matArg(exprs(1)), longsArg(exprs(2)),
         intArg(exprs(3)))),
     "best_centroid_sim" -> (exprs =>
-      BestCentroidSim(exprs(0), matArg(exprs(1)), longsArg(exprs(2)))))
+      BestCentroidSim(exprs(0), matArg(exprs(1)), longsArg(exprs(2)))),
+    // a merge batch's keys arrive as one foldable typed array literal,
+    // folded into ONE KeySet reference object at resolution time
+    "key_not_in" -> (exprs => KeyNotIn(exprs(0), new KeySet(
+      exprs(1).eval(null).asInstanceOf[ArrayData],
+      exprs(1).dataType.asInstanceOf[ArrayType].elementType))))
 
   /** Idempotent per-session registration (temp functions). Sessions built
     * through [[GraftExtensions]] get them injected; this covers foreign
@@ -986,6 +991,13 @@ object VectorFunctions {
     call_function("probe_centroids", emb,
       typedlit(cents.map(_._2.toSeq).toSeq), typedlit(cents.map(_._1).toSeq),
       lit(nProbe))
+
+  /** Column API for [[KeyNotIn]]: true where `key` is null or not one of
+    * `keys`, Scala values of `keyType`. The keys ride as one typed
+    * literal → reference object, so plans stay O(1) in the key count.
+    */
+  def keyNotIn(key: Column, keys: Seq[Any], keyType: DataType): Column =
+    call_function("key_not_in", key, lit(Literal.create(keys, ArrayType(keyType))))
 
   /** Column API for [[NfcNormalize]]: Unicode NFC canonicalization. */
   def nfcNormalize(c: Column): Column = call_function("nfc_normalize", c)

@@ -27,9 +27,9 @@ import graft.sink.MergeSink
   *   - one collect of the fan-out frame's `(db_name, tb_name, pk)`
   *     per batch gives the target tables, the report's row counts and
   *     each table's merge keys — no emptiness probe, no `distinct()`
-  *     job, no closing counts, and the sink broadcasts a driver-local
-  *     key relation instead of re-scanning the cache per table (the
-  *     reference probes with `rdd.count()` and window-sorts the
+  *     job, no closing counts, and the file sink filters each target
+  *     by its table's keys instead of re-scanning the cache for them
+  *     (the reference probes with `rdd.count()` and window-sorts the
   *     targets, W4);
   *   - `maxOffsetsPerTrigger` is actually wired (declared dead in the
   *     reference config contract, readme.md:27);
@@ -38,11 +38,10 @@ import graft.sink.MergeSink
   *
   * Scale posture: per-table work runs on a driver thread pool like the
   * reference (tables within a batch parallel, batches serial). The key
-  * collect holds one batch's compacted keys on the driver — the rows
-  * the file sink's broadcast anti-joins already collected there, a
-  * table at a time — which `maxOffsetsPerTrigger` bounds; a fan-out to
-  * millions of partitions would switch to `partitionBy` on write —
-  * noted in SURVEY §7.3.
+  * collect holds one batch's compacted keys on the driver — the keys
+  * the file sink's per-table filters need there anyway — which
+  * `maxOffsetsPerTrigger` bounds; a fan-out to millions of partitions
+  * would switch to `partitionBy` on write — noted in SURVEY §7.3.
   */
 final class CdcPipeline(
     format: CdcFormat,

@@ -1,10 +1,9 @@
 package graft.sink
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+
+import graft.functions.VectorFunctions
 
 /** CDC merge semantics, engine-side.
   *
@@ -13,48 +12,50 @@ import org.apache.spark.sql.types.StructType
   * (src/glue_pg_redshift_cdc.py:179-190) or `MERGE INTO` for DMS
   * (src/glue_dms_redshift_cdc.py:104-110). This object expresses the same
   * upsert+delete semantics as a Spark plan, for file-based targets and
-  * for tests: delete-then-insert ≡ anti-join + union.
+  * for tests: delete-then-insert ≡ key-set filter + union.
   *
   * Scale: `updates` is one compacted micro-batch — small relative to the
-  * target — so its keys are broadcast into the anti-join; the 100 TB
-  * target is never shuffled.
+  * target — so its keys are held on the driver and filter the target
+  * in place; the 100 TB target is never shuffled or joined.
   */
 object Merge {
 
+  /** The values of `key` in `updates`, collected to the driver. */
+  def keysOf(updates: DataFrame, key: String): Seq[Any] =
+    updates.select(key).collect().map(_.get(0)).toSeq
+
   /** Apply one compacted batch of updates to a target snapshot.
     *
-    * The anti-join's broadcast side is the batch's keys. By default they
-    * are `updates.select(keys)`, so the broadcast re-runs `updates`' plan
-    * (a scan of the compacted cache, in the pipeline). A caller that
-    * already holds the keys on the driver passes them as `keyRows`: the
-    * broadcast is then a driver-local relation of those rows, with no
-    * pass over `updates`. Either way the broadcast collects every key to
-    * the driver, so driver memory bounds the batch's key count — the
-    * micro-batch regime, where `maxOffsetsPerTrigger` caps it.
+    * The target keeps every row whose key is null or not among the
+    * batch's keys — one [[graft.functions.KeyNotIn]] filter, the
+    * `DELETE … USING stage` of the reference — and the batch's
+    * non-deletes are unioned in. The keys are `keyValues` when the
+    * caller already holds them on the driver (the pipeline's key pass),
+    * else `keysOf(updates, key)`, which runs one job before this
+    * returns. Either way every key is held on the driver, so driver
+    * memory bounds the batch's key count — the micro-batch regime,
+    * where `maxOffsetsPerTrigger` caps it. Applying the result reads
+    * `target` and `updates` once each, in one job, with no exchange.
     *
-    * @param target  current table state (may be huge)
-    * @param updates compacted batch: exactly one row per key, with an
-    *                `op` column; rows whose op equals `deleteMarker`
-    *                remove the key, everything else upserts.
-    * @param keys    equality merge keys
-    * @param keyRows the distinct values of `keys` in `updates`, one row
-    *                per key in `keys` order; None selects them from
-    *                `updates`
+    * @param target    current table state (may be huge)
+    * @param updates   compacted batch: exactly one row per key, with an
+    *                  `op` column; rows whose op equals `deleteMarker`
+    *                  remove the key, everything else upserts.
+    * @param key       equality merge key
+    * @param keyValues the distinct values of `key` in `updates`; None
+    *                  collects them from `updates`
     * @throws org.apache.spark.sql.AnalysisException when `updates`' columns
     *         other than `opCol` differ from `target`'s — in either
     *         direction: a column only one side carries would otherwise be
-    *         dropped from every row, silently
+    *         dropped from every row, silently — or when `key`'s type
+    *         differs between them
     */
-  def applyBatch(target: DataFrame, updates: DataFrame, keys: Seq[String],
+  def applyBatch(target: DataFrame, updates: DataFrame, key: String,
                  opCol: String, deleteMarker: String,
-                 keyRows: Option[Seq[Row]] = None): DataFrame = {
-    val touched = keyRows match {
-      case Some(rows) =>
-        updates.sparkSession.createDataFrame(rows.asJava,
-          StructType(keys.map(updates.schema(_))))
-      case None => updates.select(keys.map(col): _*)
-    }
-    val survivors = target.join(broadcast(touched), keys, "left_anti")
+                 keyValues: Option[Seq[Any]] = None): DataFrame = {
+    VectorFunctions.register(target.sparkSession)
+    val survivors = target.filter(VectorFunctions.keyNotIn(col(key),
+      keyValues.getOrElse(keysOf(updates, key)), updates.schema(key).dataType))
     survivors.unionByName(updates.filter(col(opCol) =!= deleteMarker).drop(opCol))
   }
 
@@ -64,10 +65,10 @@ object Merge {
     * The target accumulates full change history; the current state is
     * `valid_to IS NULL`.
     *
-    * Plan shape mirrors [[applyBatch]]: the compacted batch broadcasts
-    * into a join against the target — open rows of touched keys get
-    * their `valid_to` stamped, everything else passes through untouched,
-    * and new versions append. The 100 TB history is never shuffled.
+    * The compacted batch broadcasts into a join against the target —
+    * open rows of touched keys get their `valid_to` stamped, everything
+    * else passes through untouched, and new versions append. The 100 TB
+    * history is never shuffled.
     *
     * @param target  history table with `valid_from_ms`/`valid_to_ms`
     *                (nullable) columns; pass an empty frame (with

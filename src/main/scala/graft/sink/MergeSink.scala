@@ -3,10 +3,13 @@ package graft.sink
 import java.sql.{Connection, DriverManager}
 import java.util.Properties
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, Row, SaveMode}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types
@@ -27,8 +30,8 @@ trait MergeSink {
     * @param opCol  op column; rows with op == deleteMarker remove keys
     * @param keys   the batch's `keyCol` values when the caller already
     *               holds them on the driver (the pipeline's key pass);
-    *               a sink may use them instead of a pass over `batch`,
-    *               or ignore them
+    *               the file sink filters the target by them instead of
+    *               collecting them from `batch`, a JDBC sink ignores them
     */
   def merge(db: String, tb: String, batch: DataFrame,
             keyCol: String, opCol: String, deleteMarker: String,
@@ -427,8 +430,8 @@ final class JdbcMergeSink(url: String, props: Properties,
 
 /** Parquet-directory merge sink for tests and file-based deployments:
   * target state lives at `<root>/<db>/<tb>`; each batch rewrites the
-  * table via anti-join + union ([[Merge.applyBatch]]) and swaps it in
-  * through [[graft.ext.Layout.swapDir]]: the new table is written to
+  * table via key-set filter + union ([[Merge.applyBatch]]) and swaps it
+  * in through [[graft.ext.Layout.swapDir]]: the new table is written to
   * `<root>/<db>/.apply-tmp-<tb>`, the live table is renamed aside to
   * `.apply-old-<tb>`, the new one renamed into place, the aside
   * deleted. Every merge first runs [[graft.ext.Layout.recoverSwapDir]]
@@ -438,30 +441,36 @@ final class JdbcMergeSink(url: String, props: Properties,
   * swap dirs are per table, so concurrent merges of different tables
   * (CdcPipeline's `tableParallelism`) never share one.
   *
+  * The target is read from the part files the merge has just listed,
+  * with the schema of the first one's footer, read on the driver
+  * through the session's Hadoop conf: what Spark's inference reads,
+  * without the job it launches or a second listing. A batch whose
+  * columns (bar the op column) differ from the target's fails the
+  * merge before anything is written.
+  *
   * File sizing: each rewrite writes `ceil(bytes / maxPartitionBytes)`
   * files ([[graft.ext.Layout.fileCount]]; `spark.sql.files.
   * maxPartitionBytes`, 128 MB by default), where `bytes` is the
-  * target's listed part-file bytes plus the batch's plan-statistics
-  * size estimate. The rewrite is coalesced to that count — no shuffle —
-  * so a table never accretes small files and needs no compaction tick,
-  * while a large table still writes (and reads) one task per
-  * ~maxPartitionBytes. The target is read with the schema of one
-  * part-file footer, read on the driver: what Spark's inference reads,
-  * without the job it launches. A batch whose columns (bar the op
-  * column) differ from the target's fails the merge before anything is
-  * written.
+  * target's listed part-file bytes plus the batch's key count times the
+  * target's bytes per row in that footer. (A first write into a missing
+  * target has no footer and takes the batch's plan-statistics size.)
+  * The rewrite is coalesced to that count — no shuffle — so a table
+  * never accretes small files and needs no compaction tick, while a
+  * large table still writes (and reads) one task per
+  * ~maxPartitionBytes.
   *
-  * Key relation: the anti-join broadcasts the batch's keys. Given
-  * `keys` (the pipeline passes each table's keys from its one key
-  * pass), the broadcast is a driver-local relation of those values,
-  * so no merge plan re-scans the batch for them; without `keys` it is
-  * `batch.select(keyCol)`, as for a direct call.
+  * Key set: the target keeps the rows whose key is not among the
+  * batch's keys. Given `keys` (the pipeline passes each table's keys
+  * from its one key pass), no merge plan re-scans the batch for them;
+  * without `keys` the merge collects `batch.select(keyCol)` first, as
+  * for a direct call. A merge of an existing table is then one Spark
+  * job, the write.
   *
   * At real scale the same semantics come from a transactional table
-  * format; the plan shape (broadcast anti-join) is the scalable one for
-  * the CDC regime — batch ≪ target. Either way every key of the batch
-  * is held on the driver, so driver memory bounds a batch's key count:
-  * a bulk BACKFILL batch larger than that should go through
+  * format; the plan shape (a narrow filter of the target) is the
+  * scalable one for the CDC regime — batch ≪ target. Every key of the
+  * batch is held on the driver, so driver memory bounds a batch's key
+  * count: a bulk BACKFILL batch larger than that should go through
   * `Trigger.AvailableNow` rate limiting (many small batches) or a
   * plain-join rewrite, not one giant batch.
   */
@@ -482,20 +491,26 @@ final class ParquetMergeSink(rootDir: String) extends MergeSink {
       else fs.listStatus(path)
         .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
         .sortBy(_.getPath.getName)
-    val next = parts.headOption match {
+    val (next, bytes) = parts.headOption match {
       case Some(first) =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(first, conf))
+        // the no-conf open builds a fresh Configuration, which re-parses
+        // the *-site.xml resources on every merge
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(first, conf),
+          HadoopReadOptions.builder(conf).build())
         val footer = try reader.getFooter finally reader.close()
         val schema = ParquetFileFormat.readSchemaFromFooter(
           new Footer(first.getPath, footer),
           new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-        Merge.applyBatch(spark.read.schema(schema).parquet(path.toString),
-          batch, Seq(keyCol), opCol, deleteMarker, keys.map(_.map(Row(_))))
-      case None => batch.filter(col(opCol) =!= deleteMarker).drop(opCol)
+        val rows = footer.getBlocks.asScala.map(_.getRowCount).sum
+        val keyValues = keys.getOrElse(Merge.keysOf(batch, keyCol))
+        val target = spark.read.schema(schema).parquet(parts.map(_.getPath.toString).toSeq: _*)
+        (Merge.applyBatch(target, batch, keyCol, opCol, deleteMarker, Some(keyValues)),
+          BigInt(parts.map(_.getLen).sum) +
+            BigInt(keyValues.size) * (first.getLen / math.max(rows, 1L)))
+      case None => (batch.filter(col(opCol) =!= deleteMarker).drop(opCol),
+        batch.queryExecution.optimizedPlan.stats.sizeInBytes)
     }
-    val files = Layout.fileCount(
-      parts.map(_.getLen).sum + batch.queryExecution.optimizedPlan.stats.sizeInBytes,
-      spark.sessionState.conf.filesMaxPartitionBytes)
+    val files = Layout.fileCount(bytes, spark.sessionState.conf.filesMaxPartitionBytes)
     Layout.swapDir(fs, path)(tmp =>
       next.coalesce(files).write.mode(SaveMode.Overwrite).parquet(tmp.toString))
   }

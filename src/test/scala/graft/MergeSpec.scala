@@ -52,7 +52,7 @@ class MergeSpec extends AnyFunSuite {
     var state = emptyState
     for (b <- batches if b.nonEmpty) {
       val c = Compaction.latestPerKey(b.toDF(), Seq("pk"), Seq("ts", "off"))
-      state = Merge.applyBatch(state, c, Seq("pk"), "op", "d")
+      state = Merge.applyBatch(state, c, "pk", "op", "d")
     }
     state.select("pk", "v").as[(String, String)].collect().toMap
   }
@@ -80,12 +80,48 @@ class MergeSpec extends AnyFunSuite {
     val evs = List(Ev("a", 1, 0, "u", "x"), Ev("b", 1, 1, "u", "y"),
       Ev("a", 2, 2, "d", ""), Ev("c", 1, 3, "u", "z"))
     val c = Compaction.latestPerKey(evs.toDF(), Seq("pk"), Seq("ts", "off"))
-    val once = Merge.applyBatch(emptyState, c, Seq("pk"), "op", "d")
-    val twice = Merge.applyBatch(once, c, Seq("pk"), "op", "d")
+    val once = Merge.applyBatch(emptyState, c, "pk", "op", "d")
+    val twice = Merge.applyBatch(once, c, "pk", "op", "d")
     assert(once.select("pk", "v").as[(String, String)].collect().toSet ==
       twice.select("pk", "v").as[(String, String)].collect().toSet)
     assert(once.select("pk", "v").as[(String, String)].collect().toMap ==
       Map("b" -> "y", "c" -> "z")) // a was deleted by its latest event
+  }
+
+  test("a target row with a null key survives a merge, as under the anti-join") {
+    import org.apache.spark.sql.functions.{col, element_at, lit, typedlit}
+    val rows = Seq[(String, String)](("a", "x"), (null, "n"), ("b", "y"))
+    // a local target folds the filter through its interpreted eval, a
+    // range-backed one runs it as generated code
+    val generated = spark.range(rows.size).select(
+      element_at(typedlit(rows.map(_._1)), col("id").cast("int") + 1).as("pk"),
+      element_at(typedlit(rows.map(_._2)), col("id").cast("int") + 1).as("v"))
+    val c = Compaction.latestPerKey(
+      List(Ev("a", 1, 0, "u", "x2"), Ev("b", 1, 1, "d", "")).toDF(), Seq("pk"), Seq("ts", "off"))
+      .drop("ts", "off")
+    for (target <- Seq(rows.toDF("pk", "v"), generated)) {
+      val merged = Merge.applyBatch(target, c, "pk", "op", "d")
+        .as[(String, String)].collect().toSet
+      assert(merged == Set(("a", "x2"), (null, "n")), s"$merged")
+    }
+  }
+
+  test("a 100k-key merge: formatted explain under 4 KB naming the key count") {
+    import org.apache.spark.sql.functions.{col, concat, lit, when}
+    val n = 100000
+    // target keys k0, k20000, …, k180000: the first five are in the batch
+    val target = spark.range(10).select(concat(lit("k"), col("id") * 20000).as("pk"),
+      lit("old").as("v"))
+    val updates = spark.range(n).select(concat(lit("k"), col("id")).as("pk"),
+      lit("new").as("v"), when(col("id") >= 0, "d").as("op"))
+    val merged = Merge.applyBatch(target, updates, "pk", "op", "d",
+      Some((0 until n).map(i => s"k$i")))
+    val plan = merged.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    assert(plan.length < 4096 && plan.contains(s"NOT IN <$n keys>"),
+      s"${plan.length} chars:\n${plan.take(4096)}")
+    assert(merged.select("pk").as[String].collect().toSet ==
+      (5 until 10).map(i => s"k${i * 20000}").toSet)
   }
 
   test("SCD2 apply: versions close predecessors, deletes close without opening") {

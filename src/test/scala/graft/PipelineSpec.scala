@@ -771,7 +771,6 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
     import org.apache.spark.sql.util.QueryExecutionListener
     val sc = spark.sparkContext
@@ -818,18 +817,48 @@ class PipelineSpec extends AnyFunSuite {
     val inside = sc.statusTracker.getJobIdsForGroup(mergeGroup).length
     info(f"$outside jobs outside the table merges, $inside inside, batch $secs%.1f s")
     val helper = new AdaptiveSparkPlanHelper {}
-    val cacheBroadcasts = plans.toArray(Array.empty[SparkPlan]).toSeq.flatMap { p =>
+    // nothing is broadcast, the compacted cache least of all: the key
+    // set rides inside each target's filter
+    val broadcasts = plans.toArray(Array.empty[SparkPlan]).toSeq.flatMap { p =>
       helper.collect(p) { case b: BroadcastExchangeExec => b }
-        .filter(b => helper.collect(b) { case s: InMemoryTableScanExec => s }.nonEmpty)
     }
     assert(plans.size > 0, "the listener saw no plan")
-    assert(cacheBroadcasts.isEmpty, s"${cacheBroadcasts.size} merge plans broadcast " +
-      s"the compacted cache:\n${cacheBroadcasts.mkString("\n")}")
-    assert(inside > 0, "the table merges ran no job in their group")
+    assert(broadcasts.isEmpty, s"${broadcasts.size} broadcasts in the batch's plans:\n" +
+      broadcasts.mkString("\n"))
     assert(outside <= 3,
       f"$outside jobs outside the table merges ($inside inside), batch took $secs%.1f s")
+    // each table merge is one job, its write
+    assert(inside == 3, s"$inside jobs inside the 3 table merges, not one each")
     val users = spark.read.parquet(s"$root/shop/users")
       .select("pk", "payload").as[(String, String)].collect().toMap
     assert(users.keySet == Set("1", "3") && users("1").contains("users1"), s"$users")
+  }
+
+  test("file sizing: a table's rewrite counts its own slice, not the whole batch") {
+    // the session's maxPartitionBytes sits between a table's rewrite
+    // estimate (its target T plus its ~T slice) and the same target plus
+    // the whole 3-table batch's plan estimate (~3T): each table must be
+    // rewritten as one part file
+    val session = spark.newSession()
+    import session.implicits._
+    val root = Files.createTempDirectory("graft_sink_size").toString
+    val tables = Seq("users", "items", "orders")
+    val rows = 300
+    val rnd = new scala.util.Random(11)
+    def batch(b: Int) = tables.flatMap { t =>
+      (1 to rows).map(id => pgEvent(t, id, 10L * b, "u", rnd.alphanumeric.take(2000).mkString))
+    }.zipWithIndex.map { case (v, i) => (v, 10000L * b + i) }.toDF("value", "offset")
+    val pipeline = new CdcPipeline(PgCdc, new ParquetMergeSink(root),
+      tableParallelism = 3, tiebreaker = Some("offset"))
+    def parts(t: String) = new java.io.File(s"$root/shop/$t").listFiles()
+      .filter(_.getName.startsWith("part-")).toSeq
+    pipeline.processBatch(batch(0), 0L)
+    val targetBytes = tables.map(t => parts(t).map(_.length).sum).max
+    session.conf.set("spark.sql.files.maxPartitionBytes", (targetBytes * 5 / 2).toString)
+    assert(pipeline.processBatch(batch(1), 1L).tables == 3)
+    val counts = tables.map(t => t -> parts(t).size).toMap
+    assert(counts.values.forall(_ == 1),
+      s"part files per table $counts, target bytes $targetBytes before the batch")
+    assert(session.read.parquet(s"$root/shop/users").count() == rows)
   }
 }

@@ -140,14 +140,17 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("merge applyBatch: updates side is broadcast, target never shuffled") {
-    import spark.implicits._
-    val target = Seq(("a", 1L)).toDF("pk", "v")
-    val updates = Seq(("a", 2L, "u")).toDF("pk", "v", "op")
-    val merged = graft.sink.Merge.applyBatch(target, updates, Seq("pk"), "op", "d")
+    import org.apache.spark.sql.functions.{col, lit}
+    // range-backed, not local: a local relation would fold the plan away
+    val target = spark.range(4).select(col("id").cast("string").as("pk"), col("id").as("v"))
+    val updates = spark.range(1).select(lit("1").as("pk"), lit(2L).as("v"), lit("u").as("op"))
+    val merged = graft.sink.Merge.applyBatch(target, updates, "pk", "op", "d")
     val p = merged.queryExecution.executedPlan.toString
-    assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"),
-      s"anti-join not broadcast:\n$p")
-    assert(!p.contains("Exchange hashpartitioning"), s"target got shuffled:\n$p")
+    // the updates' keys reach every task as one key set inside the
+    // target's filter: no join, no exchange of either side
+    assert(!p.contains("Join"), s"merge joins:\n$p")
+    assert(!p.contains("Exchange"), s"merge exchanges:\n$p")
+    assert("NOT IN <1 keys>".r.findAllIn(p).size == 1, s"not one key-set filter:\n$p")
   }
 
   test("dedup_survivors: argmax is a partial-merged aggregate, no per-cluster window") {
