@@ -1273,7 +1273,7 @@ object Corpus {
 
   /** [[qualityScore]] over an already-built (id, bucket) feature
     * relation — the share point for a single-tokenize admission stage
-    * ([[IncrementalQuality.admitBatch]]): quality and DSIR read ONE
+    * ([[IngestLadder.frozenGates]]): quality and DSIR read ONE
     * cached feature relation instead of re-hashing the batch each.
     */
   private[graft] def qualityScoreFeats(feats: DataFrame, weights: DataFrame,

@@ -722,7 +722,8 @@ object Dedup {
   }
 
   /** Containment-driven SURVIVOR selection — the one-shot batch form of
-    * [[IncrementalDedup.admitBatchContainment]]'s in-batch rule, and
+    * the in-batch rule of [[IngestLadder.admitBatch]]'s containment
+    * rung, and
     * the RETROACTIVE compaction pass that rule's docstring defers
     * ("replacing the admitted subset doc is a compaction policy"):
     * over a static corpus, drop every document τ-contained in another
@@ -775,12 +776,10 @@ object Dedup {
     * loop should ride the stored-index family instead:
     * [[minhashCandidatesAgainst]] joins each batch's bands against a
     * signature index computed ONCE at admission (corpus text never
-    * re-read), and [[IncrementalDedup.admitBatch]] runs that loop
-    * end-to-end with exact [[jaccardAgainst]] verification restricted
-    * to the candidate pairs. The CONTAINMENT member of the stored-index
-    * family is [[containmentProbe]] over a persisted
-    * [[shinglePostings]] index, run end-to-end by
-    * [[IncrementalDedup.admitBatchContainment]].
+    * re-read). The admission loop itself is [[IngestLadder.admitBatch]]:
+    * its near rung probes a persisted [[shinglePostings]] index with
+    * [[jaccardProbe]], and its containment rung probes the same
+    * postings with [[containmentProbe]].
     *
     * @param cacheCorpus when true (default — the batch-vs-slice shape),
     *        the single tagged-union postings relation (batch AND full
@@ -877,8 +876,8 @@ object Dedup {
     * slice, corpus text is never re-tokenized. Scoring is IDENTICAL to
     * [[containmentAgainst]] (shared join), so probe-over-stored-index
     * ≡ recompute-from-text row for row — the equivalence the
-    * `dedup_containment_steady` oracle row and `IncrementalDedupSpec`'s
-    * multi-batch ingest both pin.
+    * `dedup_containment_steady` oracle row and ExtOpsSpec's
+    * "containment admission loop" ingest both pin.
     *
     * `maxDocFreq` (the essential containment scale dial — no
     * length-ratio prune exists, see [[containmentPairs]]) is applied to

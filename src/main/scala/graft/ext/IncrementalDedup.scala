@@ -3,274 +3,61 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The operational loop for a continuously-admitted, near-dup-free
-  * corpus: each arriving batch is checked against a PERSISTENT SimHash
-  * signature index (8 bytes per admitted document), survivors join the
-  * corpus and their signatures join the index. Designed as a
-  * `foreachBatch` body — the batch-at-a-time complement of
-  * [[graft.streaming.StreamCompaction.firstPerFingerprint]] (exact,
-  * state-store) for NEAR duplicates, whose candidate join does not fit
-  * keyed state.
+/** The corpus-side services of the one corpus-admission tick,
+  * [[IngestLadder.admitBatch]], over the subtrees it writes under one
+  * root ([[LadderSubtrees]]):
   *
-  * Admission semantics per batch:
-  *  1. in-batch: among near-dup batch pairs ([[Dedup.simhashPairs]]),
-  *     the lowest id of each connected group survives (min-label over
-  *     the pair list, [[Dedup.connectedComponents]]);
-  *  2. cross-batch: any batch doc within `maxDist` of an INDEXED
-  *     signature ([[Dedup.simhashAgainst]]) is dropped — first
-  *     arrival wins across batches, matching the streaming exact-dedup
-  *     contract.
+  *  - [[admitBatchDomainQuota]] — the per-registered-domain volume cap
+  *    as a standalone tick (the ladder's `domain` rung, run alone);
+  *    both share the cap rule [[quotaDrops]] and the host/eTLD+1
+  *    resolution ([[hostOf]], [[resolveRegDomains]]);
+  *  - [[maintainLadder]] — the small-files fold of every subtree's
+  *    committed per-batch partitions into `batch=-1`
+  *    ([[Layout.foldBatchPartitions]]), with the bloom sidecars rebuilt;
+  *  - re-ladder reconciliation — [[reconcileNear]] and its incremental
+  *    form, [[applyReconcile]], [[retireEvidence]] and the
+  *    [[reconcileWindow]] that composes them — which converges the
+  *    stored corpus to the batch ladder ([[Dedup.ladder]]) semantics;
+  *  - [[recoverLadderEntry]] — the one crash-recovery preamble every
+  *    reader of those subtrees runs first.
   *
-  * At 100 TB the index is the scale lever: one long + one id per
-  * admitted document (write it partitioned/bucketed by band key for
-  * co-located joins); the corpus text is never re-read or self-paired
-  * by an ingest tick.
+  * Every tick writes per-batch Overwrite partitions (`batch=<id>`) and
+  * every cross-batch probe excludes the tick's own partition
+  * ([[Layout.priorPartitions]]): a replay under the same id recomputes
+  * identical verdicts and overwrites in place. Callers serialize ticks
+  * and maintenance of one root (a `foreachBatch` body does).
   */
 object IncrementalDedup {
 
-  /** One admission tick. Returns (admitted, droppedInBatch,
-    * droppedVsIndex) row counts; survivors land under
-    * `corpusDir/batch=<batchId>` and their signatures under
-    * `indexDir/batch=<batchId>` — per-batch Overwrite partitions (the
-    * [[admitBatchUrl]] recovery contract: two non-atomic Appends leave
-    * a crashed tick half-applied — corpus rows whose signatures never
-    * reached the index — so a replay re-appends duplicates, while
-    * index-FIRST Appends would instead LOSE the corpus rows to
-    * self-similarity on replay). The cross-batch probe excludes the
-    * tick's own partition, so a replay under the SAME id recomputes
-    * identical verdicts and overwrites in place; a batch redelivered
-    * under a NEW id (cross-restart at-least-once) is turned away by
-    * its own indexed signatures at distance 0 — both redelivery shapes
-    * converge on a duplicate-free corpus. Caller serializes ticks
-    * (foreachBatch already does) and passes its monotone batch id.
-    */
-  def admitBatch(batch: DataFrame, idCol: String, textCol: String,
-                 corpusDir: String, indexDir: String,
-                 maxDist: Int, batchId: Long): (Long, Long, Long) = {
-    val spark = batch.sparkSession
-    val n = batch.count()
-    // signatures are used by up to three joins below: compute once
-    val sigs = Materialize.multiScan(
-      Dedup.simhashSignatures(batch, idCol, textCol))
-    // 1. in-batch collapse: keep each near-dup group's lowest id
-    val inBatchPairs = Dedup.simhashAgainst(sigs, sigs, maxDist)
-      .filter(col("batch_id") < col("corpus_id"))
-      .select(col("batch_id").as("id_a"), col("corpus_id").as("id_b"))
-    val inBatchDrops = Dedup.connectedComponents(inBatchPairs)
-      .filter(col("id") =!= col("cluster")) // non-minimum group members
-      .select(col("id"))
-    // 2. cross-batch: drop anything near an indexed signature (other
-    // batches' partitions only — the replay contract above)
-    val vsIndexDrops = Layout.priorPartitions(spark, indexDir, batchId) match {
-      case Some(index) => Dedup.simhashAgainst(sigs, index, maxDist)
-        .select(col("batch_id").as("id")).distinct()
-      case None => inBatchDrops.limit(0)
+  /** The quota family's shared host extraction: canonical-URL
+    * authority, userinfo and port stripped — ONE definition so the
+    * quota rung, the ingest ladder's domain rung, and the apply-time
+    * refund all bucket a url identically. */
+  private[graft] def hostOf(url: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    regexp_replace(regexp_replace(
+      regexp_extract(TextOps.canonicalUrl(url), "^[^/?]*", 0),
+      "^[^@]*@", ""), ":[0-9]+$", "")
+
+  /** The quota cap rule, shared by [[admitBatchDomainQuota]] and the
+    * ingest ladder's `domain` rung: the ids of `doms` (id, reg_domain)
+    * whose domain's ADMITTED count in the `countsDir` tree (other
+    * batches' partitions) plus the doc's arrival rank within the batch
+    * (by id) exceeds `k`. NULL domains are never capped. */
+  private[graft] def quotaDrops(doms: DataFrame, countsDir: String, k: Int,
+                                batchId: Long): DataFrame = {
+    val prior = Layout.priorPartitions(doms.sparkSession, countsDir,
+        batchId) match {
+      case Some(ix) => ix
+        .groupBy(col("reg_domain")).agg(sum(col("n")).as("prior"))
+      case None => doms.select(col("reg_domain"), lit(0L).as("prior"))
+        .limit(0)
     }
-    val dropIds = Materialize.multiScan(
-      inBatchDrops.unionByName(vsIndexDrops).distinct())
-    val admitted = Materialize.multiScan(
-      batch.join(dropIds, batch(idCol) === dropIds("id"), "left_anti"))
-    val nAdmitted = admitted.count()
-    // index partition first, then corpus (either order is safe under
-    // Overwrite + own-partition exclusion; index-first keeps the
-    // worst interleaving conservative: turn-away before append)
-    sigs.join(dropIds, sigs("id") === dropIds("id"), "left_anti")
-      .select(sigs("id"), col("sig"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/batch=$batchId")
-    admitted.write.mode(SaveMode.Overwrite)
-      .parquet(s"$corpusDir/batch=$batchId")
-    val nInBatch = inBatchDrops.count()
-    Seq(sigs, dropIds, admitted).foreach(_.unpersist())
-    (nAdmitted, nInBatch, n - nAdmitted - nInBatch)
-  }
-
-  /** One CONTAINMENT admission tick — the steady-state form of the
-    * embedded-quote check: each arriving batch is probed against a
-    * PERSISTENT shingle-postings index ([[Dedup.shinglePostings]], 20
-    * bytes per distinct shingle per admitted doc) so corpus text is
-    * never re-read or re-tokenized; survivors join the corpus and
-    * their postings join the index ([[Dedup.containmentProbe]] scores
-    * probes with the exact [[Dedup.containmentAgainst]] join, so the
-    * stored path is row-for-row the recompute-from-text path).
-    *
-    * Admission semantics per batch (first arrival wins, like
-    * [[admitBatch]]):
-    *  1. in-batch: a doc x is dropped when its shingle set is
-    *     τ-contained in ANOTHER batch doc y that itself SURVIVES the
-    *     cross-batch index probe — unless the containment is MUTUAL
-    *     (near-identical docs) and x is the lower id, which keeps
-    *     exactly one survivor per mutual group while embedded docs
-    *     (one-directional containment) always drop. A containment
-    *     CHAIN (a ⊂ b ⊂ c) keeps its maximal host: every non-maximal
-    *     member has an outgoing one-directional edge. The
-    *     host-must-survive condition matters because τ-containment is
-    *     NOT transitive for τ < 1: if y is turned away by the index
-    *     (y ⊂τ indexed doc) but x ⊄τ that indexed doc, dropping x "for
-    *     y" would silently lose x's content — no admitted or indexed
-    *     doc would τ-contain it. Restricting hosts to index survivors
-    *     closes that cascade: x drops only when something that is (or
-    *     will be) in the corpus τ-contains it.
-    *  2. cross-batch: a batch doc τ-contained in an INDEXED doc
-    *     (cont_batch ≥ τ) is dropped — the embedded-quote admission
-    *     signal. The reverse direction (batch doc SWALLOWS an admitted
-    *     doc, cont_corpus ≥ τ) does NOT drop: the arriving doc carries
-    *     novel content; replacing the admitted subset doc is a
-    *     compaction policy, not an admission one.
-    *
-    * At 100 TB: the index is postings-sized — the honest price of
-    * exact containment (no fixed-width sketch preserves the
-    * doc-inside-doc relation); write it bucketed by sh64 for
-    * co-located probes, and dial `maxDocFreq` (applied to the index
-    * side AT PROBE TIME, so the stored index stays exact) to keep
-    * boilerplate shingles out of the join — the measured 43.7 s → 2 s
-    * defense, see SCALE.md.
-    *
-    * @return (admitted, droppedInBatch, droppedVsIndex) row counts;
-    *         survivors land under `corpusDir/batch=<batchId>`, their
-    *         postings under `postingsDir/batch=<batchId>` — per-batch
-    *         Overwrite partitions with the own-partition-excluded
-    *         probe (the [[admitBatchUrl]] recovery contract; see
-    *         [[admitBatch]]'s scaladoc for why neither Append order is
-    *         safe). A same-id replay overwrites in place; a NEW-id
-    *         redelivery is turned away by its own indexed postings at
-    *         containment 1.0. Caller serializes ticks (foreachBatch
-    *         already does) and passes its monotone batch id.
-    */
-  def admitBatchContainment(batch: DataFrame, idCol: String,
-                            textCol: String, corpusDir: String,
-                            postingsDir: String, n: Int, tau: Double,
-                            batchId: Long,
-                            maxDocFreq: Int = Int.MaxValue): (Long, Long, Long) = {
-    val spark = batch.sparkSession
-    val nRows = batch.count()
-    // postings feed up to three joins below: compute once
-    val posts = Materialize.multiScan(
-      Dedup.shinglePostings(batch, idCol, textCol, n))
-    // 1. cross-batch FIRST: drop batch docs contained in an indexed doc.
-    // Computed before the in-batch pass because its drops also disqualify
-    // docs from serving as in-batch HOSTS (used twice below).
-    val vsIndexDrops = Materialize.multiScan(
-      Layout.priorPartitions(spark, postingsDir, batchId) match {
-        case Some(index) => Dedup.containmentProbe(posts,
-            index.select(col("id"), col("m"), col("sh64")),
-            tau, maxDocFreq)
-          .filter(col("cont_batch") >= tau)
-          .select(col("batch_id").as("id")).distinct()
-        case None => posts.select(col("id")).limit(0)
-      })
-    // 2. in-batch collapse, hosts restricted to index SURVIVORS: a drop
-    // of x must be justified by a y whose content actually reaches the
-    // corpus (τ-containment is not transitive for τ < 1 — an index-
-    // dropped y cannot vouch for x, see the admission-semantics doc).
-    // The probe emits each unordered pair in both orders (no
-    // id-ordering condition exists in the A-vs-B join), which is
-    // exactly what the asymmetric drop rule consumes: from the
-    // (x=batch_id, y=corpus_id) orientation, x drops iff x ⊂τ y and NOT
-    // (mutual ∧ x < y).
-    val hostPosts = posts.join(vsIndexDrops,
-      posts("id") === vsIndexDrops("id"), "left_anti")
-    val inBatchDrops = Dedup.containmentProbe(posts, hostPosts, tau)
-      .filter(col("batch_id") =!= col("corpus_id"))
-      .filter(col("cont_batch") >= tau &&
-        !(col("cont_corpus") >= tau && col("batch_id") < col("corpus_id")))
-      .select(col("batch_id").as("id")).distinct()
-    val dropIds = Materialize.multiScan(
-      inBatchDrops.unionByName(vsIndexDrops).distinct())
-    val admitted = Materialize.multiScan(
-      batch.join(dropIds, batch(idCol) === dropIds("id"), "left_anti"))
-    val nAdmitted = admitted.count()
-    posts.join(dropIds, posts("id") === dropIds("id"), "left_anti")
-      .select(posts("id"), col("m"), col("sh64"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$postingsDir/batch=$batchId")
-    admitted.write.mode(SaveMode.Overwrite)
-      .parquet(s"$corpusDir/batch=$batchId")
-    val nInBatch = inBatchDrops.count()
-    Seq(posts, vsIndexDrops, dropIds, admitted).foreach(_.unpersist())
-    (nAdmitted, nInBatch, nRows - nAdmitted - nInBatch)
-  }
-
-  /** One URL-FIRST-SEEN admission tick — the steady-state BATCH form of
-    * the crawl frontier. The state-store streaming form
-    * ([[graft.streaming.StreamCompaction.firstPerCanonicalUrl]]) keys
-    * per-URL state in the stream's store; this is the parquet-index
-    * form whose state a 10¹⁰-page frontier actually holds: the index is
-    * one (url_key, keep_id) row per admitted page (tens of bytes),
-    * probed by an id-keyed anti-join — no text is ever read, making
-    * this the CHEAPEST rung of the admission ladder, run before any
-    * content pass.
-    *
-    * Admission per batch (first arrival wins, the [[admitBatch]]
-    * contract): in-batch, syntactic crawl variants of one page
-    * ([[TextOps.canonicalUrl]] collapses them) keep the minimum id;
-    * cross-batch, any canonical key already in the index drops. Rows
-    * whose address (or canonical key) is NULL PASS the rung as
-    * survivors and never enter the key index — the quality-admission
-    * gate-0 convention: a NULL address is "no crawl provenance", not
-    * "the same page as every other address-less row".
-    *
-    * REPLAY IDEMPOTENCE: survivors and their keys land under per-batch
-    * partitions (`corpusDir/batch=<batchId>`, `indexDir/batch=<batchId>`)
-    * written with Overwrite — the [[IncrementalQuality.admitBatch]]
-    * layout. Two separate non-atomic Appends would leave a crashed tick
-    * half-applied: pages in the corpus whose keys never reached the
-    * index, so the redelivered batch re-admits and re-appends the same
-    * rows — duplicate documents, the exact thing the rung exists to
-    * prevent. With per-batch Overwrite a replayed tick recomputes the
-    * same admitted set (the probe reads only OTHER batches' index rows)
-    * and overwrites both partitions in place.
-    *
-    * @return (admitted, droppedInBatch, droppedVsIndex) row counts;
-    *         survivors written to `corpusDir/batch=<batchId>`, their
-    *         (url_key, keep_id) rows to `indexDir/batch=<batchId>`.
-    *         Caller serializes ticks (foreachBatch already does) and
-    *         passes its monotone batch id.
-    */
-  def admitBatchUrl(batch: DataFrame, idCol: String, urlCol: String,
-                    corpusDir: String, indexDir: String,
-                    batchId: Long): (Long, Long, Long) = {
-    val spark = batch.sparkSession
-    val nRows = batch.count()
-    val keyed = Materialize.multiScan(
-      batch.withColumn("__url_key", TextOps.canonicalUrl(col(urlCol))))
-    // NULL-key rows pass the rung whole (survivors) and never reach the
-    // groupBy: grouping would fold them into one NULL key and keep one
-    val nullRows = keyed.filter(col("__url_key").isNull).drop("__url_key")
-    val nNull = nullRows.count()
-    val withKey = keyed.filter(col("__url_key").isNotNull)
-    // in-batch collapse: one row per canonical key, minimum id
-    val firsts = Materialize.multiScan(
-      withKey.groupBy(col("__url_key")).agg(min(col(idCol)).as("__keep")))
-    // cross-batch: keys already admitted drop whole. A replayed tick's
-    // own half-written partition must NOT count as "already admitted"
-    // (that would turn the whole redelivered batch away and lose it),
-    // so the probe reads only OTHER batches' index rows.
-    val admittedFirsts = Materialize.multiScan(
-      Layout.priorPartitions(spark, indexDir, batchId) match {
-        case Some(ix) => firsts.join(
-          ix.select(col("url_key").as("__url_key")), Seq("__url_key"),
-          "left_anti")
-        case None => firsts
-      })
-    val admitted = Materialize.multiScan(
-      withKey.join(admittedFirsts,
-          withKey("__url_key") === admittedFirsts("__url_key") &&
-            withKey(idCol) === admittedFirsts("__keep"), "left_semi")
-        .drop("__url_key")
-        .unionByName(nullRows))
-    val nAdmitted = admitted.count()
-    // index partition FIRST, then corpus: if the tick dies between the
-    // two writes, replay sees its own index rows (excluded from the
-    // probe above) and simply overwrites both partitions.
-    admittedFirsts.select(col("__url_key").as("url_key"),
-        col("__keep").as("keep_id"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$indexDir/batch=$batchId")
-    admitted.write.mode(SaveMode.Overwrite)
-      .parquet(s"$corpusDir/batch=$batchId")
-    val nKeys = firsts.count()
-    Seq(keyed, firsts, admittedFirsts, admitted).foreach(_.unpersist())
-    // every KEYED batch row beyond its key's first is an in-batch
-    // variant; NULL-key rows are admitted outside the key accounting
-    (nAdmitted, nRows - nNull - nKeys, nKeys - (nAdmitted - nNull))
+    doms.filter(col("reg_domain").isNotNull)
+      .withColumn("r", row_number().over(org.apache.spark.sql.expressions
+        .Window.partitionBy(col("reg_domain")).orderBy(col("id"))))
+      .join(prior, Seq("reg_domain"), "left")
+      .filter(coalesce(col("prior"), lit(0L)) + col("r") > k)
+      .select(col("id"))
   }
 
   /** One DOMAIN-QUOTA admission tick — the per-registrant volume cap a
@@ -281,10 +68,10 @@ object IncrementalDedup {
     * (eTLD+1, [[Dedup.registeredDomain]] over the canonical-URL host —
     * a pure scalar projection, no join); a doc is dropped with verdict
     * `domain` when its domain's ADMITTED count (stored index, other
-    * batches) plus its arrival rank within the batch exceeds `k`.
-    * First arrivals win (rank by id — the ladder convention); rows
-    * with a NULL address or unresolvable host PASS and are never
-    * counted (the NULL-provenance convention of [[admitBatchUrl]]).
+    * batches) plus its arrival rank within the batch exceeds `k`
+    * ([[quotaDrops]]). First arrivals win (rank by id — the ladder
+    * convention); rows with a NULL address or unresolvable host PASS
+    * and are never counted (the ladder's NULL-provenance convention).
     *
     * At 100 TB the index is domain-cardinality — (reg_domain, n) per
     * batch, a few million rows against billions of docs — so the
@@ -292,22 +79,13 @@ object IncrementalDedup {
     * window over the batch. The counts index stores ADMITTED docs
     * only, so quota accounting never leaks drops.
     *
-    * REPLAY IDEMPOTENCE: the [[admitBatchUrl]] contract — verdicts,
-    * counts and corpus land under per-batch Overwrite partitions, the
-    * prior-count probe excludes the tick's own partition.
+    * REPLAY IDEMPOTENCE: verdicts, counts and corpus land under
+    * per-batch Overwrite partitions, and the prior-count probe excludes
+    * the tick's own partition.
     *
     * @return the batch's verdict relation (id, dropped_at ∈ {domain,
     *         NULL}), read back from its just-written partition
     */
-  /** The quota family's shared host extraction: canonical-URL
-    * authority, userinfo and port stripped — ONE definition so the
-    * quota rung, the ingest ladder's domain rung, and the apply-time
-    * refund all bucket a url identically. */
-  private[graft] def hostOf(url: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    regexp_replace(regexp_replace(
-      regexp_extract(TextOps.canonicalUrl(url), "^[^/?]*", 0),
-      "^[^@]*@", ""), ":[0-9]+$", "")
-
   def admitBatchDomainQuota(batch: DataFrame, idCol: String,
                             urlCol: String, root: String, k: Int,
                             batchId: Long,
@@ -315,10 +93,9 @@ object IncrementalDedup {
                             pslRules: Option[DataFrame] = None): DataFrame = {
     require(k > 0, s"domain quota must be positive: $k")
     val spark = batch.sparkSession
-    // a crashed refund swap may have left the counts tree one rename
-    // short — finish it before the prior-count probe lists the tree
+    // a crashed refund swap or fold may have left the counts tree one
+    // rename short — finish it before the prior-count probe lists it
     recoverLadderEntry(spark, root)
-    val w = org.apache.spark.sql.expressions.Window
     val base = Materialize.multiScan(batch)
     val host = hostOf(col(urlCol))
     // reg_domain is used by the rank, the drop join and the count
@@ -329,20 +106,8 @@ object IncrementalDedup {
     // does, not by the subset approximation
     val doms = Materialize.multiScan(
       resolveRegDomains(base, idCol, host, suffixes, pslRules))
-    val prior = Layout.priorPartitions(spark, s"$root/domain_counts",
-        batchId) match {
-      case Some(ix) => ix
-        .groupBy(col("reg_domain")).agg(sum(col("n")).as("prior"))
-      case None => doms.select(col("reg_domain"), lit(0L).as("prior"))
-        .limit(0)
-    }
     val drops = Materialize.multiScan(
-      doms.filter(col("reg_domain").isNotNull)
-        .withColumn("r", row_number().over(
-          w.partitionBy(col("reg_domain")).orderBy(col("id"))))
-        .join(prior, Seq("reg_domain"), "left")
-        .filter(coalesce(col("prior"), lit(0L)) + col("r") > k)
-        .select(col("id")))
+      quotaDrops(doms, s"$root/domain_counts", k, batchId))
     val admitted = Materialize.multiScan(
       base.join(drops, base(idCol) === drops("id"), "left_anti"))
     def part(sub: String) = s"$root/$sub/batch=$batchId"
@@ -397,27 +162,6 @@ object IncrementalDedup {
     }
   }
 
-  /** Periodic index maintenance: fold the corpus and signature trees'
-    * COMMITTED per-batch partitions into one consolidated `batch=-1`
-    * partition each ([[Layout.foldBatchPartitions]] — the
-    * postings-index maintenance discipline). Every tick writes one
-    * `batch=<id>` partition to each tree, so an unattended loop
-    * accumulates partition directories linearly in tick count — the
-    * small-files failure mode that dominates scan cost at 100 TB. Call
-    * every N ticks INSIDE the same serialized window that runs
-    * [[admitBatch]] (e.g. from the `foreachBatch` body on
-    * `batchId % N == N - 1`, passing `committedBelow = batchId` —
-    * every partition below the current id is committed by foreachBatch
-    * serialization, and a replayed batch reuses its own id, which the
-    * fold never touches). Returns (corpus partitions folded, index
-    * partitions folded); a not-yet-created directory counts 0.
-    */
-  def maintain(spark: SparkSession, corpusDir: String, indexDir: String,
-               committedBelow: Long,
-               targetBytes: Long = 128L << 20): (Int, Int) =
-    (Layout.foldBatchPartitions(spark, corpusDir, committedBelow, targetBytes),
-      Layout.foldBatchPartitions(spark, indexDir, committedBelow, targetBytes))
-
   /** The subtrees one [[IngestLadder.admitBatch]] /
     * [[admitBatchDomainQuota]] tick writes — the complete fold
     * surface for [[maintainLadder]] (a subtree a given operator never
@@ -439,21 +183,22 @@ object IncrementalDedup {
     "postings" -> "sh64", "postings_dropped" -> "sh64",
     DocShinglesSubtree -> "id")
 
-  /** Ladder-wide index maintenance — [[maintain]]'s contract extended to
-    * EVERY subtree [[IngestLadder.admitBatch]] writes (corpus, url_index,
-    * fp_index, postings, postings_dropped, verdicts): each tick adds one
-    * `batch=<id>` partition to each of the six trees, so an unattended
-    * ingest loop accumulates 6 partition directories per tick — the
-    * small-files defense must ship with the operator that creates the
-    * files, not leave the caller to fold five trees by hand. Folds each
-    * tree's COMMITTED partitions (`0 ≤ batch < committedBelow`, plus a
-    * prior fold) into its `batch=-1` partition via
-    * [[Layout.foldBatchPartitions]] — the fold target is a value no real
-    * batch id takes, so every own-partition replay exclusion
-    * (`batch =!= currentId`) keeps folded rows, which is exactly right
-    * for committed state. Same serialization contract: call from the
+  /** Ladder-wide index maintenance over EVERY subtree
+    * [[IngestLadder.admitBatch]] writes ([[LadderSubtrees]]): each tick
+    * adds one `batch=<id>` partition to each tree, so an unattended
+    * ingest loop accumulates partition directories linearly in tick
+    * count — the small-files failure mode that dominates scan cost at
+    * 100 TB — and the defense ships with the operator that creates the
+    * files. Folds each tree's COMMITTED partitions
+    * (`0 ≤ batch < committedBelow`, plus a prior fold) into its
+    * `batch=-1` partition via [[Layout.foldBatchPartitions]] — the fold
+    * target is a value no real batch id takes, so every own-partition
+    * replay exclusion (`batch =!= currentId`) keeps folded rows, which
+    * is exactly right for committed state. Call from the serialized
     * window that runs the ticks (e.g. the `foreachBatch` body on
-    * `batchId % N == N - 1` with `committedBelow = batchId`).
+    * `batchId % N == N - 1` with `committedBelow = batchId`: every
+    * partition below the current id is committed, and a replayed batch
+    * reuses its own id, which the fold never touches).
     *
     * BLOOM SIDECARS: a fold moves committed partitions into `batch=-1`,
     * which every sidecar watermark treats as covered — so any sidecar
@@ -1837,8 +1582,10 @@ object IncrementalDedup {
 
   /** The ONE entry-recovery preamble every serialized-window operation
     * that reads the ladder's trees must run — interrupted partition
-    * swaps healed, then interrupted postings→evidence moves
-    * ([[recoverEvidenceMoves]], which needs both trees whole first).
+    * swaps healed, then interrupted partition folds
+    * ([[Layout.recoverFold]], every subtree), then interrupted
+    * postings→evidence moves ([[recoverEvidenceMoves]], which needs
+    * both trees whole first).
     * Shared so a future recovery mechanism is added in one place, not
     * hand-propagated to every entry site.
     *
@@ -1863,6 +1610,8 @@ object IncrementalDedup {
           .foreach(leaf => Layout.recoverSwapDir(fs,
             new org.apache.hadoop.fs.Path(dir, leaf)))
       }
+    LadderSubtrees.foreach(sub =>
+      Layout.recoverFold(fs, new org.apache.hadoop.fs.Path(root, sub)))
     recoverEvidenceMoves(spark, root)
     recoverRetire(spark, root)
   }

@@ -1,13 +1,14 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Streaming QUALITY admission — the model/rule-scorer complement of
-  * [[IncrementalCoverage]] (span dedup at the door) and
-  * [[IncrementalDedup]] (near-dup at the door) in the same
-  * `foreachBatch` family: every arriving document passes the frozen
-  * curation gates or is turned away.
+/** The frozen QUALITY battery evaluated over one batch — the gate step
+  * the CDC pipeline's admission stage ([[graft.pipeline.QualityAdmission]])
+  * runs between compaction and the sink fanout. A corpus-building loop
+  * runs the same gates as the quality rungs of the one corpus-admission
+  * tick, [[IngestLadder.admitBatch]], which adds the dedup rungs and
+  * the per-batch corpus write.
   *
   * The gates ([[IngestLadder.frozenGates]], where their dials are
   * declared) are the batch ladder's own scorers with their parameters
@@ -40,54 +41,16 @@ import org.apache.spark.sql.functions._
   * Scale posture — the whole point of freezing: the weight and λ
   * tables are nBuckets-row broadcasts regardless of corpus size, every
   * score is doc-local, and there is NO store to probe or grow — per-
-  * tick cost is batch-sized and estimation state is ZERO. (Contrast
-  * [[IncrementalCoverage]], whose fingerprint store necessarily grows
-  * with the admitted corpus.)
-  *
-  * Exactly-once: admitted rows land in a PER-BATCH subdirectory
-  * (`corpusDir/batch=<batchId>`) written with Overwrite — a redelivered
-  * batch (checkpoint replay after a crash) rewrites its own directory
-  * byte-for-byte instead of appending duplicates. Since scoring is
-  * deterministic in (document, frozen tables), replay produces the
-  * identical admitted set; no ledger and no read-back of the corpus is
-  * needed. Consumers read `corpusDir` recursively (the `batch=` layout
-  * is a plain partition column).
-  *
-  * Because every gate is doc-local against frozen tables, the streamed
-  * admission over any partitioning of a corpus into batches equals the
-  * batch ladder run once over the union — the mergeability property the
-  * parity spec pins.
+  * batch cost is batch-sized and estimation state is ZERO. Because
+  * scoring is deterministic in (document, frozen tables), a replayed
+  * batch admits the identical subset, and admission over any
+  * partitioning of a corpus into batches equals the batch ladder run
+  * once over the union.
   */
 object IncrementalQuality {
 
-  /** One admission tick (a `foreachBatch` body). Returns
-    * (admitted, dropped); writes survivors to
-    * `corpusDir/batch=<batchId>`.
-    *
-    * @param gates the frozen battery — build it with
-    *              [[IngestLadder.frozenGates]], the one place its dials
-    *              (weights, DSIR λ, LM ceiling, repetition, C4, …) are
-    *              declared; a doc is admitted when EVERY gate keeps it
-    */
-  def admitBatch(batch: DataFrame, batchId: Long, idCol: String,
-                 textCol: String, corpusDir: String,
-                 gates: Seq[IngestLadder.Gate]): (Long, Long) = {
-    val g = gate(batch, idCol, textCol, gates)
-    val n = g.pre.count()
-    // per-batch directory + Overwrite = replay-idempotent without state
-    g.admitted.write.mode(SaveMode.Overwrite)
-      .parquet(s"$corpusDir/batch=$batchId")
-    g.release()
-    // count the survivors from the written files' parquet footers —
-    // metadata-only, instead of re-running the admission join
-    val nAdmitted = batch.sparkSession.read
-      .parquet(s"$corpusDir/batch=$batchId").count()
-    (nAdmitted, n - nAdmitted)
-  }
-
   /** The gated admission decision over one batch with its caches
-    * still live — the share point between [[admitBatch]] (standalone
-    * corpus-building loop) and the CDC pipeline's admission stage
+    * still live, for the CDC pipeline's admission stage
     * ([[graft.pipeline.QualityAdmission]]). `admitted` = the batch's
     * surviving rows (original columns). Call [[Gate.release]] only
     * after every read of `pre`/`admitted` has been materialized

@@ -16,8 +16,12 @@ import org.apache.spark.sql.functions._
   * and ONE per-doc verdict relation across all of them:
   *
   *   1. `url`          — canonical-key collapse + stored-key probe;
-  *                        no text read, NULL addresses pass (the
-  *                        [[IncrementalDedup.admitBatchUrl]] contract).
+  *                        no text read. Syntactic crawl variants of one
+  *                        page ([[TextOps.canonicalUrl]] collapses them)
+  *                        keep the minimum id; NULL addresses pass and
+  *                        never enter the key index (a NULL address is
+  *                        "no crawl provenance", not "the same page as
+  *                        every other address-less row").
   *   1.5 `lines`       — optional: the CCNet cross-document line cut
   *                        made steady-state against a persistent
   *                        `line_index/` (first occurrence wins, in
@@ -38,10 +42,15 @@ import org.apache.spark.sql.functions._
   *   5. `containment`  — optional: the embedded-quote signal over the
   *                        SAME postings relation (no extra tokenize) —
   *                        cross-batch τc-containment in an admitted doc
-  *                        drops; in-batch drops only against hosts that
-  *                        themselves survive ([[IncrementalDedup
-  *                        .admitBatchContainment]]'s discipline,
-  *                        including the mutual-pair minimum-id rule).
+  *                        drops; in-batch, x drops when τc-contained
+  *                        in a batch doc y that itself survives the
+  *                        stored probe (τ-containment is not transitive
+  *                        for τ < 1, so an index-dropped y cannot vouch
+  *                        for x), unless the containment is mutual and
+  *                        x is the lower id — one survivor per mutual
+  *                        group, the [[Dedup.containmentSurvivors]]
+  *                        rule. A batch doc that SWALLOWS an admitted
+  *                        doc is not dropped: it carries novel content.
   *   6. `domain`       — optional, LAST: per-registered-domain volume
   *                        quota against a persistent `domain_counts/`
   *                        index ([[IncrementalDedup
@@ -77,12 +86,16 @@ import org.apache.spark.sql.functions._
   * vouches for a drop. [[IncrementalDedup.reconcileNear]] closes that
   * documented divergence from the stored evidence.
   *
-  * REPLAY IDEMPOTENCE: the [[IncrementalDedup.admitBatchUrl]] recovery
-  * contract — every subtree written as a per-batch Overwrite partition,
-  * every cross-batch probe excluding the tick's own partition. The
-  * quality rungs are deterministic in (row, frozen tables), so a replay
-  * recomputes identical verdicts. Subtree layout = the ladder's six
-  * ([[IncrementalDedup.LadderSubtrees]]), so
+  * REPLAY IDEMPOTENCE: every subtree is written as a per-batch
+  * Overwrite partition and every cross-batch probe excludes the tick's
+  * own partition. Two separate non-atomic Appends would leave a crashed
+  * tick half-applied (corpus rows whose keys never reached an index),
+  * so the redelivered batch would re-admit duplicates; here a replay
+  * under the same id recomputes identical verdicts (the quality rungs
+  * are deterministic in (row, frozen tables)) and overwrites in place,
+  * and a batch redelivered under a NEW id is turned away by its own
+  * indexed keys and fingerprints. Subtree layout =
+  * [[IncrementalDedup.LadderSubtrees]], so
   * [[IncrementalDedup.maintainLadder]] folds an ingest root unchanged.
   *
   * At 100 TB: rung 1 shuffles url keys, rung 2 digests, the gates are
@@ -231,7 +244,7 @@ object IngestLadder {
     def empty: DataFrame = base.select(col(idCol).as("id")).limit(0)
 
     // rung 1: url — key collapse + stored-key probe; NULL keys pass and
-    // never enter the index (the admitBatchUrl convention)
+    // never enter the index
     val (urlDrops, urlKeysKept) = urlCol match {
       case None => (Materialize.multiScan(empty), None)
       case Some(u) =>
@@ -427,8 +440,11 @@ object IngestLadder {
     val nearDrops = Materialize.multiScan(
       inBatchNear.unionByName(vsIndexNear.select(col("id"))).distinct())
 
-    // rung containment (optional): the SAME postings relation, the
-    // admitBatchContainment semantics scoped to near survivors
+    // rung containment (optional): the SAME postings relation, scoped
+    // to near survivors. The stored probe runs first because its drops
+    // also disqualify in-batch HOSTS; the in-batch probe emits each
+    // pair in both orders, which the asymmetric rule consumes: x drops
+    // iff x ⊂τ y and NOT (mutual ∧ x < y)
     val contCaches = scala.collection.mutable.ArrayBuffer
       .empty[DataFrame]
     val contDrops: Option[DataFrame] = containmentTau.map { tauC =>
@@ -493,18 +509,8 @@ object IngestLadder {
       val dropsSoFar = preQuota.map(_._2.select(col("id")))
         .reduce(_ unionByName _).distinct()
       val surv = quotaDoms.get.join(dropsSoFar, Seq("id"), "left_anti")
-      val prior = others(s"$root/domain_counts") match {
-        case Some(ix) => ix.groupBy(col("reg_domain"))
-          .agg(sum(col("n")).as("prior"))
-        case None => surv.select(col("reg_domain"), lit(0L).as("prior"))
-          .limit(0)
-      }
-      Materialize.multiScan(surv.filter(col("reg_domain").isNotNull)
-        .withColumn("r", row_number().over(w.partitionBy(
-          col("reg_domain")).orderBy(col("id"))))
-        .join(prior, Seq("reg_domain"), "left")
-        .filter(coalesce(col("prior"), lit(0L)) + col("r") > kCap)
-        .select(col("id")))
+      Materialize.multiScan(IncrementalDedup.quotaDrops(surv,
+        s"$root/domain_counts", kCap, batchId))
     }
     val tagged: Seq[(String, DataFrame)] =
       preQuota ++ quotaDrops.map("domain" -> _)

@@ -102,7 +102,7 @@ object LadderBloom {
     * partitions (`batch < committedBelow`, including a prior fold's
     * `-1`). Returns the summarized key-row count; 0 with no sidecar
     * written when the subtree has no data yet. Call from the serialized
-    * maintenance window only (the [[IncrementalDedup.maintain]]
+    * maintenance window only (the [[IncrementalDedup.maintainLadder]]
     * contract).
     */
   def build(spark: SparkSession, root: String, sub: String,

@@ -330,29 +330,6 @@ object Layout {
           .as("skew_ratio"))
   }
 
-  /** Fold COMMITTED per-batch `batch=<id>` partitions of a parquet tree
-    * into one consolidated `batch=-1` partition — the generic form of
-    * the postings-index maintenance
-    * ([[graft.pipeline.QualityAdmission.maintainPostingsIndex]]
-    * delegates here): every per-batch-Overwrite admission layout
-    * (corpus slices, signature/key/postings indexes) accumulates one
-    * partition directory per micro-batch, the small-files mode that
-    * dominates scan cost at 100 TB.
-    *
-    * Only partitions with `0 ≤ batch < committedBelow` (plus a prior
-    * `batch=-1` fold) are touched: a replayed batch always reuses its
-    * own id, the fold target −1 is a value no real id takes, so the
-    * own-partition replay exclusion (`batch =!= currentId`, ids ≥ 0)
-    * always keeps folded rows. The schema is whatever the leaf files
-    * carry (partition column dropped by reading the leaf dirs
-    * directly). Same serialization contract and swap discipline as
-    * [[compactParquetDir]]: call from the serialized window that runs
-    * the ticks, snapshot-listed sources re-checked before the swap,
-    * hidden temp dir first, `.fold-old-*` dirs preserve data across
-    * the two-rename crash window.
-    *
-    * @return number of partition directories folded (0 = nothing to do)
-    */
   /** Driver-side listing of a batch-partitioned tree's partition values
     * (the `batch=N` directory names) — ONE filesystem list, no Spark
     * job. A missing tree lists empty. Probe planners use this to skip
@@ -397,6 +374,36 @@ object Layout {
       }.toMap
   }
 
+  /** Fold COMMITTED per-batch `batch=<id>` partitions of a parquet tree
+    * into one consolidated `batch=-1` partition — the generic form of
+    * the postings-index maintenance
+    * ([[graft.pipeline.QualityAdmission.maintainPostingsIndex]]
+    * delegates here): every per-batch-Overwrite admission layout
+    * (corpus slices, signature/key/postings indexes) accumulates one
+    * partition directory per micro-batch, the small-files mode that
+    * dominates scan cost at 100 TB.
+    *
+    * Only partitions with `0 ≤ batch < committedBelow` (plus a prior
+    * `batch=-1` fold) are touched: a replayed batch always reuses its
+    * own id, the fold target −1 is a value no real id takes, so the
+    * own-partition replay exclusion (`batch =!= currentId`, ids ≥ 0)
+    * always keeps folded rows. The schema is whatever the leaf files
+    * carry (partition column dropped by reading the leaf dirs
+    * directly). Call from the serialized window that runs the ticks;
+    * the snapshot-listed sources are re-checked before the swap, and a
+    * change aborts the fold with the tree untouched.
+    *
+    * CRASH SAFETY: the fold is one [[swapDir]] onto `batch=-1`, whose
+    * write reads the sources (the live `batch=-1` among them) and
+    * records the folded source names inside the new dir
+    * (`_graft_folded`) before its commit witness. The sources are
+    * deleted after the swap, then the record. [[recoverFold]] — run by
+    * every reader of a folded tree before it lists the tree — finishes
+    * or rolls back an interrupted fold, so every row is seen exactly
+    * once.
+    *
+    * @return number of partition directories folded (0 = nothing to do)
+    */
   def foldBatchPartitions(spark: org.apache.spark.sql.SparkSession,
                           dir: String, committedBelow: Long,
                           targetBytes: Long = 128L << 20): Int =
@@ -413,9 +420,10 @@ object Layout {
                           targetBytes: Long,
                           sortCol: Option[String]): Int = {
     require(committedBelow >= 0, s"committedBelow must be >= 0")
-    val path = new org.apache.hadoop.fs.Path(dir)
+    val path = new Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(path)) return 0
+    recoverFold(fs, path)
     // b <= -2 partitions are watermark-keyed APPLY artifacts — quota
     // REFUNDS in the counts tree and apply-MOVED retired postings in
     // the evidence tree ([[IncrementalDedup.applyReconcile]]'s
@@ -435,46 +443,104 @@ object Layout {
               (b <= -2L && -b - 2L < committedBelow))
       }.sorted.toSeq
     val snapshot = sourceDirs()
-    if (snapshot.isEmpty || snapshot == Seq("batch=-1")) return 0
-    val srcPaths = snapshot.map(n => new org.apache.hadoop.fs.Path(path, n))
+    if (snapshot.isEmpty || snapshot == Seq(FoldTarget)) return 0
+    val srcPaths = snapshot.map(new Path(path, _))
     val nFiles = fileCount(srcPaths.flatMap(p =>
       fs.listStatus(p).filter(_.isFile).map(_.getLen)).sum, targetBytes)
-    val tmp = new org.apache.hadoop.fs.Path(path,
-      s".fold-${java.util.UUID.randomUUID()}")
-    // reading the partition dirs directly drops the `batch` column —
-    // wanted: the fold target's value comes from its directory name
-    val src = spark.read.parquet(srcPaths.map(_.toString): _*)
-    val shaped = sortCol match {
-      case None => src.repartition(nFiles)
-      case Some(c) => src.repartitionByRange(nFiles, col(c))
-        .sortWithinPartitions(col(c))
+    val target = new Path(path, FoldTarget)
+    swapDir(fs, target) { tmp =>
+      // the record goes in FIRST: a tmp the committer's `_SUCCESS`
+      // would let recovery promote always names its sources
+      writeText(fs, new Path(tmp, FoldRecord),
+        snapshot.filter(_ != FoldTarget).mkString("\n"))
+      // reading the partition dirs directly drops the `batch` column —
+      // wanted: the fold target's value comes from its directory name
+      val src = spark.read.parquet(srcPaths.map(_.toString): _*)
+      val shaped = sortCol match {
+        case None => src.repartition(nFiles)
+        case Some(c) => src.repartitionByRange(nFiles, col(c))
+          .sortWithinPartitions(col(c))
+      }
+      shaped.write.mode(SaveMode.Append).parquet(tmp.toString)
+      if (sourceDirs() != snapshot)
+        throw new IllegalStateException(
+          s"$dir changed during partition fold (concurrent tick?) — " +
+            "serialize foldBatchPartitions with the admission ticks")
     }
-    shaped.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(tmp.toString)
-    if (sourceDirs() != snapshot) {
-      fs.delete(tmp, true)
-      throw new IllegalStateException(
-        s"$dir changed during partition fold (concurrent tick?) — " +
-          "serialize foldBatchPartitions with the admission ticks")
-    }
-    val old = srcPaths.map { p =>
-      val o = new org.apache.hadoop.fs.Path(path,
-        s".fold-old-${p.getName}-${java.util.UUID.randomUUID()}")
-      require(fs.rename(p, o), s"rename $p failed")
-      o
-    }
-    require(fs.rename(tmp, new org.apache.hadoop.fs.Path(path, "batch=-1")),
-      "rename of folded partition failed")
-    old.foreach(fs.delete(_, true))
+    deleteFolded(fs, path)
     // record what batch=-1 now COVERS — the one piece of provenance a
     // fold otherwise erases. Watermark-scoped consumers (e.g.
     // [[IncrementalDedup.retireEvidence]] deciding whether a lagged
     // retention watermark covers the folded rows) read it back with
-    // [[foldWatermark]]. Written after the renames: a crash in between
+    // [[foldWatermark]]. Written after the swap: a crash in between
     // leaves a STALE (lower) watermark, which only makes consumers
     // conservative, never wrong.
     writeFoldWatermark(spark, dir, committedBelow)
     snapshot.size
+  }
+
+  private val FoldTarget = "batch=-1"
+
+  /** The folded-source record inside a fold's `batch=-1` (underscore-
+    * prefixed: invisible to parquet reads). Present only between the
+    * fold's swap and the end of its source deletes. */
+  private[graft] val FoldRecord = "_graft_folded"
+
+  // what the rename-aside fold this one replaced left after a crash:
+  // its output dir and each source partition it had moved aside
+  private val LegacyFoldTmp = """\.fold-[0-9a-f-]{36}""".r
+  private val LegacyFoldOld = """\.fold-old-(batch=-?\d+)-[0-9a-f-]{36}""".r
+
+  /** Heal an interrupted [[foldBatchPartitions]] of the tree `dir`:
+    * [[recoverSwapDir]] on its `batch=-1`, then delete every source the
+    * live `batch=-1` records as folded that still exists. A tree left
+    * by the earlier rename-aside fold is healed too: while that fold's
+    * output dir still exists its final rename never ran, so the
+    * moved-aside sources go back and the output is dropped; without it
+    * the sources were folded, and are deleted. Callers serialize this
+    * with the tree's writers. A missing tree is a no-op. */
+  private[graft] def recoverFold(fs: FileSystem, dir: Path): Unit =
+    if (fs.exists(dir)) {
+      recoverSwapDir(fs, new Path(dir, FoldTarget))
+      deleteFolded(fs, dir)
+      val names = fs.listStatus(dir).map(_.getPath.getName)
+      val unfinished = names.exists(LegacyFoldTmp.pattern.matcher(_).matches)
+      names.foreach {
+        case n @ LegacyFoldOld(leaf) =>
+          if (unfinished) mustRename(fs, new Path(dir, n), new Path(dir, leaf))
+          else fs.delete(new Path(dir, n), true)
+        case n @ LegacyFoldTmp() => fs.delete(new Path(dir, n), true)
+        case _ =>
+      }
+    }
+
+  private[graft] def recoverFold(spark: org.apache.spark.sql.SparkSession,
+                                 dir: String): Unit = {
+    val path = new Path(dir)
+    recoverFold(path.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      path)
+  }
+
+  // the fold's last step: delete the recorded sources, then the record
+  private def deleteFolded(fs: FileSystem, dir: Path): Unit = {
+    val record = new Path(new Path(dir, FoldTarget), FoldRecord)
+    if (fs.exists(record)) {
+      readText(fs, record).split("\n").filter(_.nonEmpty)
+        .foreach(n => fs.delete(new Path(dir, n), true))
+      fs.delete(record, false)
+    }
+  }
+
+  private def writeText(fs: FileSystem, file: Path, text: String): Unit = {
+    val out = fs.create(file, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+  }
+
+  private def readText(fs: FileSystem, file: Path): String = {
+    val in = fs.open(file)
+    try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
+      "UTF-8")
+    finally in.close()
   }
 
   private val FoldMarker = ".fold_below"
@@ -490,11 +556,9 @@ object Layout {
     * into watermark-KEYED evidence partitions instead of merging. */
   private[graft] def writeFoldWatermark(spark: org.apache.spark.sql.SparkSession,
                                         dir: String, w: Long): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(dir, FoldMarker)
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(marker, true)
-    out.write(w.toString.getBytes("UTF-8"))
-    out.close()
+    val marker = new Path(dir, FoldMarker)
+    writeText(marker.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      marker, w.toString)
   }
 
   /** The highest `committedBelow` a [[foldBatchPartitions]] run has
@@ -504,16 +568,12 @@ object Layout {
     * `batch=-1`'s coverage as UNKNOWN (be conservative). */
   private[graft] def foldWatermark(spark: org.apache.spark.sql.SparkSession,
                                    dir: String): Option[Long] = {
-    val path = new org.apache.hadoop.fs.Path(dir, FoldMarker)
+    val path = new Path(dir, FoldMarker)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(path)) None
     else {
-      val in = fs.open(path)
-      try {
-        val s = new String(
-          org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-        scala.util.Try(s.trim.toLong).toOption
-      } finally in.close()
+      val s = readText(fs, path)
+      scala.util.Try(s.trim.toLong).toOption
     }
   }
 }

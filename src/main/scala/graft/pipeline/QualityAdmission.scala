@@ -41,8 +41,8 @@ import graft.ext.{Corpus, IncrementalQuality, IngestLadder, Layout, Materialize}
   * steady-state CONTAINMENT (`containment_index_dir`) turns away
   * documents τ-contained in an already-admitted one (the embedded-quote
   * signal resemblance can't see), probing a persisted shingle-postings
-  * index and appending survivors' postings per batch — the
-  * [[graft.ext.IncrementalDedup.admitBatchContainment]] storage pattern
+  * index and appending survivors' postings per batch — the storage of
+  * the ingest ladder's containment rung ([[IngestLadder.admitBatch]])
   * under the admission stage's replay discipline (per-batch Overwrite
   * partitions; a replay probes only PRIOR batches' partitions, so a
   * failed attempt's own postings can never turn its replay away). This
@@ -54,7 +54,7 @@ import graft.ext.{Corpus, IncrementalQuality, IngestLadder, Layout, Materialize}
   * a checkpoint replay admits the identical subset — the merge sink's
   * ledger semantics are untouched. The optional rejected-row audit
   * trail uses the per-batch-directory Overwrite layout, replay-
-  * idempotent like [[graft.ext.IncrementalQuality.admitBatch]]'s corpus.
+  * idempotent like the ingest ladder's corpus.
   */
 object QualityAdmission {
 
@@ -158,11 +158,13 @@ object QualityAdmission {
     // gates so only text that cleared them pays the tokenize+probe.
     // In-batch containment is deliberately NOT checked here: the
     // compacted batch is unique per (db, tb, pk), and cross-document
-    // in-batch collapse is the dedup loop's job
-    // ([[graft.ext.IncrementalDedup.admitBatchContainment]]).
+    // in-batch collapse is the ingest ladder's job
+    // ([[graft.ext.IngestLadder.admitBatch]]).
     val admittedScored = cfg.containment_index_dir match {
       case None => langFiltered
       case Some(dir) =>
+        // a fold interrupted by a crash would hide or double rows
+        Layout.recoverFold(compacted.sparkSession, dir)
         val tau = cfg.containment_tau_x10k.toDouble / 10000
         val posts = Materialize.multiScan(graft.ext.Dedup.shinglePostings(
           langFiltered, "__adm_id", "__adm_text", cfg.containment_n))
@@ -218,9 +220,7 @@ object QualityAdmission {
     * writes one `batch=<id>` partition per micro-batch (the
     * replay-idempotent Overwrite layout) — an unattended stream
     * accumulates partition directories linearly in tick count, the
-    * small-files failure mode that dominates scan cost at 100 TB
-    * ([[graft.ext.IncrementalDedup.maintain]]'s concern, at partition
-    * rather than file granularity).
+    * small-files failure mode that dominates scan cost at 100 TB.
     *
     * Only partitions with `0 ≤ batch < committedBelow` (plus any prior
     * `batch=-1` fold) are touched: foreachBatch never replays a
@@ -231,13 +231,10 @@ object QualityAdmission {
     * right for committed postings. Pass `committedBelow` = the last
     * batch id the SINK's ledger shows committed (not merely written).
     *
-    * Same serialization contract and swap discipline as
-    * [[graft.ext.Layout.compactParquetDir]]: call from the serialized
-    * window that runs the ticks (no concurrent tick), sources are
-    * snapshot-listed and re-checked before the swap, the consolidated
-    * data is written to a hidden temp dir first, and the crash window
-    * is the same two-rename gap (hidden `.fold-old-*` dirs preserve the
-    * data for manual recovery).
+    * Call from the serialized window that runs the ticks (no concurrent
+    * tick). The fold is crash-safe ([[graft.ext.Layout.foldBatchPartitions]]):
+    * the gate runs [[graft.ext.Layout.recoverFold]] on the index before
+    * every probe.
     *
     * @return number of partition directories folded (0 = nothing to do)
     */

@@ -2109,15 +2109,15 @@ private[graft] trait QueriesDedup { this: Queries.type =>
   /** STEADY-STATE containment: the same batch-vs-admitted check as
     * `dedup_containment_incremental`, but scored by
     * [[Dedup.containmentProbe]] over the STORABLE shingle-postings
-    * relation ([[Dedup.shinglePostings]] — what
-    * [[graft.ext.IncrementalDedup.admitBatchContainment]] persists at
-    * admission and probes per batch, never re-tokenizing corpus text).
+    * relation ([[Dedup.shinglePostings]] — what the ingest ladder
+    * ([[graft.ext.IngestLadder.admitBatch]]) persists at admission and
+    * probes per batch, never re-tokenizing corpus text).
     * Probe and recompute-from-text share one join, and this row pins
     * the equivalence: SAME oracle as `dedup_containment_incremental`,
     * so index-probe ≡ containmentAgainst hash-for-hash. The
     * parquet-persisted multi-batch loop itself (write postings, read
-    * back, probe, append survivors) is exercised end-to-end in
-    * `IncrementalDedupSpec`.
+    * back, probe, append survivors) is exercised end-to-end by
+    * ExtOpsSpec's "containment admission loop".
     */
   val qDedupContainmentSteady = Q("dedup_containment_steady",
     (s, dir) => {

@@ -385,55 +385,6 @@ object ScaleBench {
       println(f"| $name | ${s}x | $inRows | $cold%.2f | $warm%.2f | $rows |")
     }
 
-    // Streaming quality-admission tick curve (SCALE_OPS=qualityTick):
-    // the posture claim under measurement is that a tick costs BATCH
-    // time — flat in how much has already been admitted (there is no
-    // store to probe; the frozen tables are O(nBuckets) broadcasts),
-    // linear in batch rows with the full four-gate stack (Gopher rules
-    // + repetition battery + quality logit + DSIR threshold). Contrast
-    // IncrementalCoverage, whose fingerprint store necessarily grows.
-    if (sys.env.get("SCALE_OPS").exists(_.split(",").map(_.trim)
-        .contains("qualityTick"))) {
-      import graft.ext.{Corpus, IncrementalQuality, IngestLadder, Materialize}
-      val qroot = s"$root/qualtick"
-      val weights = spark.range(1024).select(col("id").as("bucket"),
-        (pmod(graft.ext.TextOps.portableHash(col("id").cast("string")),
-          lit(21L)) - 10L).as("w"))
-      weights.cache().count()
-      // λ trained ONCE on two slices of the synthetic corpus (estimation
-      // is not part of a tick — that is the point of freezing)
-      val lam = Materialize.multiScan(Corpus.dsirLambda(
-        docs(1).filter(col("doc_id") % 7 =!= 0),
-        docs(1).filter(col("doc_id") % 7 === 0),
-        "doc_id", "text", nBuckets = 1024))
-      lam.count()
-      // unigram LM frozen once on the 1x corpus (vocab-sized broadcast)
-      val lmT = Materialize.multiScan(Corpus.unigramLm(
-        docs(1), "doc_id", "text"))
-      lmT.count()
-      val stops = (0 until 100).map("w" + _)
-      println("| op | batch | tick | batch rows | tick s | admitted |")
-      println("|---|---|---|---|---|---|")
-      for (s <- scales; tick <- 0 until 3) {
-        // distinct batch content per tick (offset ids) so the admitted
-        // corpus genuinely grows between ticks
-        val batch = synthDocs(spark, baseDocs * s)
-          .select((col("doc_id") + lit(tick * 1000000L)).as("doc_id"),
-            col("text"))
-        batch.cache().count() // price the gates, not the synth generator
-        val t0 = System.nanoTime()
-        val (adm, _) = IncrementalQuality.admitBatch(batch,
-          batchId = s.toLong * 100 + tick, "doc_id", "text",
-          s"$qroot/corpus", IngestLadder.frozenGates(weights,
-            nBuckets = 1024, thrMilli = -2000L,
-            lambda = Some(lam), dsirThrX10k = -100000L,
-            stopwords = stops, repetition = true,
-            lm = Some(lmT), maxMeanSurprisalX10k = 500000L))
-        val wall = (System.nanoTime() - t0) / 1e9
-        batch.unpersist()
-        println(f"| qualityTick | ${s}x | $tick | ${baseDocs * s} | $wall%.2f | $adm |")
-      }
-    }
     spark.stop()
   }
 }

@@ -100,7 +100,7 @@ class C4RulesSpec extends AnyFunSuite {
   }
 
   test("streaming admission: C4 as the sixth gate, off by default") {
-    import graft.ext.{IncrementalQuality, IngestLadder}
+    import graft.ext.IngestLadder
     val dir = java.nio.file.Files.createTempDirectory("c4adm").toString
     // neutral weight table: the quality gate admits everything at this
     // threshold — the C4 verdict is the only discriminator under test
@@ -112,8 +112,15 @@ class C4RulesSpec extends AnyFunSuite {
       (2L, base + "\nint f() { return 0; }"), // brace page
       (3L, "the line without punct of note\nthe other bare line stays here"))
       .toDF("doc_id", "text") // gopher-passing, zero C4-keepable lines
-    val (adm, drop) = IncrementalQuality.admitBatch(docs, 0L, "doc_id",
-      "text", s"$dir/corpus", IngestLadder.frozenGates(weights,
+    // the ladder with only its gate rungs dropping: distinct texts pass
+    // the exact rung, and near at τ = 1.0 drops no distinct shingle set
+    def admit(root: String, gates: Seq[IngestLadder.Gate]): (Long, Long) = {
+      val v = IngestLadder.admitBatch(docs, "doc_id", "text", None, gates,
+        root, n = 3, tau = 1.0, batchId = 0L)
+      (v.filter(col("dropped_at").isNull).count(),
+        v.filter(col("dropped_at").isNotNull).count())
+    }
+    val (adm, drop) = admit(dir, IngestLadder.frozenGates(weights,
         nBuckets = 64, thrMilli = -100000L, minWords = 5, c4 = true,
         c4BadWords = Seq("spam")))
     assert((adm, drop) == ((1L, 2L)))
@@ -121,8 +128,7 @@ class C4RulesSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSet
     assert(ids == Set(1L))
     // same batch, gate off: page structure goes unchecked
-    val (adm2, _) = IncrementalQuality.admitBatch(docs, 1L, "doc_id",
-      "text", s"$dir/corpus", IngestLadder.frozenGates(weights,
+    val (adm2, _) = admit(s"$dir/off", IngestLadder.frozenGates(weights,
         nBuckets = 64, thrMilli = -100000L, minWords = 5))
     assert(adm2 == 3L)
   }

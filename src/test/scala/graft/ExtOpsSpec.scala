@@ -13,6 +13,28 @@ class ExtOpsSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
   val sf = "/root/testdata/sf0.001"
 
+  /** One [[graft.ext.IngestLadder.admitBatch]] tick over `root` with
+    * only the rungs under test live: `gates` (none by default), the url
+    * rung when `urlCol` is set, the containment rung when
+    * `containmentTau` is set. The near rung runs at τ = 1.0, where it
+    * can drop only a doc whose shingle set equals another's — a
+    * mutual-containment pair whose minimum id survives either way. A
+    * batch without a `text` column gets a NULL one, which passes the
+    * exact rung and yields no shingles. Returns id -> dropped_at. */
+  private def ladderTick(batch: org.apache.spark.sql.DataFrame,
+                         root: String, batchId: Long,
+                         urlCol: Option[String] = None,
+                         containmentTau: Option[Double] = None,
+                         gates: Seq[graft.ext.IngestLadder.Gate] = Nil)
+      : Map[Long, Option[String]] = {
+    val b = if (batch.columns.contains("text")) batch
+      else batch.withColumn("text", lit(null).cast("string"))
+    graft.ext.IngestLadder.admitBatch(b, "doc_id", "text", urlCol, gates,
+        root, n = 3, tau = 1.0, batchId = batchId,
+        containmentTau = containmentTau)
+      .collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
+  }
+
   test("minhash-LSH candidates recall high-jaccard pairs") {
     val docs = Tables.documents(spark, sf)
     val exact = Dedup.jaccardPairs(docs, "doc_id", "text", n = 3, tau = 0.5)
@@ -464,43 +486,6 @@ class ExtOpsSpec extends AnyFunSuite {
       s"A-vs-B ${ab.size} pairs != self-join cross slice ${crossFromSelf.size}")
   }
 
-  test("incremental-dedup operational loop: in-batch and cross-batch drops, index grows") {
-    import spark.implicits._
-    import graft.ext.IncrementalDedup
-    val root = java.nio.file.Files.createTempDirectory("graft_incdedup").toString
-    val (corpusDir, indexDir) = (s"$root/corpus", s"$root/index")
-    val aText = "apple banana cherry dates elder fig grape honey ice jam kiwi lemon"
-    val bText = "wolf bear lynx otter moose raven heron crane stork finch robin wren"
-    val cText = "iron zinc gold lead tin silver nickel cobalt copper chrome neon argon"
-    // tick 1: doc 3 is an in-batch duplicate of doc 1
-    val t1 = IncrementalDedup.admitBatch(
-      Seq((1L, aText), (2L, bText), (3L, aText)).toDF("doc_id", "text"),
-      "doc_id", "text", corpusDir, indexDir, maxDist = 3, batchId = 0L)
-    assert(t1 == ((2L, 1L, 0L)), s"tick1 $t1")
-    // tick 2: doc 10 duplicates the ADMITTED doc 1 (cross-batch, via the
-    // index); doc 12 duplicates doc 11 in-batch
-    val t2 = IncrementalDedup.admitBatch(
-      Seq((10L, aText), (11L, cText), (12L, cText)).toDF("doc_id", "text"),
-      "doc_id", "text", corpusDir, indexDir, maxDist = 3, batchId = 1L)
-    assert(t2 == ((1L, 1L, 1L)), s"tick2 $t2")
-    val corpus = spark.read.parquet(corpusDir)
-      .select("doc_id").as[Long].collect().toSet
-    assert(corpus == Set(1L, 2L, 11L), s"corpus $corpus")
-    val index = spark.read.parquet(indexDir)
-      .select("id").as[Long].collect().toSet
-    assert(index == corpus, "index must track exactly the admitted docs")
-    // SAME-ID replay (failed-attempt recovery): the tick's own
-    // partitions are excluded from the probe and overwritten in place —
-    // identical counts, no duplicate corpus rows
-    val r2 = IncrementalDedup.admitBatch(
-      Seq((10L, aText), (11L, cText), (12L, cText)).toDF("doc_id", "text"),
-      "doc_id", "text", corpusDir, indexDir, maxDist = 3, batchId = 1L)
-    assert(r2 == t2, s"same-id replay $r2 != $t2")
-    val corpusR = spark.read.parquet(corpusDir)
-      .select("doc_id").as[Long].collect().toSeq.sorted
-    assert(corpusR == Seq(1L, 2L, 11L), s"replay dup'd corpus: $corpusR")
-  }
-
   test("winnowing: selection matches an independent reference (ties " +
       "rightmost), and the span guarantee holds where anchors miss") {
     import spark.implicits._
@@ -937,23 +922,22 @@ class ExtOpsSpec extends AnyFunSuite {
   test("URL admission loop: stored canonical-key index, variants " +
       "collapse in-batch, seen pages turned away cross-batch") {
     import spark.implicits._
-    import graft.ext.IncrementalDedup
     val root = java.nio.file.Files.createTempDirectory("graft_incurl").toString
-    val (corpusDir, indexDir) = (s"$root/corpus", s"$root/index")
+    val (corpusDir, indexDir) = (s"$root/corpus", s"$root/url_index")
     // tick 1: docs 1 and 3 are crawl variants of ONE page (min id wins)
-    val t1 = IncrementalDedup.admitBatchUrl(
+    val t1 = ladderTick(
       Seq((1L, "http://a.com/p/1"), (2L, "http://a.com/p/2"),
         (3L, "HTTPS://A.COM/p/1/")).toDF("doc_id", "url"),
-      "doc_id", "url", corpusDir, indexDir, batchId = 0L)
-    assert(t1 == ((2L, 1L, 0L)), s"tick1 $t1")
+      root, batchId = 0L, urlCol = Some("url"))
+    assert(t1 == Map(1L -> None, 2L -> None, 3L -> Some("url")), s"tick1 $t1")
     // tick 2: doc 10 re-crawls page 1 with tracking junk (index drop);
     // docs 11+12 are in-batch variants of a new page
     val batch2 = Seq((10L, "http://a.com:80/p/1?utm_source=x"),
       (11L, "http://a.com/p/3?id=3"),
       (12L, "http://a.com/p/3/?id=3#frag")).toDF("doc_id", "url")
-    val t2 = IncrementalDedup.admitBatchUrl(
-      batch2, "doc_id", "url", corpusDir, indexDir, batchId = 1L)
-    assert(t2 == ((1L, 1L, 1L)), s"tick2 $t2")
+    val t2 = ladderTick(batch2, root, batchId = 1L, urlCol = Some("url"))
+    assert(t2 == Map(10L -> Some("url"), 11L -> None, 12L -> Some("url")),
+      s"tick2 $t2")
     val corpus = spark.read.parquet(corpusDir)
       .select("doc_id").as[Long].collect().toSet
     assert(corpus == Set(1L, 2L, 11L), s"corpus $corpus")
@@ -962,10 +946,9 @@ class ExtOpsSpec extends AnyFunSuite {
     assert(index == corpus, "index must track exactly the admitted pages")
     // REPLAY of tick 2 (redelivered batch, same batch id — the failure-
     // recovery path): the per-batch Overwrite partitions make the tick
-    // idempotent — same verdict counts, no duplicate corpus rows, and
-    // the batch's own index partition does not turn its replay away
-    val replay = IncrementalDedup.admitBatchUrl(
-      batch2, "doc_id", "url", corpusDir, indexDir, batchId = 1L)
+    // idempotent — same verdicts, no duplicate corpus rows, and the
+    // batch's own index partition does not turn its replay away
+    val replay = ladderTick(batch2, root, batchId = 1L, urlCol = Some("url"))
     assert(replay == t2, s"replay $replay != $t2")
     val corpusR = spark.read.parquet(corpusDir)
       .select("doc_id").as[Long].collect().toSeq.sorted
@@ -977,7 +960,7 @@ class ExtOpsSpec extends AnyFunSuite {
       "and url admission all treat a NULL canonical key as a survivor, " +
       "never as 'the same page as every other address-less row'") {
     import spark.implicits._
-    import graft.ext.{IncrementalDedup, IngestLadder}
+    import graft.ext.IngestLadder
     val root = java.nio.file.Files.createTempDirectory("graft_nullurl").toString
     // two NULL-address docs with unrelated text: before the fix the url
     // window grouped them into one NULL partition and dropped doc 3
@@ -1010,20 +993,20 @@ class ExtOpsSpec extends AnyFunSuite {
       "doc_id", "text", Some("url"), Nil, root, n = 3, tau = 0.5, batchId = 1L)
       .as[(Long, Option[String])].collect().toMap
     assert(v2 == Map(11L -> None, 12L -> None), s"tick2 $v2")
-    // the standalone url admission tick: NULL rows admitted outside the
-    // key accounting, keyed rows keep the first-arrival contract
+    // the url rung alone: NULL rows admitted outside the key
+    // accounting, keyed rows keep the first-arrival contract
     val root2 = java.nio.file.Files.createTempDirectory("graft_nullurl2")
       .toString
-    val t1 = IncrementalDedup.admitBatchUrl(
+    val t1 = ladderTick(
       Seq((1L, Option("http://a.com/1")), (2L, Option.empty[String]),
         (3L, Option.empty[String])).toDF("doc_id", "url"),
-      "doc_id", "url", s"$root2/corpus", s"$root2/index", batchId = 0L)
-    assert(t1 == ((3L, 0L, 0L)), s"tick1 $t1")
-    val t2 = IncrementalDedup.admitBatchUrl(
+      root2, batchId = 0L, urlCol = Some("url"))
+    assert(t1 == Map(1L -> None, 2L -> None, 3L -> None), s"tick1 $t1")
+    val t2 = ladderTick(
       Seq((10L, Option.empty[String]), (11L, Option("http://a.com/1")))
         .toDF("doc_id", "url"),
-      "doc_id", "url", s"$root2/corpus", s"$root2/index", batchId = 1L)
-    assert(t2 == ((1L, 0L, 1L)), s"tick2 $t2")
+      root2, batchId = 1L, urlCol = Some("url"))
+    assert(t2 == Map(10L -> None, 11L -> Some("url")), s"tick2 $t2")
     val corpus = spark.read.parquet(s"$root2/corpus")
       .select("doc_id").as[Long].collect().toSet
     assert(corpus == Set(1L, 2L, 3L, 10L), s"corpus $corpus")
@@ -1061,7 +1044,6 @@ class ExtOpsSpec extends AnyFunSuite {
 
   test("containment admission loop: stored postings index, embedded quotes turned away, probe == recompute") {
     import spark.implicits._
-    import graft.ext.IncrementalDedup
     val root = java.nio.file.Files.createTempDirectory("graft_inccont").toString
     val (corpusDir, postingsDir) = (s"$root/corpus", s"$root/postings")
     // host page H: 30 words; quotes are 10-word contiguous passages of
@@ -1083,23 +1065,23 @@ class ExtOpsSpec extends AnyFunSuite {
       "hazel", "beech", "fir", "yew", "holly", "plane", "lime", "box"))
       .mkString(" ")
     // tick 1: 3 is an embedded quote of in-batch host 1 (one-directional
-    // → drops regardless of id); 4 is a mutual near-copy of 2 (min id
-    // survives)
-    val t1 = IncrementalDedup.admitBatchContainment(
+    // → drops regardless of id); 4 is an exact copy of 2 (min id
+    // survives; the ladder's exact rung turns it away first)
+    val t1 = ladderTick(
       Seq((1L, hText), (2L, bText), (3L, quote1), (4L, bText))
         .toDF("doc_id", "text"),
-      "doc_id", "text", corpusDir, postingsDir, n = 3, tau = 0.5,
-      batchId = 0L)
-    assert(t1 == ((2L, 2L, 0L)), s"tick1 $t1")
+      root, batchId = 0L, containmentTau = Some(0.5))
+    assert(t1 == Map(1L -> None, 2L -> None, 3L -> Some("containment"),
+      4L -> Some("exact")), s"tick1 $t1")
     // tick 2: 10 quotes the ADMITTED host 1 (cross-batch, via the stored
     // postings index — turned away); 11 is novel; 12 SWALLOWS admitted
     // doc 2 (cont_corpus = 1.0): the reverse direction must NOT drop
-    val t2 = IncrementalDedup.admitBatchContainment(
+    val t2 = ladderTick(
       Seq((10L, quote2), (11L, cText), (12L, superB))
         .toDF("doc_id", "text"),
-      "doc_id", "text", corpusDir, postingsDir, n = 3, tau = 0.5,
-      batchId = 1L)
-    assert(t2 == ((2L, 0L, 1L)), s"tick2 $t2")
+      root, batchId = 1L, containmentTau = Some(0.5))
+    assert(t2 == Map(10L -> Some("containment"), 11L -> None, 12L -> None),
+      s"tick2 $t2")
     val corpus = spark.read.parquet(corpusDir)
       .select("doc_id").as[Long].collect().toSet
     assert(corpus == Set(1L, 2L, 11L, 12L), s"corpus $corpus")
@@ -1122,21 +1104,19 @@ class ExtOpsSpec extends AnyFunSuite {
     assert(viaIndex.exists { case (b, c, cb, _) => b == 20L && c == 1L && cb == 1.0 },
       "quote1 must be fully contained in the admitted host")
     // redelivery under a NEW id (cross-restart at-least-once): the
-    // batch re-probes the index, finds itself at containment 1.0, and
-    // admits nothing
-    val replay = IncrementalDedup.admitBatchContainment(
+    // batch finds its own content already indexed and admits nothing
+    val replay = ladderTick(
       Seq((1L, hText), (2L, bText)).toDF("doc_id", "text"),
-      "doc_id", "text", corpusDir, postingsDir, n = 3, tau = 0.5,
-      batchId = 2L)
-    assert(replay == ((0L, 0L, 2L)), s"replayed batch must admit nothing: $replay")
+      root, batchId = 2L, containmentTau = Some(0.5))
+    assert(replay.size == 2 && replay.values.forall(_.isDefined),
+      s"replayed batch must admit nothing: $replay")
     // SAME-ID replay (failed-attempt recovery): the tick's own
     // partitions are excluded and overwritten in place — identical
     // counts, no duplicate corpus rows
-    val r2 = IncrementalDedup.admitBatchContainment(
+    val r2 = ladderTick(
       Seq((10L, quote2), (11L, cText), (12L, superB))
         .toDF("doc_id", "text"),
-      "doc_id", "text", corpusDir, postingsDir, n = 3, tau = 0.5,
-      batchId = 1L)
+      root, batchId = 1L, containmentTau = Some(0.5))
     assert(r2 == t2, s"same-id replay $r2 != $t2")
     val corpusR = spark.read.parquet(corpusDir)
       .select("doc_id").as[Long].collect().toSeq.sorted
@@ -1145,7 +1125,6 @@ class ExtOpsSpec extends AnyFunSuite {
 
   test("containment admission: an index-dropped doc cannot vouch for an in-batch drop (no recall-loss cascade)") {
     import spark.implicits._
-    import graft.ext.IncrementalDedup
     // τ-containment is not transitive for τ < 1: y ⊂τ H and x ⊂τ y do
     // NOT imply x ⊂τ H. Construct exactly that: H admitted in tick 1;
     // tick 2 brings y = half-H ++ novel-run (cont(y→H) = 0.5, dropped
@@ -1162,15 +1141,13 @@ class ExtOpsSpec extends AnyFunSuite {
     val yText = (w.take(12) ++ nov).mkString(" ")     // 20 shingles: 10 H + 2 boundary + 8 novel
     val xText = nov.mkString(" ")                     // 8 shingles, all ⊂ y, none ⊂ H
     val root = java.nio.file.Files.createTempDirectory("graft_cascade").toString
-    val (c, p) = (s"$root/corpus", s"$root/postings")
-    val t1 = IncrementalDedup.admitBatchContainment(
-      Seq((1L, hText)).toDF("doc_id", "text"),
-      "doc_id", "text", c, p, n = 3, tau = 0.5, batchId = 0L)
-    assert(t1 == ((1L, 0L, 0L)), s"tick1 $t1")
-    val t2 = IncrementalDedup.admitBatchContainment(
-      Seq((10L, yText), (11L, xText)).toDF("doc_id", "text"),
-      "doc_id", "text", c, p, n = 3, tau = 0.5, batchId = 1L)
-    assert(t2 == ((1L, 0L, 1L)),
+    val c = s"$root/corpus"
+    val t1 = ladderTick(Seq((1L, hText)).toDF("doc_id", "text"),
+      root, batchId = 0L, containmentTau = Some(0.5))
+    assert(t1 == Map(1L -> None), s"tick1 $t1")
+    val t2 = ladderTick(Seq((10L, yText), (11L, xText)).toDF("doc_id", "text"),
+      root, batchId = 1L, containmentTau = Some(0.5))
+    assert(t2 == Map(10L -> Some("containment"), 11L -> None),
       s"y drops vs index, x must be admitted (not cascade-dropped): $t2")
     val corpus = spark.read.parquet(c).select("doc_id").as[Long].collect().toSet
     assert(corpus == Set(1L, 11L), s"corpus $corpus")
@@ -1185,7 +1162,6 @@ class ExtOpsSpec extends AnyFunSuite {
 
   test("containment admission in-batch rule fuzz: survivors == pair-relation rule, one survivor per mutual group") {
     import spark.implicits._
-    import graft.ext.IncrementalDedup
     // The declared in-batch semantics, computed from containmentPairs —
     // the id-ordered SELF-JOIN path, not the probe the loop itself
     // uses: doc x drops iff ∃ y with cont(x→y) ≥ τ and NOT (mutual ∧
@@ -1224,15 +1200,19 @@ class ExtOpsSpec extends AnyFunSuite {
       }.toSet
       val root = java.nio.file.Files
         .createTempDirectory(s"graft_contfuzz$trial").toString
-      val (adm, inBatch, vsIndex) = IncrementalDedup.admitBatchContainment(
-        df, "doc_id", "text", s"$root/c", s"$root/p", n = 3, tau = tau,
-        batchId = 0L)
-      assert(vsIndex == 0L, "no index yet: nothing can drop cross-batch")
-      val admitted = spark.read.parquet(s"$root/c")
+      // exact copies (a mutual group keeping its minimum id) drop at the
+      // exact rung before the containment rung sees them
+      val verdicts = ladderTick(df, root, batchId = 0L,
+        containmentTau = Some(tau))
+      assert(verdicts.values.flatten.toSet.subsetOf(
+          Set("exact", "near", "containment")),
+        s"no index yet: only in-batch rungs can drop: $verdicts")
+      val admitted = spark.read.parquet(s"$root/corpus")
         .select("doc_id").as[Long].collect().toSet
       assert(admitted == docs.map(_._1).toSet -- expectDrop,
         s"trial $trial: admitted $admitted, expected drops $expectDrop")
-      assert(adm == admitted.size.toLong && inBatch == expectDrop.size.toLong)
+      assert(verdicts.count(_._2.isEmpty) == admitted.size &&
+        verdicts.count(_._2.isDefined) == expectDrop.size)
       // every mutual-containment (near-identical) group keeps EXACTLY
       // its minimum member
       val mutual = pairs.collect { case (s, h, c)
@@ -1248,59 +1228,6 @@ class ExtOpsSpec extends AnyFunSuite {
       assert(offline == admitted,
         s"trial $trial: containmentSurvivors $offline != tick $admitted")
     }
-  }
-
-  test("incremental-dedup streaming e2e: checkpoint restart, nothing re-admitted") {
-    import spark.implicits._
-    import graft.ext.IncrementalDedup
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sq = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_incdedup_stream").toString
-    val (corpusDir, indexDir) = (s"$root/corpus", s"$root/index")
-    val ckpt = s"$root/ckpt"
-    val aText = "apple banana cherry dates elder fig grape honey ice jam kiwi lemon"
-    val bText = "wolf bear lynx otter moose raven heron crane stork finch robin wren"
-    val cText = "iron zinc gold lead tin silver nickel cobalt copper chrome neon argon"
-    val dText = "oak elm ash birch pine cedar maple willow alder rowan hazel beech"
-    val in = MemoryStream[(Long, String)]
-    // the production wiring: admitBatch as a foreachBatch body behind a
-    // real checkpoint — foreachBatch serializes ticks and replays only
-    // uncommitted batches after a restart
-    def start() = in.toDS().toDF("doc_id", "text").writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                       id: Long) =>
-        IncrementalDedup.admitBatch(batch, "doc_id", "text",
-          corpusDir, indexDir, maxDist = 3, batchId = id); ()
-      }
-      .option("checkpointLocation", ckpt).start()
-
-    val q1 = start()
-    in.addData((1L, aText), (2L, bText)) // batch: both admitted
-    q1.processAllAvailable()
-    in.addData((3L, aText), (4L, cText)) // 3 dups indexed 1; 4 admitted
-    q1.processAllAvailable()
-    q1.stop()
-    // restart FROM THE CHECKPOINT: the committed batches must not replay
-    val q2 = start()
-    in.addData((5L, bText), (6L, dText)) // 5 dups PRE-restart doc 2; 6 admitted
-    q2.processAllAvailable()
-    q2.stop()
-    val corpus = spark.read.parquet(corpusDir)
-      .select("doc_id").as[Long].collect().toSet
-    assert(corpus == Set(1L, 2L, 4L, 6L),
-      s"admitted set wrong after 3 ticks + restart: $corpus")
-    val index = spark.read.parquet(indexDir).select("id").as[Long].collect().toSet
-    assert(index == corpus, "index must track exactly the admitted docs")
-    // replay safety beyond the ledger: if a FAILED (uncommitted) batch is
-    // re-delivered by foreachBatch, every row's signature is already in
-    // the index at distance 0, so re-admission drops it — the dedup
-    // semantics themselves make the tick idempotent
-    val replay = IncrementalDedup.admitBatch(
-      Seq((1L, aText), (2L, bText)).toDF("doc_id", "text"),
-      "doc_id", "text", corpusDir, indexDir, maxDist = 3, batchId = 99L)
-    assert(replay == ((0L, 0L, 2L)), s"replayed batch must admit nothing: $replay")
-    assert(spark.read.parquet(corpusDir).count() == 4,
-      "replay must not append to the corpus")
   }
 
   test("incremental-ANN streaming e2e: checkpoint restart, nothing re-admitted") {
@@ -1348,50 +1275,6 @@ class ExtOpsSpec extends AnyFunSuite {
     assert(replay == ((0L, 0L, 2L)), s"replayed batch must admit nothing: $replay")
     assert(spark.read.parquet(indexDir).count() == 4,
       "replay must not append to the index")
-  }
-
-  test("incremental-dedup maintenance: compaction bounds files across 6 ticks") {
-    import spark.implicits._
-    import graft.ext.IncrementalDedup
-    val root = java.nio.file.Files.createTempDirectory("graft_incdedup_maint").toString
-    val (corpusDir, indexDir) = (s"$root/corpus", s"$root/index")
-    val rnd = new scala.util.Random(11)
-    val vocabPool = (0 until 400).map(i => s"word${i}x$i")
-    def text(): String =
-      rnd.shuffle(vocabPool).take(12).mkString(" ")
-    val firstText = text()
-    val texts = firstText +: (1 until 12).map(_ => text())
-    // 6 ticks x 2 unique docs; compact every 2nd tick INSIDE the
-    // serialized window, exactly as a foreachBatch body would
-    (0 until 6).foreach { t =>
-      val batch = Seq((t * 10L, texts(2 * t)), (t * 10L + 1, texts(2 * t + 1)))
-        .toDF("doc_id", "text")
-      IncrementalDedup.admitBatch(batch, "doc_id", "text",
-        corpusDir, indexDir, maxDist = 0, batchId = t.toLong)
-      // fold COMMITTED partitions only (the current tick keeps its own)
-      if (t % 2 == 1)
-        IncrementalDedup.maintain(spark, corpusDir, indexDir,
-          committedBelow = t.toLong)
-    }
-    // bounded: 6 ticks wrote 6 partitions each; the folds collapsed all
-    // committed ones into batch=-1, leaving it + the final tick's own
-    def partDirs(dir: String) = new java.io.File(dir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("batch="))
-      .map(_.getName).toSet
-    assert(partDirs(corpusDir) == Set("batch=-1", "batch=5"),
-      s"corpus partitions ${partDirs(corpusDir)}")
-    assert(partDirs(indexDir) == Set("batch=-1", "batch=5"),
-      s"index partitions ${partDirs(indexDir)}")
-    // content preserved: all 12 admitted, and the compacted index still
-    // drops a cross-batch duplicate
-    val corpus = spark.read.parquet(corpusDir)
-      .select("doc_id").as[Long].collect().toSet
-    assert(corpus.size == 12, s"corpus after compaction: $corpus")
-    val replay = IncrementalDedup.admitBatch(
-      Seq((99L, firstText)).toDF("doc_id", "text"),
-      "doc_id", "text", corpusDir, indexDir, maxDist = 0, batchId = 6L)
-    assert(replay == ((0L, 0L, 1L)),
-      s"folded index must still drop duplicates: $replay")
   }
 
   test("incremental-ANN maintenance: per-cell compaction keeps pruning layout") {
@@ -1615,7 +1498,7 @@ class ExtOpsSpec extends AnyFunSuite {
 
   test("incremental quality admission: frozen tables, restart, replay, batch parity") {
     import spark.implicits._
-    import graft.ext.{Corpus, IncrementalQuality, IngestLadder, Materialize}
+    import graft.ext.{Corpus, IngestLadder, Materialize}
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq = spark.sqlContext
     val root = java.nio.file.Files.createTempDirectory("graft_incqual").toString
@@ -1666,11 +1549,11 @@ class ExtOpsSpec extends AnyFunSuite {
       Seq(onTgt(5), offTgt(6), gibber(7), loopy(8)),
       Seq(onTgt(9), offTgt(10), weird(11), loopy(12)))
     def admit(b: org.apache.spark.sql.DataFrame, id: Long) =
-      IncrementalQuality.admitBatch(b, id, "doc_id", "text", corpusDir,
-        IngestLadder.frozenGates(weights, nBuckets = 64, thrMilli = -2000L,
-          lambda = Some(lam), dsirThrX10k = 0L, minWords = 5,
-          repetition = true, repTopBpMax = repTop, repDupBpMax = repDup,
-          lm = Some(lmTable), maxMeanSurprisalX10k = 120000L))
+      ladderTick(b, root, id, gates = IngestLadder.frozenGates(weights,
+        nBuckets = 64, thrMilli = -2000L,
+        lambda = Some(lam), dsirThrX10k = 0L, minWords = 5,
+        repetition = true, repTopBpMax = repTop, repDupBpMax = repDup,
+        lm = Some(lmTable), maxMeanSurprisalX10k = 120000L))
     val in = MemoryStream[(Long, String)]
     def start() = in.toDS().toDF("doc_id", "text").writeStream
       .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],

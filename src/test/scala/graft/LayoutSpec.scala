@@ -137,6 +137,101 @@ class LayoutSpec extends AnyFunSuite {
       "aborted compacted output must be cleaned up")
   }
 
+  /** A ladder root whose `postings` tree holds `batch=b` partitions of
+    * ten distinct ids each (b*10 until b*10+10, b = -1 for a prior
+    * fold). */
+  private def foldTree(parts: Seq[Int]): (String, String) = {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_foldcrash").toString
+    val tree = s"$root/postings"
+    parts.foreach { b =>
+      val lo = (b + 1) * 10L
+      (lo until lo + 10).toDF("id").write.parquet(s"$tree/batch=$b")
+    }
+    (root, tree)
+  }
+
+  private def ids(tree: String): Seq[Long] = {
+    import spark.implicits._
+    spark.read.parquet(tree).select("id").as[Long].collect().toSeq.sorted
+  }
+
+  private def hiddenDirs(tree: String): Seq[String] =
+    new java.io.File(tree).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("."))
+      .map(_.getName).toSeq
+
+  private def writeRecord(dir: String, sources: Seq[String]): Unit =
+    Files.write(java.nio.file.Paths.get(dir, Layout.FoldRecord),
+      sources.mkString("\n").getBytes("UTF-8"))
+
+  test("foldBatchPartitions: a crash mid-write or before the source " +
+      "deletes recovers with every row exactly once") {
+    import graft.ext.IncrementalDedup
+    // (a) mid-write: a prior fold holds batch=-1; the crashed fold's tmp
+    // has its source record and one part file, but no commit witness
+    val (rootA, treeA) = foldTree(Seq(-1, 0, 1, 2))
+    spark.read.parquet(s"$treeA/batch=0").write
+      .parquet(s"$treeA/.apply-tmp-batch=-1")
+    new java.io.File(s"$treeA/.apply-tmp-batch=-1/_SUCCESS").delete()
+    writeRecord(s"$treeA/.apply-tmp-batch=-1",
+      Seq("batch=0", "batch=1"))
+    IncrementalDedup.recoverLadderEntry(spark, rootA)
+    assert(ids(treeA) == (0L until 40L), "recovery must drop the partial fold")
+    assert(hiddenDirs(treeA).isEmpty, s"hidden: ${hiddenDirs(treeA)}")
+    assert(Layout.foldBatchPartitions(spark, treeA, 2L) == 3)
+    assert(ids(treeA) == (0L until 40L), "refold must keep every row once")
+    // (a') a first-ever fold whose write finished (the committer's
+    // _SUCCESS is there) but whose witness and rename were lost: the
+    // tmp is promoted, so its record must already name the sources
+    val (rootP, treeP) = foldTree(Seq(0, 1))
+    spark.read.parquet(s"$treeP/batch=0", s"$treeP/batch=1").write
+      .parquet(s"$treeP/.apply-tmp-batch=-1")
+    writeRecord(s"$treeP/.apply-tmp-batch=-1", Seq("batch=0", "batch=1"))
+    IncrementalDedup.recoverLadderEntry(spark, rootP)
+    assert(ids(treeP) == (10L until 30L), "promoted fold: every row once")
+    assert(Layout.batchValues(spark, treeP) == Seq(-1L))
+    // (b) after the swap, before the source deletes: the new batch=-1
+    // and its still-present sources both hold rows 10..29. Healed by
+    // the entry the containment gate runs before its probe.
+    val (_, treeB) = foldTree(Seq(0, 1, 2))
+    spark.read.parquet(s"$treeB/batch=0", s"$treeB/batch=1").write
+      .parquet(s"$treeB/batch=-1")
+    Files.createFile(java.nio.file.Paths.get(s"$treeB/batch=-1/_graft_commit"))
+    writeRecord(s"$treeB/batch=-1", Seq("batch=0", "batch=1"))
+    Layout.recoverFold(spark, treeB)
+    assert(ids(treeB) == (10L until 40L), "recovery must finish the deletes")
+    assert(Layout.batchValues(spark, treeB) == Seq(-1L, 2L))
+    assert(!new java.io.File(s"$treeB/batch=-1/${Layout.FoldRecord}").exists)
+    assert(Layout.foldBatchPartitions(spark, treeB, 3L) == 2)
+    assert(ids(treeB) == (10L until 40L), "refold must keep every row once")
+    // a fold that runs to the end leaves no record and no hidden dir
+    Seq(treeA, treeP, treeB).foreach { t =>
+      assert(hiddenDirs(t).isEmpty, s"$t hidden: ${hiddenDirs(t)}")
+      assert(!new java.io.File(s"$t/batch=-1/${Layout.FoldRecord}").exists)
+    }
+  }
+
+  test("foldBatchPartitions: a tree left by the rename-aside fold's crash " +
+      "after one .fold-old rename recovers every row") {
+    import graft.ext.IncrementalDedup
+    // that fold wrote its output to .fold-<uuid>, then renamed each
+    // source aside in name order — batch=-1 first — then the output
+    // into batch=-1. Crash after the first rename: batch=-1's rows
+    // live only in the aside dir.
+    val (root, tree) = foldTree(Seq(-1, 0, 1))
+    spark.read.parquet(s"$tree/batch=-1", s"$tree/batch=0",
+      s"$tree/batch=1").write
+      .parquet(s"$tree/.fold-${java.util.UUID.randomUUID()}")
+    Files.move(java.nio.file.Paths.get(tree, "batch=-1"),
+      java.nio.file.Paths.get(tree,
+        s".fold-old-batch=-1-${java.util.UUID.randomUUID()}"))
+    IncrementalDedup.recoverLadderEntry(spark, root)
+    Layout.foldBatchPartitions(spark, tree, 2L)
+    assert(ids(tree) == (0L until 30L), s"rows after recovery: ${ids(tree)}")
+    assert(hiddenDirs(tree).isEmpty, s"hidden: ${hiddenDirs(tree)}")
+  }
+
   test("IVF layout: a probe query reads only the probed cell directories") {
     import graft.ext.Similarity
     import org.apache.spark.sql.functions._
