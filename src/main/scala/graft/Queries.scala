@@ -117,24 +117,21 @@ object Queries
     * superseded route every round cost 13% of the bench wall and added
     * nothing a sf0.01 hash row doesn't already prove.
     *
-    * The three ladder COMPOSITION tests (`q_admission_ladder`,
-    * `q_ingest_ladder`, `q_reladder`) are side-effectful by design —
-    * two full ingest ticks each, writing 5–6 parquet subtrees per tick
-    * to a temp root, so warm ≈ cold and the timed number measures
-    * parquet-commit I/O, not a plan (the r15 verdict's
-    * `q_admission_ladder` finding: 7.9 s cold / 7.1 s warm, the bench's
-    * slowest row, all of it composition-test I/O). Their per-tick cost
-    * is measured where it means something: the `admission_ladder_tick`
-    * and `ingest_ladder_tick` rows of `BENCH_sf1eq.json`, against real
-    * persisted indexes at two scales.
+    * The ten ladder and quota COMPOSITION tests are side-effectful by
+    * design — two or more full ingest ticks each, writing parquet
+    * subtrees to a temp root while the DataFrame is built, so warm ≈
+    * cold and the timed number measures parquet-commit I/O, not a plan
+    * (the r15 verdict: `q_admission_ladder` 7.9 s cold / 7.1 s warm,
+    * the bench's slowest row); the registered plan is only the verdict
+    * read-back, invisible to the plan audit. Their per-tick cost is
+    * recorded in the `admission_ladder_tick`, `ingest_ladder_tick` and
+    * `domain_quota_tick` rows of `BENCH_sf1eq.json`, against real
+    * persisted indexes at two scales (measured by
+    * `tools/Sf1EqBench.scala` at c0e2220, since removed).
     */
   val slowTier: Set[String] = Set("dedup_substr_exact_sa",
     "q_admission_ladder", "q_ladder_bloom", "q_ingest_ladder",
     "q_reladder", "q_reladder_apply", "q_reladder_refund",
     "q_reladder_refund_lag", "q_line_rung",
-    // side-effectful two-tick composition tests (temp-root parquet
-    // writes dominate their wall; the registered plan is just the
-    // verdict read-back, invisible to the plan audit) — per-tick cost
-    // is measured by BENCH_sf1eq.json's domain_quota_tick row
     "q_domain_quota", "q_domain_quota_psl")
 }

@@ -61,26 +61,14 @@ trait CdcFormat {
   def normalize(df: DataFrame, passthrough: Seq[String] = Nil): DataFrame =
     extract(parse(df), passthrough)
 
-  /** Normalize with a dead-letter split: records whose envelope fails to
-    * parse or lacks routing identity (table / pk / version) come back in
-    * the second frame with their RAW value intact, instead of flowing on
-    * as null-keyed rows that would corrupt compaction ("latest null per
-    * null"). Both frames derive from one parse pass; downstream writes
-    * the DLQ frame wherever replayable storage lives. Dialect-level
-    * drops (e.g. DMS control records) are filtering, not dead letters —
-    * they are absent from both frames.
-    *
-    * @return (normalized good rows, dead letters: value + passthrough)
-    */
-  def normalizeWithDlq(df: DataFrame,
-                       passthrough: Seq[String] = Nil): (DataFrame, DataFrame) =
-    splitFlagged(normalizeFlagged(df, passthrough), passthrough)
-
-  /** One-pass variant of the DLQ split: the normalized frame with a
-    * `__bad` flag (plus the raw value), NOT yet split — callers that
+  /** Normalize for a dead-letter split: the normalized frame plus the
+    * raw value and a `__bad` flag on records whose envelope fails to
+    * parse or lacks routing identity (table / pk / version), which would
+    * otherwise corrupt compaction ("latest null per null"). Callers that
     * consume both halves (the pipeline) persist THIS frame once, so the
     * envelope parse — the dominant cost at scale — runs once, not once
-    * per half. */
+    * per half. Dialect-level drops (e.g. DMS control records) are
+    * filtering, not dead letters: they are absent from both halves. */
   def normalizeFlagged(df: DataFrame, passthrough: Seq[String] = Nil): DataFrame = {
     val keepValue = if (df.columns.contains("value")) Seq("value") else Nil
     extract(parse(df), passthrough ++ keepValue)
@@ -88,7 +76,7 @@ trait CdcFormat {
         col("tb_name").isNull || col("pk").isNull || col("ts_ms").isNull)
   }
 
-  /** Split a [[normalizeFlagged]] frame into (good, dlq). */
+  /** Split a [[normalizeFlagged]] frame into (good, dlq: raw value + passthrough + reason). */
   def splitFlagged(flagged: DataFrame,
                    passthrough: Seq[String] = Nil): (DataFrame, DataFrame) = {
     val keepValue = if (flagged.columns.contains("value")) Seq("value") else Nil
@@ -98,9 +86,6 @@ trait CdcFormat {
       .withColumn("dlq_reason", lit(s"unroutable_${name}_envelope"))
     (good, dlq)
   }
-
-  def isDelete(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    c === lit(deleteMarker)
 }
 
 /** MongoDB/DocumentDB change-stream envelope.

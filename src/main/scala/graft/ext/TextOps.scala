@@ -50,12 +50,9 @@ object TextOps {
     size(filter(tokens(lower(text)), t => t.isin(Stopwords.map(lit): _*)))
 
   /** Stopword ratio in basis points (0..10000), integer: exact in every
-    * engine, no float-rounding midpoint hazards. */
-  def stopwordRatioBp(text: Column): Column =
-    stopwordRatioBpFromCounts(nTokens(text), nStopwords(text))
-
-  /** Same, from precomputed count columns (bind counts as attributes in a
-    * projection first so the token regexes run once per row). */
+    * engine, no float-rounding midpoint hazards. Takes precomputed count
+    * columns (bind counts as attributes in a projection first so the
+    * token regexes run once per row). */
   def stopwordRatioBpFromCounts(nTokens: Column, nStop: Column): Column =
     when(nTokens > 0, floor((nStop * 10000) / nTokens).cast("long")).otherwise(lit(0L))
 

@@ -16,10 +16,10 @@ import org.apache.spark.sql.types.StructType
   *   - each batch's inferred schema is MERGED into the cache (new columns
   *     widen the schema; conflicting types resolve by Spark's merge), so
   *     schema drift grows the relation instead of breaking it;
-  *   - `sampleRows` caps the inference scan: at 100 TB you infer from a
-  *     bounded sample, not the world (drift still folds in over batches).
+  *   - inference reads at most 100 000 payload rows per batch and table:
+  *     a bounded sample, not the world (drift still folds in over batches).
   */
-final class SchemaInference(sampleRows: Int = 100000) {
+final class SchemaInference {
   private val cache = TrieMap.empty[(String, String), StructType]
 
   def inferredSchema(db: String, tb: String): Option[StructType] =
@@ -34,7 +34,7 @@ final class SchemaInference(sampleRows: Int = 100000) {
     val spark = slice.sparkSession
     import spark.implicits._
     val batchSchema = spark.read
-      .json(slice.select(col(payloadCol)).as[String].limit(sampleRows))
+      .json(slice.select(col(payloadCol)).as[String].limit(100000))
       .schema
     val schema = cache.updateWith((db, tb)) {
       case Some(prev) => Some(mergeSchemas(prev, batchSchema))

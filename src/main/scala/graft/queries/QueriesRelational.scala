@@ -246,14 +246,14 @@ private[graft] trait QueriesRelational { this: Queries.type =>
     * driver-side schema cache — the production behavior being measured.
     * Keyed by the data dir so different SFs never share an entry.
     */
-  private val schemaCache = new graft.pipeline.SchemaInference(sampleRows = 5000)
+  private val schemaCache = new graft.pipeline.SchemaInference()
 
   val qSchemaInference = Q("q_schema_inference",
     (s, dir) => {
       val ev = t(s, dir, "events")
       // DMS-style runtime payload inference (reference
       // src/glue_dms_redshift_cdc.py:161) through the PRODUCTION path:
-      // per-table cached and sampleRows-capped, instead of re-inferring
+      // per-table cached and sample-capped, instead of re-inferring
       // over the full column on every run (the round-2 bench regression).
       val parsed = schemaCache.explodePayload(ev, db = "events", tb = dir,
         payloadCol = "props", keep = Seq.empty)

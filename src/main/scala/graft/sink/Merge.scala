@@ -58,42 +58,6 @@ object Merge {
       keyValues.getOrElse(keysOf(updates, key)), updates.schema(key).dataType))
     survivors.unionByName(updates.filter(col(opCol) =!= deleteMarker).drop(opCol))
   }
-
-  /** SCD2 (history-preserving) batch apply: instead of overwriting, a
-    * new version CLOSES the key's open row (valid_to := new version's
-    * ts) and appends itself as the new open row; a delete just closes.
-    * The target accumulates full change history; the current state is
-    * `valid_to IS NULL`.
-    *
-    * The compacted batch broadcasts into a join against the target —
-    * open rows of touched keys get their `valid_to` stamped, everything
-    * else passes through untouched, and new versions append. The 100 TB
-    * history is never shuffled.
-    *
-    * @param target  history table with `valid_from_ms`/`valid_to_ms`
-    *                (nullable) columns; pass an empty frame (with
-    *                schema) for a cold start
-    * @param updates compacted batch: one row per key + `op` + `tsCol`
-    *                (the new version's event time, ms)
-    */
-  def applyBatchScd2(target: DataFrame, updates: DataFrame, keys: Seq[String],
-                     opCol: String, deleteMarker: String,
-                     tsCol: String): DataFrame = {
-    val newVersion = broadcast(
-      updates.select((keys.map(col) :+ col(tsCol).as("__new_ts")): _*))
-    // stamp valid_to on the open row of every touched key; history rows
-    // (valid_to already set) and untouched keys flow through unchanged
-    val closed = target.join(newVersion, keys, "left")
-      .withColumn("valid_to_ms",
-        when(col("valid_to_ms").isNull && col("__new_ts").isNotNull,
-          col("__new_ts")).otherwise(col("valid_to_ms")))
-      .drop("__new_ts")
-    val opens = updates.filter(col(opCol) =!= deleteMarker)
-      .withColumn("valid_from_ms", col(tsCol))
-      .withColumn("valid_to_ms", lit(null).cast("long"))
-      .select(closed.columns.map(col).toSeq: _*)
-    closed.unionByName(opens)
-  }
 }
 
 /** Dialect-abstracted merge SQL generation for warehouse sinks.

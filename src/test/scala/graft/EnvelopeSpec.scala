@@ -84,7 +84,8 @@ class EnvelopeSpec extends AnyFunSuite {
     val mangled = good.dropRight(8)
     val noTable = """{"after":"{\"id\":2}","source":{"db":"d","ts_ms":6},"op":"u","ts_ms":6}"""
     val df = Seq((good, 1L), (mangled, 2L), (noTable, 3L)).toDF("value", "off")
-    val (ok, dlq) = graft.envelope.PgCdc.normalizeWithDlq(df, passthrough = Seq("off"))
+    val (ok, dlq) = PgCdc.splitFlagged(
+      PgCdc.normalizeFlagged(df, passthrough = Seq("off")), passthrough = Seq("off"))
     assert(ok.select("pk").as[String].collect().toSeq == Seq("1"))
     assert(ok.columns.toSeq.contains("off") && !ok.columns.contains("value"))
     val dead = dlq.select("value", "off", "dlq_reason")

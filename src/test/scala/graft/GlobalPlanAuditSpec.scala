@@ -116,6 +116,18 @@ class GlobalPlanAuditSpec extends AnyFunSuite {
     "q_cusum" -> "cusum: the window's child is the per-period count aggregate — cardinality = distinct periods (time-bounded), never event rows; the prefix-sum/running-min recursion is over that bounded series by construction"
   )
 
+  /** Side-effectful composition queries, left out of the audit. Each
+    * runs two or more ingest ticks while its DataFrame is being built
+    * (parquet subtrees written to a temp root), and its registered plan
+    * is only the verdict read-back, which has no operator to audit (see
+    * [[Queries.slowTier]]). Building them took 289 s of the audit's
+    * 388 s (local[8], 4 vCPU), none of it plan work. */
+  private val tickComposites: Set[String] = Set(
+    "q_admission_ladder", "q_ladder_bloom", "q_ingest_ladder",
+    "q_reladder", "q_reladder_apply", "q_reladder_refund",
+    "q_reladder_refund_lag", "q_line_rung",
+    "q_domain_quota", "q_domain_quota_psl")
+
   /** Pre-order walk of the physical tree, descending into AQE wrappers
     * (leaf nodes holding the real plan) and subquery plans. */
   private def walk(p: SparkPlan)(f: SparkPlan => Unit): Unit = {
@@ -129,7 +141,7 @@ class GlobalPlanAuditSpec extends AnyFunSuite {
 
   test("all declared queries: no CartesianProduct; SinglePartition exchanges bounded; no ntile / unkeyed / value-buffering-percentile funnels") {
     val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
-    for (q <- Queries.all) {
+    for (q <- Queries.all if !tickComposites(q.name)) {
       try {
         val plan = q.fn(spark, sf).queryExecution.executedPlan
         walk(plan) {

@@ -23,6 +23,33 @@ class IngestLadderSpec extends AnyFunSuite {
     "badword" -> ((c: DataFrame) => c.filter(!col("raw").contains("zzz"))
       .select(col("id")))
 
+  /** English-ish synthetic corpus: 60 tokens over a 2k hash
+    * vocabulary, every 6th token a real stopword (hash-picked from 16
+    * members of `TextOps.Stopwords`, so every stopword slot counts
+    * toward the language and quality ratios), `id % 20 == 19` a
+    * near-copy of its predecessor with the head token mutated, and
+    * `id % 17 == 13` punctuation gibberish that the language and
+    * quality gates both reject.
+    */
+  private def synthDocsEn(n: Long): DataFrame = {
+    val stops = Seq("the", "and", "of", "to", "in", "a", "is", "that",
+      "it", "for", "on", "or", "with", "as", "at", "by")
+    val stopArr = array(stops.map(lit): _*)
+    val seed = when(col("id") % 20 === 19, col("id") - 1).otherwise(col("id"))
+    spark.range(n).select(
+      col("id").as("doc_id"),
+      concat_ws(" ", transform(sequence(lit(0), lit(59)), i => {
+        val h = pmod(hash(seed, i), lit(2000))
+        val word = when(i % 6 === 0,
+            element_at(stopArr, pmod(hash(seed, i), lit(16)).cast("int") + 1))
+          .otherwise(concat(lit("w"), h))
+        val tok = when(col("id") % 17 === 13, concat(lit("#$"), h))
+          .otherwise(word)
+        when(col("id") % 20 === 19 && i === 0,
+          concat(lit("mut"), col("id"))).otherwise(tok)
+      })).as("text"))
+  }
+
   private def fixture = {
     import spark.implicits._
     Seq(
@@ -343,13 +370,13 @@ class IngestLadderSpec extends AnyFunSuite {
     import spark.implicits._
     val root = java.nio.file.Files
       .createTempDirectory("graft_ingest5").toString
-    // the Sf1EqBench admission fixture shape: a three-sentence tail so
-    // the C4 line rules KEEP rather than vacuously empty every page
-    val docs = graft.tools.Sf1EqBench.synthDocsEn(spark, 120L)
+    // a three-sentence tail so the C4 line rules KEEP rather than
+    // vacuously empty every page
+    val docs = synthDocsEn(120L)
       .select(col("doc_id"), concat(col("text"),
         lit(". first tail period. second tail period. third one."))
         .as("text"))
-    // frozen tables, the Sf1EqBench admission shapes
+    // frozen tables over 64 hash buckets
     val weights = spark.range(64).select(col("id").as("bucket"),
       (pmod(hash(col("id")), lit(21)) - 10).cast("long").as("w"))
     val lam = Corpus.dsirLambda(

@@ -123,33 +123,4 @@ class MergeSpec extends AnyFunSuite {
     assert(merged.select("pk").as[String].collect().toSet ==
       (5 until 10).map(i => s"k${i * 20000}").toSet)
   }
-
-  test("SCD2 apply: versions close predecessors, deletes close without opening") {
-    import org.apache.spark.sql.functions.col
-    val schema = Seq.empty[(String, String, Long, Option[Long])]
-      .toDF("pk", "v", "valid_from_ms", "valid_to_ms")
-    def batch(evs: Ev*) = Compaction.latestPerKey(
-      evs.toList.toDF(), Seq("pk"), Seq("ts", "off"))
-    // b1: create k1 and k2
-    val s1 = Merge.applyBatchScd2(schema,
-      batch(Ev("k1", 100, 0, "u", "a1"), Ev("k2", 100, 1, "u", "b1")),
-      Seq("pk"), "op", "d", "ts")
-    // b2: new version of k1 (k2 untouched)
-    val s2 = Merge.applyBatchScd2(s1,
-      batch(Ev("k1", 200, 2, "u", "a2")), Seq("pk"), "op", "d", "ts")
-    // b3: delete k1
-    val s3 = Merge.applyBatchScd2(s2,
-      batch(Ev("k1", 300, 3, "d", "")), Seq("pk"), "op", "d", "ts")
-
-    val hist = s3.select("pk", "v", "valid_from_ms", "valid_to_ms")
-      .as[(String, String, Long, Option[Long])].collect().toSet
-    assert(hist == Set(
-      ("k1", "a1", 100L, Some(200L)), // closed by v200
-      ("k1", "a2", 200L, Some(300L)), // closed by the delete
-      ("k2", "b1", 100L, None)))      // untouched, still current
-    // current state = open rows only
-    val current = s3.filter(col("valid_to_ms").isNull)
-      .select("pk", "v").as[(String, String)].collect().toMap
-    assert(current == Map("k2" -> "b1"))
-  }
 }

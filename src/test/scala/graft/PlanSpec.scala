@@ -350,6 +350,60 @@ class PlanSpec extends AnyFunSuite {
     // stays a builtin-expression projection, pinned by the shape above)
   }
 
+  test("Materialize.spread decides from the plan: an aggregated input " +
+      "passes through without a job; a one-file scan and a loaded cache " +
+      "are spread, also without a job") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.ext.Materialize
+    val sc = spark.sparkContext
+    val group = "graft-spread-probe"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    /** `Materialize.spread(df)` and the number of jobs it started. */
+    def spreadCounted(df: org.apache.spark.sql.DataFrame) = {
+      sc.setJobGroup(group, "spread probe")
+      try {
+        val out = Materialize.spread(df)
+        org.apache.spark.TestListenerBus.drain(sc)
+        (out, jobs.getAndSet(0))
+      } finally sc.clearJobGroup()
+    }
+    def roundRobin(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.optimizedPlan.toString.contains("Repartition")
+    val dir = java.nio.file.Files.createTempDirectory("graft_spread").toString
+    spark.range(0, 1000, 1, 4).coalesce(1).write.parquet(s"$dir/one")
+    val agg = spark.range(0, 1000, 1, 4)
+      .groupBy((col("id") % 7).as("k")).count()
+    sc.addSparkListener(listener)
+    try {
+      // above an exchange the partition count exists only after AQE
+      // runs the upstream stage: the frame comes back as it went in
+      val (aggOut, aggJobs) = spreadCounted(agg)
+      assert(aggJobs == 0, s"spreading an aggregate ran $aggJobs job(s)")
+      assert(aggOut eq agg)
+      // a one-file scan is one split: spread, counted from file metadata
+      val (scanOut, scanJobs) = spreadCounted(
+        spark.read.parquet(s"$dir/one").filter(col("id") > 3))
+      assert(scanJobs == 0 && roundRobin(scanOut))
+      // a materialized one-partition cache of the aggregate is counted
+      // from its cached blocks
+      val cached = agg.coalesce(1).persist()
+      cached.count()
+      val (cacheOut, cacheJobs) = spreadCounted(cached.filter(col("k") > 0))
+      assert(cacheJobs == 0 && roundRobin(cacheOut))
+      cached.unpersist(true)
+      // enough splits already: passes through
+      val wide = spark.range(0, 100, 1, 8).select(col("id") * 2)
+      assert(spreadCounted(wide) == ((wide, 0)))
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("q_corpus_diff: both snapshots project to digests BELOW the join — text never shuffles") {
     val p = planOf("q_corpus_diff")
     val textAttr = "(?<![a-zA-Z0-9_])text#\\d".r

@@ -93,7 +93,9 @@ class RunIngestSpec extends AnyFunSuite {
     assert(stateBefore.linesIterator.nonEmpty)
 
     // RESTART from the checkpoint; batch 4: two more d.com docs — the
-    // REFUNDED count (1) admits exactly one of them. Stderr captured:
+    // REFUNDED count (1) admits exactly one of them — and a novel text
+    // re-crawling doc 21's page, which the url rung drops against the
+    // stored url index (before the quota counts it). Stderr captured:
     // the maintenance line must surface the silent regime decisions
     // (reconcile mode, near-sidecar broadcast skip).
     val errBuf = new java.io.ByteArrayOutputStream()
@@ -108,7 +110,8 @@ class RunIngestSpec extends AnyFunSuite {
     try {
       val q2 = graft.tools.RunIngest.start(spark, cfg)
       feed(Seq((41L, "r1 r2 r3 r4 r5 r6 r7 r8", "http://d.com/41"),
-        (42L, "s1 s2 s3 s4 s5 s6 s7 s8", "http://d.com/42")))
+        (42L, "s1 s2 s3 s4 s5 s6 s7 s8", "http://d.com/42"),
+        (43L, "v1 v2 v3 v4 v5 v6 v7 v8", "http://e.com/21")))
       drain(q2)
       // batch 5: filler + the id-5 window — incremental reconcile from
       // the persisted watermark finds nothing; history grows
@@ -136,7 +139,8 @@ class RunIngestSpec extends AnyFunSuite {
     assert(verdicts == Map(
       1L -> None, 2L -> Some("near"), 11L -> Some("near"),
       21L -> None, 31L -> None,
-      41L -> None, 42L -> Some("domain"), 51L -> None),
+      41L -> None, 42L -> Some("domain"), 43L -> Some("url"),
+      51L -> None),
       s"got $verdicts")
     val corpus = spark.read.parquet(s"$root/corpus")
       .select(col("doc_id")).as[Long].collect().toSet
